@@ -7,6 +7,13 @@ must be bit-reproducible).  ~16 bits/key ⇒ a 10^10-URL frontier is
 ~20 GB of state across shards; shards are sized so one shard's array
 fits comfortably in an executor core's memory and is processed by a
 single ``applyInPandas`` group (see seen.py).
+
+Blob layout (``to_bytes``): an int64 header ``(±n_buckets, max_kicks,
+count, overflow)``, then the dense uint16 bucket array (+n_buckets,
+the original fixed-size layout) or, while smaller, the occupied slots
+only (-n_buckets): uint32 flat slot indexes then their uint16
+fingerprints, 6 bytes per key.  State bytes scale with occupied slots
+and never exceed the dense size; ``from_bytes`` reads both layouts.
 """
 
 from __future__ import annotations
@@ -129,19 +136,26 @@ class CuckooShard:
     # -- serialization (checkpoint blob) --------------------------------------
 
     def to_bytes(self) -> bytes:
-        header = np.array(
-            [self.n_buckets, self.max_kicks, self.count, self.overflow],
-            dtype=np.int64,
-        )
-        return header.tobytes() + self.buckets.tobytes()
+        flat = self.buckets.ravel()
+        slots = np.flatnonzero(flat)
+        dense = 6 * len(slots) >= flat.nbytes
+        header = np.array([self.n_buckets if dense else -self.n_buckets,
+                           self.max_kicks, self.count, self.overflow],
+                          dtype=np.int64).tobytes()
+        if dense:
+            return header + self.buckets.tobytes()
+        return header + slots.astype(np.uint32).tobytes() + flat[slots].tobytes()
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CuckooShard":
         header = np.frombuffer(blob[:32], dtype=np.int64)
         n_buckets, max_kicks, count, overflow = (int(x) for x in header)
-        buckets = (
-            np.frombuffer(blob[32:], dtype=np.uint16)
-            .reshape(n_buckets, 4)
-            .copy()
-        )
-        return cls(n_buckets, max_kicks, buckets, count, overflow)
+        flat = np.zeros(abs(n_buckets) * 4, dtype=np.uint16)
+        if n_buckets > 0:
+            flat[:] = np.frombuffer(blob, np.uint16, offset=32)
+        else:
+            n = (len(blob) - 32) // 6
+            flat[np.frombuffer(blob, np.uint32, n, 32)] = (
+                np.frombuffer(blob, np.uint16, n, 32 + 4 * n))
+        return cls(abs(n_buckets), max_kicks, flat.reshape(-1, 4), count,
+                   overflow)

@@ -417,17 +417,25 @@ def run_crawl(
 
         allowed, blocked = robots_filter(gated, robots)
         prev_seen = seen_state
+        # rows an earlier round deferred past its horizon were admitted
+        # (and entered the seen state) then: they skip the gate now
+        fresh = F.col("seq") >= round_no * config.seq_block
+        carried = qstats.lo < round_no * config.seq_block
         admitted, seen_state = filter_unseen(
-            allowed, seen_state, mode=config.seen_mode,
-            num_shards=config.num_shards,
+            allowed.filter(fresh) if carried else allowed, seen_state,
+            mode=config.seen_mode, num_shards=config.num_shards,
         )
+        if carried:
+            admitted = admitted.unionByName(
+                allowed.filter(~fresh).select(_CAND_COLS))
         if store is None and seen_state is not None \
                 and config.seen_mode != "off":
             # same round-boundary plan truncation as next_queue below;
             # the filter state is tiny (shard blobs / fingerprints)
             seen_state = _local_ckpt(seen_state)
         scheduled, deferred, new_offsets = schedule(
-            admitted, politeness, offsets, round_start=0.0,
+            admitted, politeness, offsets,
+            round_start=round_no * (config.horizon or 0.0),
             horizon=config.horizon,
             seq_bounds=(int(qstats.lo), int(qstats.hi)),
             host_priorities=host_priorities,

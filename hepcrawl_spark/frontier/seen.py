@@ -1,6 +1,6 @@
 """URL-seen membership (F1) — the dedup gate in front of the scheduler.
 
-Three modes:
+Four modes:
 
 - ``off``    — reference parity: the reference explicitly disables
   duplicate filtering (``DUPEFILTER_CLASS = BaseDupeFilter``,
@@ -17,12 +17,23 @@ Three modes:
   a hand-rolled hash anti-join whose build side is the persistent
   filter.  Output is a union of admitted rows and refreshed shard blobs
   (split by ``row_kind`` afterwards) — one shuffle, state rows tiny.
+- ``bloom``  — the same probe over Bloom bit arrays (bloom.py).
+
+Both sharded modes run one vectorized probe per shard
+(``_sharded_probe``): candidates sorted by ``seq`` are probed in one
+``contains_many`` against the pre-batch filter, a numpy mask keeps the
+first occurrence of each unseen fingerprint, and the kept keys are
+inserted in ``seq`` order.  Shards without candidates pass their blob
+through undecoded.  A cuckoo blob holds only its occupied slots while
+that is smaller (cuckoo.py), so state bytes scale with occupied slots;
+an exhausted cuckoo eviction walk fails the round (``_cuckoo_insert``).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import Callable, Optional, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -87,6 +98,64 @@ def _dedup_within_batch(candidates: DataFrame) -> DataFrame:
     )
 
 
+def _cuckoo_insert(shard: CuckooShard, shard_id: int, keys: np.ndarray) -> None:
+    """Insert ``keys`` in order; an exhausted eviction walk fails loudly
+    (the homeless key would otherwise be a silent false negative)."""
+    for h in keys.tolist():
+        if not shard.insert(h):
+            raise OverflowError(
+                f"cuckoo seen shard {shard_id} overflowed: {shard.count} keys, "
+                f"load {shard.count / (shard.n_buckets * 4):.3f}, overflow "
+                f"{shard.overflow}; raise num_shards or shard_buckets")
+
+
+def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
+                   num_shards: int, new_shard: Callable, load_shard: Callable,
+                   insert: Callable) -> Tuple[DataFrame, DataFrame]:
+    """(admitted, new_state) through one cogroup probe per shard; a
+    shard object needs ``contains_many`` and ``to_bytes``."""
+    if state is None:
+        state = empty_cuckoo_state(candidates.sparkSession)
+    with_shard = candidates.withColumn(
+        "shard", shard_of_host(F.col("url_host"), num_shards)
+    )
+    names = [n for n, _ in CANDIDATE_FIELDS]
+    fields = _UNION_SCHEMA.fieldNames()
+
+    def state_row(shard_id: int, blob) -> pd.DataFrame:
+        return pd.DataFrame([{**dict.fromkeys(fields), "row_kind": "state",
+                              "shard": shard_id, "blob": blob}],
+                            columns=fields)
+
+    def probe(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
+        shard_id = int(key[0])
+        blob = state_pdf["blob"].iloc[0] if len(state_pdf) else None
+        if not len(cand_pdf) and blob is not None:
+            return state_row(shard_id, blob)
+        shard = new_shard() if blob is None else load_shard(bytes(blob))
+        cand_pdf = cand_pdf.sort_values("seq", kind="mergesort")
+        hashes = cand_pdf["fingerprint"].to_numpy(dtype=np.int64)
+        # first occurrence (lowest seq) of each fingerprint the
+        # pre-batch filter has not seen
+        keep = np.zeros(len(hashes), dtype=bool)
+        keep[np.unique(hashes, return_index=True)[1]] = True
+        keep &= ~shard.contains_many(hashes)
+        insert(shard, shard_id, hashes[keep])
+        admitted = cand_pdf.loc[keep, names].assign(
+            row_kind="url", shard=shard_id, blob=None)
+        return pd.concat([admitted, state_row(shard_id, shard.to_bytes())],
+                         ignore_index=True)[fields]
+
+    unioned = with_shard.groupBy("shard").cogroup(
+        state.groupBy("shard")
+    ).applyInPandas(probe, _UNION_SCHEMA).persist()
+    admitted = unioned.filter(F.col("row_kind") == "url").select(*names)
+    new_state = unioned.filter(F.col("row_kind") == "state").select(
+        "shard", "blob"
+    )
+    return admitted, new_state
+
+
 def filter_unseen(
     candidates: DataFrame,
     state: DataFrame | None,
@@ -114,126 +183,33 @@ def filter_unseen(
         return admitted, new_state
 
     if mode == "cuckoo":
-        if state is None:
-            state = empty_cuckoo_state(spark)
-        with_shard = candidates.withColumn(
-            "shard", shard_of_host(F.col("url_host"), num_shards)
+        return _sharded_probe(
+            candidates, state, num_shards,
+            lambda: CuckooShard(n_buckets=shard_buckets),
+            CuckooShard.from_bytes, _cuckoo_insert,
         )
-
-        def probe_and_insert(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-            shard_id = int(key[0])
-            if len(state_pdf) and state_pdf["blob"].iloc[0] is not None:
-                shard = CuckooShard.from_bytes(bytes(state_pdf["blob"].iloc[0]))
-            else:
-                shard = CuckooShard(n_buckets=shard_buckets)
-            out_rows = []
-            if len(cand_pdf):
-                cand_pdf = cand_pdf.sort_values("seq", kind="mergesort")
-                pre_seen = shard.contains_many(
-                    cand_pdf["fingerprint"].to_numpy()
-                )
-                batch_seen: set[int] = set()
-                for (_, row), was_seen in zip(cand_pdf.iterrows(), pre_seen):
-                    h = int(row["fingerprint"])
-                    if was_seen or h in batch_seen:
-                        continue
-                    batch_seen.add(h)
-                    shard.insert(h)
-                    rec = {name: row[name] for name, _ in CANDIDATE_FIELDS}
-                    rec.update(row_kind="url", shard=shard_id, blob=None)
-                    out_rows.append(rec)
-            out_rows.append({
-                "row_kind": "state",
-                **{name: None for name, _ in CANDIDATE_FIELDS},
-                "shard": shard_id,
-                "blob": shard.to_bytes(),
-            })
-            return pd.DataFrame(out_rows, columns=_UNION_SCHEMA.fieldNames())
-
-        unioned = with_shard.groupBy("shard").cogroup(
-            state.groupBy("shard")
-        ).applyInPandas(probe_and_insert, _UNION_SCHEMA)
-        unioned = unioned.persist()
-        admitted = unioned.filter(F.col("row_kind") == "url").select(
-            *[n for n, _ in CANDIDATE_FIELDS]
-        )
-        new_state = unioned.filter(F.col("row_kind") == "state").select(
-            "shard", "blob"
-        )
-        return admitted, new_state
 
     if mode == "bloom":
-        # the OTHER membership backend the north rule names: same
-        # sharded cogroup probe as cuckoo, but the per-shard state is a
-        # Bloom bit array (bloom.BloomShard).  No false negatives —
-        # admitted ⊆ exact-admitted; a ~6e-4 false-positive rate drops
-        # that fraction of genuinely-new URLs, the standard Bloom trade
-        # (shards stay mergeable by bitwise OR, which cuckoo can't do).
-        # fail fast on the driver: BloomShard requires power-of-two
-        # m_bits (= shard_buckets * 16), but shard_buckets is shared
-        # with cuckoo mode where ANY count works — without this check
-        # a bad value only surfaces as an opaque executor task failure
-        # inside the cogroup UDF
+        # no false negatives (admitted ⊆ exact-admitted), a ~6e-4
+        # false-positive rate, shards mergeable by bitwise OR.  Check
+        # the power-of-two m_bits BloomShard needs on the driver, not as
+        # an opaque task failure in the UDF (shard_buckets is shared
+        # with cuckoo, where any count works)
         m_bits = shard_buckets * 16
-        # shard_buckets <= 0 gives m_bits & (m_bits - 1) == 0, so the
-        # power-of-two test alone would wave the degenerate value through
+        # (<= 0 would pass the power-of-two test alone)
         if shard_buckets <= 0 or m_bits & (m_bits - 1):
             raise ValueError(
                 f"bloom mode needs power-of-two shard_buckets*16 bits; "
                 f"got shard_buckets={shard_buckets} (m_bits={m_bits}). "
                 f"Use a power of two (the cuckoo-mode default works)."
             )
-        if state is None:
-            state = empty_cuckoo_state(spark)  # same (shard, blob) schema
-        with_shard = candidates.withColumn(
-            "shard", shard_of_host(F.col("url_host"), num_shards)
+        return _sharded_probe(
+            candidates, state, num_shards,
+            lambda: BloomShard(m_bits=m_bits, k=8),
+            BloomShard.from_bytes,
+            # int64 (possibly negative) — BloomShard remaps to uint64
+            lambda shard, shard_id, keys: shard.insert_many(keys),
         )
-
-        def bloom_probe(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-            import numpy as np
-
-            shard_id = int(key[0])
-            if len(state_pdf) and state_pdf["blob"].iloc[0] is not None:
-                shard = BloomShard.from_bytes(bytes(state_pdf["blob"].iloc[0]))
-            else:
-                shard = BloomShard(m_bits=shard_buckets * 16, k=8)
-            out_rows = []
-            if len(cand_pdf):
-                cand_pdf = cand_pdf.sort_values("seq", kind="mergesort")
-                hashes = cand_pdf["fingerprint"].to_numpy()
-                pre_seen = shard.contains_many(hashes)
-                batch_seen: set[int] = set()
-                admitted_hashes = []
-                for (_, row), was_seen in zip(cand_pdf.iterrows(), pre_seen):
-                    h = int(row["fingerprint"])
-                    if was_seen or h in batch_seen:
-                        continue
-                    batch_seen.add(h)
-                    admitted_hashes.append(h)
-                    rec = {name: row[name] for name, _ in CANDIDATE_FIELDS}
-                    rec.update(row_kind="url", shard=shard_id, blob=None)
-                    out_rows.append(rec)
-                # int64 (possibly negative) — BloomShard remaps to uint64
-                shard.insert_many(np.array(admitted_hashes, dtype=np.int64))
-            out_rows.append({
-                "row_kind": "state",
-                **{name: None for name, _ in CANDIDATE_FIELDS},
-                "shard": shard_id,
-                "blob": shard.to_bytes(),
-            })
-            return pd.DataFrame(out_rows, columns=_UNION_SCHEMA.fieldNames())
-
-        unioned = with_shard.groupBy("shard").cogroup(
-            state.groupBy("shard")
-        ).applyInPandas(bloom_probe, _UNION_SCHEMA)
-        unioned = unioned.persist()
-        admitted = unioned.filter(F.col("row_kind") == "url").select(
-            *[n for n, _ in CANDIDATE_FIELDS]
-        )
-        new_state = unioned.filter(F.col("row_kind") == "state").select(
-            "shard", "blob"
-        )
-        return admitted, new_state
 
     raise ValueError(f"unknown seen mode: {mode!r}")
 
@@ -271,7 +247,6 @@ def merge_seen_states(state_a: Optional[DataFrame],
     if mode != "bloom":
         raise ValueError(f"unsupported merge mode {mode!r}")
 
-    
     def _or_blobs(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame):
         blobs = list(a_pdf["blob"]) + list(b_pdf["blob"])
         if not blobs:

@@ -86,8 +86,9 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
 
     ``mode="exact"`` keeps the shard's fingerprint set (8 bytes/key —
     fine to ~10^8 frontier).  ``mode="cuckoo"`` keeps the same
-    serialized cuckoo shard the batch gate uses (~2 bytes/key, fixed
-    blob size): the 10^10 path, at the filter's false-positive cost.
+    serialized cuckoo shard the batch gate uses (6 bytes per occupied
+    slot, at most the dense ~2 bytes/slot array — see cuckoo.py): the
+    10^10 path, at the filter's false-positive cost.
     State volume per task is |frontier| / num_shards either way, and
     the only shuffle is the one groupBy.
 
