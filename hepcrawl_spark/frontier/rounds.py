@@ -12,12 +12,17 @@ Scrapy reactor draining its scheduler, resumable via JOBDIR):
 All state (queue, seen set, host offsets, records, lineage) lives in
 the RoundStore, so a killed job resumes from the last committed round
 bit-identically (test: tests/test_rounds.py).
+
+The queue-entry gates (``_entry_gates``) and everything after the
+fetch join (``_round_body``) are shared with the streaming crawl
+(``streaming.pipeline.stream_crawl_round``); the engines differ only
+in seen-gate placement, the ``schedule`` call and where state lands.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -312,6 +317,123 @@ def _expand_children(records: DataFrame, scheduled: DataFrame,
     return out
 
 
+def _entry_gates(queue: DataFrame, robots: Optional[DataFrame],
+                 config: CrawlConfig
+                 ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
+    """Queue entry: URL blocklist, then robots.  Returns (allowed,
+    blocked, url_filtered); ``url_filtered`` is None when both
+    blocklists are empty, and the URL gate is then absent from the plan.
+    """
+    url_filtered = None
+    if config.blocked_domains or config.blocked_extensions:
+        verdict = url_filter(
+            queue,
+            blocked_domains=list(config.blocked_domains),
+            blocked_extensions=list(config.blocked_extensions),
+            allowed_schemes=config.allowed_schemes,
+        )
+        url_filtered = verdict.filter(~F.col("keep")).select("url")
+        queue = verdict.filter(F.col("keep")).drop(
+            "scheme_ok", "domain_blocked", "ext_blocked", "keep"
+        )
+    allowed, blocked = robots_filter(queue, robots)
+    return allowed, blocked, url_filtered
+
+
+class RoundOutputs(NamedTuple):
+    fetched: DataFrame     # persisted; content_dup/content_fp when content_seen
+    extracted: DataFrame   # persisted
+    records: DataFrame
+    errors: DataFrame      # (url, error): extraction errors + fetch misses
+    lineage: DataFrame
+    children: DataFrame    # next round's candidates, ``_expand_cache`` attached
+    content_state: Optional[DataFrame]  # next checksum state (lazy)
+
+
+def _round_body(fetched: DataFrame, scheduled: DataFrame,
+                content_state: Optional[DataFrame], round_no: int,
+                config: CrawlConfig) -> RoundOutputs:
+    """Everything after the fetch join: content-seen flag against the
+    carried checksum state, extraction, errors, lineage and child
+    expansion.  ``fetched`` is the raw ``scheduled`` ⋈ pages join;
+    ``run_crawl`` and the streaming ``foreachBatch`` both call this.
+    """
+    if config.content_seen:
+        # content-seen (Mercator §4.1): within-round first owner
+        # by seq, then prior rounds' checksum state — NOT a
+        # broadcast (one fp per distinct document at corpus
+        # scale); both sides hash-partition on the near-unique
+        # checksum key
+        fetched = content_seen_flag(fetched, order_col=[
+            F.col("fetch_ts"),
+            F.col("eff_priority").desc(),
+            F.col("seq").desc(),
+        ])
+        if content_state is not None:
+            fetched = fetched.join(
+                content_state.select("content_fp").withColumn(
+                    "_seen_before", F.lit(True)
+                ),
+                on="content_fp", how="left",
+            ).withColumn(
+                "content_dup",
+                F.col("content_dup")
+                | F.coalesce("_seen_before", F.lit(False)),
+            ).drop("_seen_before")
+    fetched = fetched.persist()
+    miss_errors = fetched.filter(F.col("html").isNull()).select(
+        "url", F.lit("FetchMiss: url not in corpus").alias("error")
+    )
+    extract_src = fetched.filter(F.col("html").isNotNull())
+    if config.content_seen:
+        # the expensive half Mercator's test exists to skip:
+        # content-dup pages are neither extracted nor expanded
+        extract_src = extract_src.filter(~F.col("content_dup"))
+    extracted = extract_records(
+        extract_src.select("url", "html", "format")
+    ).persist()
+
+    records = extracted.filter(F.col("error").isNull())
+    errors = extracted.filter(F.col("error").isNotNull()).select(
+        "url", "error"
+    ).unionByName(miss_errors)
+
+    # per-partition lineage + metrics (F8)
+    lineage = (
+        extracted.withColumn("_pid", F.spark_partition_id())
+        .groupBy("_pid")
+        .agg(
+            F.count(F.lit(1)).alias("input_rows"),
+            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("emitted_rows"),
+            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
+            F.collect_list("error").alias("errors"),
+        )
+        .select(
+            F.lit(round_no).alias("round"),
+            F.col("_pid").alias("partition_id"),
+            "input_rows", "emitted_rows", "error_rows", "errors",
+        )
+    )
+
+    children = _expand_children(
+        records, scheduled,
+        seq_base=(round_no + 1) * config.seq_block,
+        max_depth=config.max_depth,
+        format_routes=config.child_format_routes,
+    )
+    if config.content_seen:
+        # everything fetched this round is now "seen" content
+        round_fps = fetched.filter(
+            F.col("html").isNotNull()
+        ).select("content_fp").distinct()
+        content_state = (
+            round_fps if content_state is None
+            else content_state.unionByName(round_fps).distinct()
+        )
+    return RoundOutputs(fetched, extracted, records, errors, lineage,
+                        children, content_state)
+
+
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -399,23 +521,7 @@ def run_crawl(
             queue.unpersist()
             break
 
-        url_gate = bool(config.blocked_domains or config.blocked_extensions)
-        if url_gate:
-            verdict = url_filter(
-                queue,
-                blocked_domains=list(config.blocked_domains),
-                blocked_extensions=list(config.blocked_extensions),
-                allowed_schemes=config.allowed_schemes,
-            )
-            url_filtered = verdict.filter(~F.col("keep")).select("url")
-            gated = verdict.filter(F.col("keep")).drop(
-                "scheme_ok", "domain_blocked", "ext_blocked", "keep"
-            )
-        else:
-            url_filtered = None
-            gated = queue
-
-        allowed, blocked = robots_filter(gated, robots)
+        allowed, blocked, url_filtered = _entry_gates(queue, robots, config)
         prev_seen = seen_state
         # rows an earlier round deferred past its horizon were admitted
         # (and entered the seen state) then: they skip the gate now
@@ -484,70 +590,10 @@ def run_crawl(
             totals.setdefault("fetch_plans", []).append(
                 fetched._jdf.queryExecution().executedPlan().toString()
             )
-        prev_content = None
-        if config.content_seen:
-            # content-seen (Mercator §4.1): within-round first owner
-            # by seq, then prior rounds' checksum state — NOT a
-            # broadcast (one fp per distinct document at corpus
-            # scale); both sides hash-partition on the near-unique
-            # checksum key
-            fetched = content_seen_flag(fetched, order_col=[
-                F.col("fetch_ts"),
-                F.col("eff_priority").desc(),
-                F.col("seq").desc(),
-            ])
-            if content_state is not None:
-                fetched = fetched.join(
-                    content_state.select("content_fp").withColumn(
-                        "_seen_before", F.lit(True)
-                    ),
-                    on="content_fp", how="left",
-                ).withColumn(
-                    "content_dup",
-                    F.col("content_dup")
-                    | F.coalesce("_seen_before", F.lit(False)),
-                ).drop("_seen_before")
-        fetched = fetched.persist()
-        miss_errors = fetched.filter(F.col("html").isNull()).select(
-            "url", F.lit("FetchMiss: url not in corpus").alias("error")
-        )
-        extract_src = fetched.filter(F.col("html").isNotNull())
-        if config.content_seen:
-            # the expensive half Mercator's test exists to skip:
-            # content-dup pages are neither extracted nor expanded
-            extract_src = extract_src.filter(~F.col("content_dup"))
-        extracted = extract_records(
-            extract_src.select("url", "html", "format")
-        ).persist()
-
-        records = extracted.filter(F.col("error").isNull())
-        errors = extracted.filter(F.col("error").isNotNull()).select(
-            "url", "error"
-        ).unionByName(miss_errors)
-
-        # per-partition lineage + metrics (F8)
-        lineage = (
-            extracted.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(
-                F.count(F.lit(1)).alias("input_rows"),
-                F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("emitted_rows"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
-                F.collect_list("error").alias("errors"),
-            )
-            .select(
-                F.lit(round_no).alias("round"),
-                F.col("_pid").alias("partition_id"),
-                "input_rows", "emitted_rows", "error_rows", "errors",
-            )
-        )
-
-        children = _expand_children(
-            records, scheduled,
-            seq_base=(round_no + 1) * config.seq_block,
-            max_depth=config.max_depth,
-            format_routes=config.child_format_routes,
-        )
+        out = _round_body(fetched, scheduled, content_state, round_no,
+                          config)
+        fetched, extracted, records, children = (
+            out.fetched, out.extracted, out.records, out.children)
         expand_cache = getattr(children, "_expand_cache", None)
         next_queue = deferred.select(_CAND_COLS).unionByName(
             children.select(_CAND_COLS)
@@ -623,27 +669,20 @@ def run_crawl(
         totals["url_filtered"] += int(stats.n_url_filtered)
         if config.content_seen:
             totals["content_dup"] += int(stats.n_content_dup)
-            # carry the checksum state: everything fetched this round
-            # is now "seen" content.  Same round-boundary plan
-            # truncation / release discipline as the URL-seen state.
-            round_fps = fetched.filter(
-                F.col("html").isNotNull()
-            ).select("content_fp").distinct()
-            prev_content = content_state
-            content_state = (
-                round_fps if content_state is None
-                else content_state.unionByName(round_fps).distinct()
-            )
-            if store is None:
-                content_state = _local_ckpt(content_state)
+        # carry the checksum state with the URL-seen state's
+        # round-boundary plan truncation / release discipline
+        prev_content = content_state
+        content_state = out.content_state
+        if store is None and content_state is not None:
+            content_state = _local_ckpt(content_state)
 
         if store is not None:
             tables = {
                 "queue": next_queue,
                 "offsets": offsets,
                 "records": records.drop("new_urls"),
-                "lineage": lineage,
-                "errors": errors,
+                "lineage": out.lineage,
+                "errors": out.errors,
             }
             if seen_state is not None and config.seen_mode != "off":
                 tables["seen"] = seen_state

@@ -23,7 +23,8 @@ Both sharded modes run one vectorized probe per shard
 (``_sharded_probe``): candidates sorted by ``seq`` are probed in one
 ``contains_many`` against the pre-batch filter, a numpy mask keeps the
 first occurrence of each unseen fingerprint, and the kept keys are
-inserted in ``seq`` order.  Shards without candidates pass their blob
+inserted in ``seq`` order (``_probe_shard``, which the streaming gate
+also runs per micro-batch).  Shards without candidates pass their blob
 through undecoded.  A cuckoo blob holds only its occupied slots while
 that is smaller (cuckoo.py), so state bytes scale with occupied slots;
 an exhausted cuckoo eviction walk fails the round (``_cuckoo_insert``).
@@ -109,6 +110,26 @@ def _cuckoo_insert(shard: CuckooShard, shard_id: int, keys: np.ndarray) -> None:
                 f"{shard.overflow}; raise num_shards or shard_buckets")
 
 
+def _insert_many(shard, shard_id: int, keys: np.ndarray) -> None:
+    shard.insert_many(keys)
+
+
+def _probe_shard(cand_pdf: pd.DataFrame, shard, shard_id: int,
+                 insert: Callable, key: str = "fingerprint",
+                 order: str = "seq") -> pd.DataFrame:
+    """One shard's probe: the lowest-``order`` row of each ``key`` the
+    pre-batch ``shard`` does not hold, in ``order``; their keys are
+    inserted in that order.  Shared by the batch cogroup and the
+    streaming GroupState gates (``streaming.pipeline``)."""
+    cand_pdf = cand_pdf.sort_values(order, kind="mergesort")
+    hashes = cand_pdf[key].to_numpy(dtype=np.int64)
+    keep = np.zeros(len(hashes), dtype=bool)
+    keep[np.unique(hashes, return_index=True)[1]] = True
+    keep &= ~shard.contains_many(hashes)
+    insert(shard, shard_id, hashes[keep])
+    return cand_pdf.loc[keep]
+
+
 def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
                    num_shards: int, new_shard: Callable, load_shard: Callable,
                    insert: Callable) -> Tuple[DataFrame, DataFrame]:
@@ -133,16 +154,8 @@ def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
         if not len(cand_pdf) and blob is not None:
             return state_row(shard_id, blob)
         shard = new_shard() if blob is None else load_shard(bytes(blob))
-        cand_pdf = cand_pdf.sort_values("seq", kind="mergesort")
-        hashes = cand_pdf["fingerprint"].to_numpy(dtype=np.int64)
-        # first occurrence (lowest seq) of each fingerprint the
-        # pre-batch filter has not seen
-        keep = np.zeros(len(hashes), dtype=bool)
-        keep[np.unique(hashes, return_index=True)[1]] = True
-        keep &= ~shard.contains_many(hashes)
-        insert(shard, shard_id, hashes[keep])
-        admitted = cand_pdf.loc[keep, names].assign(
-            row_kind="url", shard=shard_id, blob=None)
+        admitted = _probe_shard(cand_pdf, shard, shard_id, insert)[
+            names].assign(row_kind="url", shard=shard_id, blob=None)
         return pd.concat([admitted, state_row(shard_id, shard.to_bytes())],
                          ignore_index=True)[fields]
 
@@ -208,7 +221,7 @@ def filter_unseen(
             lambda: BloomShard(m_bits=m_bits, k=8),
             BloomShard.from_bytes,
             # int64 (possibly negative) — BloomShard remaps to uint64
-            lambda shard, shard_id, keys: shard.insert_many(keys),
+            _insert_many,
         )
 
     raise ValueError(f"unknown seen mode: {mode!r}")

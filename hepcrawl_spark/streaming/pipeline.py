@@ -3,9 +3,15 @@
 ``stream_extract`` turns the batch extraction into a continuous one:
 ``readStream`` over a pages directory (new parquet files = newly
 fetched WARC batches), the same Arrow extraction UDF, and a
-``foreachBatch`` sink that reuses the batch writers — so batch and
-streaming share one code path (the round engine's per-round body *is*
-the batch function).
+``foreachBatch`` sink that reuses the batch writers.
+
+``stream_crawl_round`` runs the batch round's own stages per
+micro-batch: ``frontier.rounds._entry_gates`` (URL blocklist, robots),
+``frontier.politeness.schedule`` and ``frontier.rounds._round_body``
+(content-seen, extraction, errors, lineage, ``_expand_children``),
+driven by the same ``CrawlConfig`` as ``run_crawl``.  Its URL-seen
+gate ``stream_unseen`` runs the batch gate's per-shard probe
+(``frontier.seen._probe_shard``) against GroupState.
 
 ``stream_host_stats`` is the watermarked per-host fetch-metrics
 aggregation (1-minute tumbling windows over ``warc_ts``, 10-minute
@@ -15,8 +21,11 @@ table (SURVEY.md §2.3 F8).
 
 from __future__ import annotations
 
+import glob
+import os
 from typing import Callable, Iterator, Optional, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +33,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..extract import extract_records
+from ..frontier.politeness import schedule
+from ..frontier.robots import effective_politeness
+from ..frontier.rounds import (
+    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets, _round_body,
+)
+from ..frontier.cuckoo import CuckooShard
+from ..frontier.seen import (
+    CANDIDATE_SCHEMA, _cuckoo_insert, _insert_many, _probe_shard,
+    shard_of_host,
+)
 from ..schema import PAGES_WITH_FORMAT_SCHEMA
 
 
@@ -67,6 +86,44 @@ UNSEEN_STATE_SCHEMA = "fps array<long>"
 UNSEEN_CUCKOO_STATE_SCHEMA = "blob binary"
 
 
+class _FingerprintSet:
+    """Exact-mode shard for the shared probe: the shard's fingerprint
+    array (the ``fps array<long>`` GroupState)."""
+
+    def __init__(self, fps=()):
+        self.fps = np.asarray(fps, dtype=np.int64)
+
+    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
+        return np.isin(hashes, self.fps)
+
+    def insert_many(self, keys: np.ndarray) -> None:
+        self.fps = np.concatenate([self.fps, keys])
+
+    def to_state(self) -> list:
+        return self.fps.tolist()
+
+
+def _probe_state(new_shard: Callable, load_shard: Callable,
+                 insert: Callable, dump: Callable, out_cols: list,
+                 key: str = "fingerprint", order: str = "seq") -> Callable:
+    """``applyInPandasWithState`` function that runs the batch gate's
+    per-shard probe (``frontier.seen._probe_shard``) against the
+    shard's GroupState.  The shard's Arrow chunks are concatenated
+    first, so the lowest ``order`` wins across the whole micro-batch
+    (one shard's slice is ~batch/num_shards rows — bounded)."""
+    def fn(grp: Tuple, pdfs: Iterator[pd.DataFrame], state):
+        shard = load_shard(state.get[0]) if state.exists else new_shard()
+        chunks = list(pdfs)
+        if chunks:
+            out = _probe_shard(pd.concat(chunks, ignore_index=True), shard,
+                               int(grp[0]), insert, key, order)[out_cols]
+            if len(out):
+                yield out
+        state.update((dump(shard),))
+
+    return fn
+
+
 def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
                   mode: str = "exact",
                   shard_buckets: int = 1 << 16,
@@ -81,14 +138,17 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
     keys identically), else ``fingerprint % num_shards`` — and each
     shard's GroupState carries its membership structure across
     micro-batches: a URL admitted in batch 3 stays seen in batch 300,
-    surviving restarts through the state store checkpoint.  Within a
-    batch, first occurrence wins by ``seq`` within a chunk.
+    surviving restarts through the state store checkpoint.  Each
+    micro-batch runs the batch gate's per-shard probe
+    (``frontier.seen._probe_shard``) over the shard's Arrow chunks
+    concatenated, so the lowest ``seq`` wins batch-wide.
 
     ``mode="exact"`` keeps the shard's fingerprint set (8 bytes/key —
     fine to ~10^8 frontier).  ``mode="cuckoo"`` keeps the same
     serialized cuckoo shard the batch gate uses (6 bytes per occupied
     slot, at most the dense ~2 bytes/slot array — see cuckoo.py): the
-    10^10 path, at the filter's false-positive cost.
+    10^10 path, at the filter's false-positive cost; an exhausted
+    eviction walk fails the query, naming the shard.
     State volume per task is |frontier| / num_shards either way, and
     the only shuffle is the one groupBy.
 
@@ -99,7 +159,19 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..frontier.cuckoo import CuckooShard
+    backends = {
+        # state schema, new shard, load shard, insert, dump shard
+        "exact": (UNSEEN_STATE_SCHEMA, _FingerprintSet, _FingerprintSet,
+                  _insert_many, _FingerprintSet.to_state),
+        "cuckoo": (UNSEEN_CUCKOO_STATE_SCHEMA,
+                   lambda: CuckooShard(n_buckets=shard_buckets),
+                   lambda blob: CuckooShard.from_bytes(bytes(blob)),
+                   _cuckoo_insert, CuckooShard.to_bytes),
+    }
+    if mode not in backends:
+        raise ValueError(f"stream_unseen supports mode 'exact' or "
+                         f"'cuckoo', got {mode!r}")
+    schema, *backend = backends[mode]
 
     out_cols = ["url", "fingerprint", "seq"] + [
         c for c in (carry_cols or [])
@@ -108,50 +180,7 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
     in_fields = {f.name: f for f in cand_stream.schema.fields}
     out_struct = StructType([in_fields[c] for c in out_cols])
 
-    def _dedup_exact(key: Tuple, pdfs: Iterator[pd.DataFrame], state):
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            pdf = pdf.sort_values("seq")  # min-seq wins within a chunk
-            keep = []
-            for fp in pdf["fingerprint"]:
-                fp = int(fp)
-                if fp in seen:
-                    keep.append(False)
-                else:
-                    seen.add(fp)
-                    keep.append(True)
-            out = pdf[keep][out_cols]
-            if len(out):
-                yield out
-        state.update((list(seen),))
-
-    def _dedup_cuckoo(key: Tuple, pdfs: Iterator[pd.DataFrame], state):
-        if state.exists:
-            shard = CuckooShard.from_bytes(bytes(state.get[0]))
-        else:
-            shard = CuckooShard(n_buckets=shard_buckets)
-        for pdf in pdfs:
-            pdf = pdf.sort_values("seq")
-            keep = []
-            for fp in pdf["fingerprint"]:
-                h = int(fp)  # raw signed, same as the batch gate
-                if shard.contains(h):
-                    keep.append(False)
-                else:
-                    shard.insert(h)
-                    keep.append(True)
-            out = pdf[keep][out_cols]
-            if len(out):
-                yield out
-        state.update((shard.to_bytes(),))
-
-    fn, schema = {
-        "exact": (_dedup_exact, UNSEEN_STATE_SCHEMA),
-        "cuckoo": (_dedup_cuckoo, UNSEEN_CUCKOO_STATE_SCHEMA),
-    }[mode]
-
     if "url_host" in cand_stream.columns:
-        from ..frontier.seen import shard_of_host
         shard = shard_of_host(F.col("url_host"), num_shards)
     else:
         shard = F.pmod(F.col("fingerprint"), F.lit(num_shards))
@@ -160,13 +189,27 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
         .withColumn("_shard", shard)
         .groupBy("_shard")
         .applyInPandasWithState(
-            fn,
+            _probe_state(*backend, out_cols),
             outputStructType=out_struct,
             stateStructType=schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
+
+
+def _epoch_dir(root: str, epoch: int) -> str:
+    return os.path.join(root, f"epoch-{int(epoch):09d}")
+
+
+def _prior_epoch(spark: SparkSession, root: str,
+                 epoch: int) -> Optional[DataFrame]:
+    """The epoch-versioned ledger under ``root`` as of the highest
+    ``epoch-N`` with N < ``epoch`` (None before the first), so a
+    retried epoch rebuilds from the same basis."""
+    prior = [p for p in sorted(glob.glob(os.path.join(root, "epoch-*")))
+             if int(p.rsplit("-", 1)[1]) < int(epoch)]
+    return spark.read.parquet(prior[-1]) if prior else None
 
 
 def stream_schedule(cand_stream: DataFrame, checkpoint: str,
@@ -193,31 +236,22 @@ def stream_schedule(cand_stream: DataFrame, checkpoint: str,
     writers are per-host-tiny; the scheduled output is the streaming
     peer of the round loop's ``scheduled`` table.
     """
-    import glob
-    import os
-
     from ..frontier.fingerprint import with_url_identity
-    from ..frontier.politeness import schedule
-    from ..frontier.rounds import _merge_offsets
 
     def batch_fn(df: DataFrame, epoch: int) -> None:
-        spark = df.sparkSession
         if "url_host" not in df.columns:
             df = with_url_identity(df)
-        prior = sorted(glob.glob(os.path.join(offsets_path, "epoch-*")))
-        prior = [p for p in prior
-                 if int(p.rsplit("-", 1)[1]) < int(epoch)]
-        offsets = spark.read.parquet(prior[-1]) if prior else None
+        offsets = _prior_epoch(df.sparkSession, offsets_path, epoch)
         scheduled, _deferred, new_offsets = schedule(
             df, politeness, offsets
         )
         (
             scheduled.withColumn("epoch", F.lit(int(epoch)))
             .write.mode("overwrite")
-            .parquet(os.path.join(output_path, f"epoch-{int(epoch):09d}"))
+            .parquet(_epoch_dir(output_path, epoch))
         )
         _merge_offsets(offsets, new_offsets).write.mode("overwrite").parquet(
-            os.path.join(offsets_path, f"epoch-{int(epoch):09d}")
+            _epoch_dir(offsets_path, epoch)
         )
 
     writer = (
@@ -231,53 +265,50 @@ def stream_schedule(cand_stream: DataFrame, checkpoint: str,
 
 
 def stream_crawl_round(spark: SparkSession, frontier_path: str,
-                       pages: DataFrame, work_dir: str,
+                       pages: DataFrame, work_dir: str, *,
+                       config: CrawlConfig,
                        politeness: Optional[DataFrame] = None,
                        robots: Optional[DataFrame] = None,
-                       num_shards: int = 8, seen_mode: str = "exact",
-                       max_depth: int = 4, seq_block: int = 1 << 40,
-                       child_format_routes: Optional[dict] = None,
-                       max_files_per_trigger: int = 64,
-                       available_now: bool = True,
-                       blocked_domains: tuple = (),
-                       blocked_extensions: tuple = (),
-                       allowed_schemes: tuple = ("http", "https"),
                        host_priorities: Optional[DataFrame] = None,
-                       content_seen: bool = False):
-    """The FULL streaming crawl engine — every stage of the batch
-    round body (``frontier.rounds.run_crawl``) composed into one
-    continuous query, closing the frontier loop through the watched
-    directory:
+                       max_files_per_trigger: int = 64,
+                       available_now: bool = True):
+    """The FULL streaming crawl engine — the batch round
+    (``frontier.rounds.run_crawl``) as one continuous query, closing
+    the frontier loop through the watched directory:
 
-        frontier files → URL-seen gate (``stream_unseen``,
-        GroupState) → foreachBatch round body [robots gate →
-        politeness ``schedule`` with the carried offset ledger →
-        fetch join against the pages corpus → extraction →
-        ``_expand_children``] → child candidates written BACK into
+        frontier files → URL-seen gate (``stream_unseen``, GroupState)
+        → foreachBatch [``_entry_gates`` (URL blocklist, robots) →
+        ``schedule`` with the carried offset ledger → fetch join →
+        ``_round_body`` (content-seen, extraction, errors, lineage,
+        ``_expand_children``)] → child candidates written BACK into
         ``frontier_path`` → picked up as the next micro-batch.
 
-    One implementation, two engines: the body calls the SAME
-    ``schedule`` / ``extract_records`` / ``_expand_children`` the
-    batch loop calls, so per-host spacing, LIFO ordering, depth caps
-    and child format routing are definitionally identical.  The
-    URL-seen state lives in the state-store checkpoint and the
-    per-host offsets in an epoch-versioned parquet ledger, so BOTH
-    survive a full stop/start: a crawl resumed tomorrow still refuses
-    yesterday's URLs and still spaces yesterday's hosts.  Robots sits
-    inside the body (after the gate): with a static robots table the
-    admitted-then-blocked order changes no outcome — a blocked URL is
-    blocked in every batch — and it keeps the stream side to the one
-    stateful exchange.
+    ``_entry_gates`` and ``_round_body`` are the functions ``run_crawl``
+    calls, with the same ``config``, so the URL gate, robots, per-host
+    spacing, content-seen, LIFO ordering, depth caps and child format
+    routing are definitionally identical; the micro-batch epoch plays
+    the round number.  What differs is where the seen gate sits
+    (before the body, as the one stateful exchange) and where state
+    lands: the URL-seen state in the state-store checkpoint, the
+    per-host offsets and checksum state in epoch-versioned parquet
+    ledgers — so all of it survives a full stop/start.  With a static
+    robots table the admitted-then-blocked order changes no outcome.
+
+    ``config`` must use ``seen_mode`` exact or cuckoo, and no
+    ``horizon`` (every admitted URL is scheduled in its micro-batch)
+    or ``pages_table``; ``max_rounds`` bounds :func:`drive_stream_crawl`,
+    and ``job_id`` / ``collect_fetch_plans`` shape only the batch summary.
 
     Epoch-versioned writes make retried micro-batches idempotent:
-    records land in ``work_dir/records/epoch-N`` (overwrite), child
-    files as ``frontier_path/children-N-*.parquet`` (fixed names per
-    epoch — the file source processes each path once, so a retry
-    cannot double-enqueue).  ``availableNow`` processes the files
-    present at start then stops; children written during the run form
-    the NEXT trigger's input — use :func:`drive_stream_crawl` for the
-    restart loop that drains the frontier to empty (each run is one
-    batch "round"; the state store carries everything across runs).
+    ``scheduled``, ``records``, ``errors`` and ``lineage`` land in
+    ``work_dir/<table>/epoch-N`` (overwrite; errors and lineage with
+    the batch store's schemas), child files as
+    ``frontier_path/children-N-*.parquet`` (fixed names per epoch —
+    the file source processes each path once, so a retry cannot
+    double-enqueue).  ``availableNow`` processes the files present at
+    start then stops; children written during the run form the NEXT
+    trigger's input — use :func:`drive_stream_crawl` for the restart
+    loop that drains the frontier to empty.
 
     Storage restriction: the child loop-back publishes files with
     driver-local ``glob()`` + ``os.replace()``, so ``frontier_path``
@@ -288,19 +319,15 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
     Hadoop FileSystem API (``spark._jvm.org.apache.hadoop.fs``) —
     the per-epoch fixed-name idempotency contract is unchanged.
     """
-    import glob
-    import os
-
-    from ..frontier.politeness import schedule
-    from ..frontier.robots import effective_politeness, robots_filter
-    from ..frontier.rounds import _expand_children, _merge_offsets
-    from ..frontier.seen import CANDIDATE_SCHEMA
-    from ..frontier.urlfilter import url_filter
-
-    cand_cols = CANDIDATE_SCHEMA.fieldNames()
-    offsets_path = os.path.join(work_dir, "offsets")
-    records_path = os.path.join(work_dir, "records")
-    content_path = os.path.join(work_dir, "content")
+    if config.seen_mode not in ("exact", "cuckoo"):
+        raise ValueError(f"the streaming seen gate needs seen_mode 'exact' "
+                         f"or 'cuckoo', got {config.seen_mode!r}")
+    if config.horizon is not None:
+        raise ValueError("the streaming crawl schedules every admitted URL "
+                         "in its micro-batch; horizon must be None")
+    if config.pages_table:
+        raise ValueError("the streaming crawl fetches from the pages frame; "
+                         "pages_table must be None")
     pol = effective_politeness(politeness, robots)
     pages_slim = pages.select("url", "html")
 
@@ -310,103 +337,43 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(frontier_path)
     )
-    admitted = stream_unseen(cand, num_shards=num_shards,
-                             mode=seen_mode, carry_cols=cand_cols)
+    admitted = stream_unseen(cand, num_shards=config.num_shards,
+                             mode=config.seen_mode, carry_cols=_CAND_COLS)
 
     def round_body(df: DataFrame, epoch: int) -> None:
         epoch = int(epoch)
-        if blocked_domains or blocked_extensions:
-            # same queue-entry URL blocklist as the batch round
-            # (CrawlConfig.blocked_domains) — a stateless per-row
-            # literal gate, so its verdict is identical in any
-            # micro-batch position, like the decontamination gate
-            df = url_filter(
-                df,
-                blocked_domains=list(blocked_domains),
-                blocked_extensions=list(blocked_extensions),
-                allowed_schemes=allowed_schemes,
-            ).filter(F.col("keep")).drop(
-                "scheme_ok", "domain_blocked", "ext_blocked", "keep"
-            )
-        allowed, _blocked = robots_filter(df, robots)
-        prior = sorted(glob.glob(os.path.join(offsets_path, "epoch-*")))
-        prior = [p for p in prior if int(p.rsplit("-", 1)[1]) < epoch]
-        offsets = spark.read.parquet(prior[-1]) if prior else None
-        # host-authority boost: like the blocklist, a per-row verdict
-        # against a static dimension — identical in any micro-batch
+
+        def work_path(name: str) -> str:
+            return os.path.join(work_dir, name)
+
+        def write(frame: DataFrame, name: str) -> None:
+            frame.write.mode("overwrite").parquet(
+                _epoch_dir(work_path(name), epoch))
+
+        allowed, _blocked, _url_filtered = _entry_gates(df, robots, config)
+        offsets = _prior_epoch(spark, work_path("offsets"), epoch)
         scheduled, _deferred, new_offsets = schedule(
-            allowed, pol, offsets, round_start=0.0, horizon=None,
-            host_priorities=host_priorities,
+            allowed, pol, offsets, host_priorities=host_priorities,
         )
         scheduled = scheduled.persist()
-        (
-            scheduled.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .parquet(os.path.join(work_dir, "scheduled",
-                                  f"epoch-{epoch:09d}"))
+        write(scheduled.withColumn("epoch", F.lit(epoch)), "scheduled")
+        # the checksum ledger rebuilds a retried epoch from epoch-1's
+        # basis, exactly like the offsets ledger
+        prior_fps = (_prior_epoch(spark, work_path("content"), epoch)
+                     if config.content_seen else None)
+        out = _round_body(
+            scheduled.join(pages_slim, on="url", how="left"), scheduled,
+            prior_fps, epoch, config,
         )
-        fetched = scheduled.join(pages_slim, on="url", how="left")
-        if content_seen:
-            # Mercator content-seen, streaming form: the checksum
-            # ledger is epoch-versioned parquet exactly like the
-            # offsets ledger (retried epochs idempotently rebuild
-            # from epoch-1's basis); within-batch first owner by the
-            # schedule's real fetch-order keys, like the batch loop
-            from ..frontier.fingerprint import content_seen_flag
+        write(out.records.drop("new_urls").withColumn("epoch", F.lit(epoch)),
+              "records")
+        write(out.errors, "errors")
+        write(out.lineage, "lineage")
+        if config.content_seen:
+            write(out.content_state, "content")
+        write(_merge_offsets(offsets, new_offsets), "offsets")
 
-            cprior = sorted(glob.glob(
-                os.path.join(content_path, "epoch-*")))
-            cprior = [p for p in cprior
-                      if int(p.rsplit("-", 1)[1]) < epoch]
-            prior_fps = (spark.read.parquet(cprior[-1])
-                         if cprior else None)
-            fetched = content_seen_flag(fetched, order_col=[
-                F.col("fetch_ts"),
-                F.col("eff_priority").desc(),
-                F.col("seq").desc(),
-            ])
-            if prior_fps is not None:
-                fetched = fetched.join(
-                    prior_fps.select("content_fp").withColumn(
-                        "_seen_before", F.lit(True)),
-                    on="content_fp", how="left",
-                ).withColumn(
-                    "content_dup",
-                    F.col("content_dup")
-                    | F.coalesce("_seen_before", F.lit(False)),
-                ).drop("_seen_before")
-            fetched = fetched.persist()
-            batch_fps = fetched.filter(
-                F.col("html").isNotNull()
-            ).select("content_fp").distinct()
-            new_fps = (batch_fps if prior_fps is None
-                       else prior_fps.unionByName(batch_fps).distinct())
-            new_fps.write.mode("overwrite").parquet(
-                os.path.join(content_path, f"epoch-{epoch:09d}")
-            )
-        extract_src = fetched.filter(F.col("html").isNotNull())
-        if content_seen:
-            extract_src = extract_src.filter(~F.col("content_dup"))
-        extracted = extract_records(
-            extract_src.select("url", "html", "format")
-        ).persist()
-        records = extracted.filter(F.col("error").isNull())
-        (
-            records.drop("new_urls").withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .parquet(os.path.join(records_path, f"epoch-{epoch:09d}"))
-        )
-        _merge_offsets(offsets, new_offsets).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(offsets_path, f"epoch-{epoch:09d}"))
-
-        expanded = _expand_children(
-            records, scheduled,
-            seq_base=(epoch + 1) * seq_block,
-            max_depth=max_depth,
-            format_routes=child_format_routes or {},
-        )
-        children = expanded.select(cand_cols)
+        children = out.children.select(_CAND_COLS)
         # land children under a scratch dir, then give each part a
         # FIXED per-epoch name inside the watched directory: the file
         # source keys processed files by path, so a retried epoch
@@ -424,7 +391,7 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
             # watched dir would re-trigger empty micro-batches forever
             # — the drained-frontier signal drive_stream_crawl watches
             # for is "this round added no files"
-            scratch = os.path.join(work_dir, f"children-{epoch:09d}")
+            scratch = work_path(f"children-{epoch:09d}")
             children.write.mode("overwrite").parquet(scratch)
             parts = sorted(
                 glob.glob(os.path.join(scratch, "part-*.parquet"))
@@ -434,12 +401,11 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
                     frontier_path,
                     f"children-{epoch:09d}-{i:05d}.parquet"
                 ))
-        expand_cache = getattr(expanded, "_expand_cache", None)
+        expand_cache = getattr(out.children, "_expand_cache", None)
         if expand_cache is not None:
             expand_cache.unpersist()
-        extracted.unpersist()
-        if content_seen:
-            fetched.unpersist()
+        out.extracted.unpersist()
+        out.fetched.unpersist()
         scheduled.unpersist()
 
     writer = (
@@ -453,15 +419,16 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
 
 
 def drive_stream_crawl(spark: SparkSession, frontier_path: str,
-                       pages: DataFrame, work_dir: str,
-                       max_rounds: int = 16,
+                       pages: DataFrame, work_dir: str, *,
+                       config: CrawlConfig,
                        round_timeout: float = 600.0,
                        **kwargs) -> dict:
     """Drain loop for :func:`stream_crawl_round`: ``availableNow``
     processes the frontier files present at START, so children written
     during a run form the NEXT run's input — this helper owns the
     restart loop, re-running the query until a round publishes no new
-    frontier files (the crawl has drained) or ``max_rounds`` is hit.
+    frontier files (the crawl has drained) or ``config.max_rounds`` is
+    hit.  ``kwargs`` pass through to :func:`stream_crawl_round`.
 
     Drain detection is the file-source's own contract: each round
     snapshots the watched directory before starting; a round that adds
@@ -472,18 +439,15 @@ def drive_stream_crawl(spark: SparkSession, frontier_path: str,
     exactly as across any stop/start.
 
     Returns ``{"rounds": n, "drained": bool, "records_path": …}``;
-    ``drained`` False means max_rounds stopped the loop first (raise
-    ``max_depth`` awareness: a depth-capped crawl drains naturally in
-    ``max_depth + 1`` rounds + one empty confirming round).
+    ``drained`` False means max_rounds stopped the loop first (a
+    depth-capped crawl drains naturally in ``max_depth + 1`` rounds +
+    one empty confirming round).
     """
-    import glob
-    import os
-
     rounds, drained = 0, False
-    while rounds < max_rounds:
+    while rounds < config.max_rounds:
         before = set(glob.glob(os.path.join(frontier_path, "*.parquet")))
         q = stream_crawl_round(spark, frontier_path, pages, work_dir,
-                               available_now=True, **kwargs)
+                               config=config, available_now=True, **kwargs)
         if not q.awaitTermination(round_timeout):
             q.stop()
             raise TimeoutError(
@@ -582,36 +546,16 @@ def stream_clean_corpus(docs_stream: DataFrame, num_shards: int = 64,
         .alias("_cfp"),
     )
 
-    def _dedup(key: Tuple, pdfs: Iterator[pd.DataFrame], state):
-        seen = set(state.get[0]) if state.exists else set()
-        # concatenate the shard's Arrow chunks so min-doc_id wins
-        # across the WHOLE micro-batch, not per chunk (one shard's
-        # batch slice is ~batch/num_shards rows — bounded)
-        chunks = list(pdfs)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True) \
-                if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values("doc_id")  # min doc_id wins
-            keep = []
-            for cfp in pdf["_cfp"]:
-                cfp = int(cfp)
-                if cfp in seen:
-                    keep.append(False)
-                else:
-                    seen.add(cfp)
-                    keep.append(True)
-            out = pdf[keep][["doc_id", "guessed_lang", "token_cnt",
-                             "fingerprint"]]
-            if len(out):
-                yield out
-        state.update((list(seen),))
-
     return (
         keyed
         .withColumn("_shard", F.pmod(F.col("_cfp"), F.lit(num_shards)))
         .groupBy("_shard")
         .applyInPandasWithState(
-            _dedup,
+            # min doc_id wins within a micro-batch
+            _probe_state(_FingerprintSet, _FingerprintSet, _insert_many,
+                         _FingerprintSet.to_state,
+                         ["doc_id", "guessed_lang", "token_cnt",
+                          "fingerprint"], key="_cfp", order="doc_id"),
             outputStructType=CLEAN_CORPUS_OUTPUT_SCHEMA,
             stateStructType=CLEAN_CORPUS_STATE_SCHEMA,
             outputMode="append",

@@ -81,43 +81,88 @@ def test_stream_unseen_state_survives_microbatches(spark, tmp_path, mode):
     """applyInPandasWithState URL-seen gate (exact set and serialized
     cuckoo-shard state): a fingerprint admitted in micro-batch 1 is
     rejected when it reappears in micro-batch 2 (the GroupState
-    carries the shard's membership across batches)."""
+    carries the shard's membership across batches).  Within one
+    micro-batch the lowest seq wins even when the duplicates arrive
+    in different Arrow chunks, exactly as in ``filter_unseen``."""
+    from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA, filter_unseen
     from hepcrawl_spark.streaming.pipeline import stream_unseen
 
     src = tmp_path / "cand"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
     sink = []
+    schema = "url string, fingerprint long, seq long"
 
-    # batch 1: urls a,b ; batch 2: b (dup), c — as two files so
-    # maxFilesPerTrigger=1 forces two micro-batches
-    spark.createDataFrame(
-        [("http://x/a", 11, 1), ("http://x/b", 22, 2)],
-        "url string, fingerprint long, seq long",
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(
-        [("http://x/b", 22, 3), ("http://x/c", 33, 4)],
-        "url string, fingerprint long, seq long",
-    ).coalesce(1).write.parquet(str(src / "b2"))
+    # batch 1: urls a,b ; batch 2: b (dup), c ; batch 3: one new
+    # fingerprint twice, its lower-seq row second — as three files so
+    # maxFilesPerTrigger=1 forces three micro-batches
+    b3 = [("http://x/d-late", 44, 6), ("http://x/d-early", 44, 5)]
+    for name, rows in (
+        ("b1", [("http://x/a", 11, 1), ("http://x/b", 22, 2)]),
+        ("b2", [("http://x/b", 22, 3), ("http://x/c", 33, 4)]),
+        ("b3", b3),
+    ):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.parquet(str(src / name))
 
     stream = (
         spark.readStream
-        .schema("url string, fingerprint long, seq long")
+        .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
+    # one row per Arrow chunk: batch 3's two rows reach the shard's
+    # GroupState function as separate chunks
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        q = (
+            stream_unseen(stream, num_shards=4, mode=mode)
+            .writeStream
+            .foreachBatch(lambda df, epoch: sink.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    admitted = sorted((r.url, r.seq) for r in sink)
+    assert admitted == [("http://x/a", 1), ("http://x/b", 2),
+                        ("http://x/c", 4), ("http://x/d-early", 5)]
+
+    batch, _ = filter_unseen(
+        spark.createDataFrame(
+            [(u, u, "x", fp, 0, 0, seq, None, None) for u, fp, seq in b3],
+            CANDIDATE_SCHEMA,
+        ), None, mode=mode, num_shards=4,
+    )
+    assert [(u, s) for u, s in admitted if u.startswith("http://x/d")] \
+        == sorted((r.url, r.seq) for r in batch.collect())
+
+
+def test_stream_unseen_cuckoo_overflow_fails_loudly(spark, tmp_path):
+    """A streaming cuckoo shard whose eviction walk is exhausted ends
+    the query with an error naming the shard, instead of admitting
+    the homeless key again later (a silent false negative)."""
+    from hepcrawl_spark.streaming.pipeline import stream_unseen
+
+    schema = "url string, fingerprint long, seq long"
+    src = tmp_path / "cand"
+    # 40 keys, all in shard 3 of 4; the shard holds 4 buckets x 4 slots
+    spark.createDataFrame(
+        [(f"http://x/{i}", 4 * i + 3, i) for i in range(40)], schema
+    ).coalesce(1).write.parquet(str(src))
     q = (
-        stream_unseen(stream, num_shards=4, mode=mode)
+        stream_unseen(spark.readStream.schema(schema).parquet(str(src)),
+                      num_shards=4, mode="cuckoo", shard_buckets=4)
         .writeStream
-        .foreachBatch(lambda df, epoch: sink.extend(df.collect()))
-        .option("checkpointLocation", ckpt)
+        .foreachBatch(lambda df, epoch: df.collect())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    admitted = sorted((r.url, r.seq) for r in sink)
-    assert admitted == [("http://x/a", 1), ("http://x/b", 2),
-                        ("http://x/c", 4)]
+    with pytest.raises(Exception, match="cuckoo seen shard 3 overflowed"):
+        q.awaitTermination(120)
 
 
 def test_stream_crawl_round_full_loop(spark, tmp_path):
@@ -127,7 +172,7 @@ def test_stream_crawl_round_full_loop(spark, tmp_path):
     the watched directory.  Per-host spacing, URL-seen dedup and depth
     expansion must hold across micro-batches AND across full query
     restarts (state store + offset ledger)."""
-    from hepcrawl_spark.frontier.rounds import make_seeds
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
     from hepcrawl_spark.schema import POLITENESS_SCHEMA
     from hepcrawl_spark.streaming.pipeline import stream_crawl_round
@@ -167,7 +212,8 @@ def test_stream_crawl_round_full_loop(spark, tmp_path):
     def run_round():
         q = stream_crawl_round(
             spark, str(frontier), pages, work,
-            politeness=politeness, num_shards=4, max_depth=2,
+            politeness=politeness,
+            config=CrawlConfig(seen_mode="exact", num_shards=4, max_depth=2),
         )
         q.awaitTermination(180)
 
@@ -463,7 +509,8 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
         "http://h0.x/s0/c0": ["http://h0.x/g0"],
         "http://h0.x/s0/c1": ["http://h0.x/g1"],
         "http://h1.x/s1/c2": ["http://h1.x/g2"],
-        "http://h1.x/s1/c3": [],
+        # linked but not in the corpus: a fetch miss in both engines
+        "http://h1.x/s1/c3": ["http://h1.x/missing"],
     }
     leaves = ["http://h0.x/g0", "http://h0.x/g1", "http://h1.x/g2"]
     rows = [page(u, links) for u, links in tree.items()]
@@ -483,7 +530,8 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
         .write.mode("append").parquet(str(frontier))
     out = drive_stream_crawl(
         spark, str(frontier), pages, str(tmp_path / "work"),
-        politeness=politeness, num_shards=4, max_depth=3,
+        politeness=politeness,
+        config=CrawlConfig(seen_mode="exact", num_shards=4, max_depth=3),
     )
     # depth 0/1/2 rounds + one empty confirming round, then drained
     assert out["drained"] and 3 <= out["rounds"] <= 4
@@ -506,6 +554,18 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
         for r in store.all_records().select("url", "title").collect()
     )
     assert stream_recs == batch_recs
+
+    # the fetch miss is recorded, not dropped: the streaming error and
+    # lineage ledgers carry the batch store's rows and schemas
+    work = str(tmp_path / "work")
+    stream_errors = spark.read.parquet(work + "/errors/epoch-*")
+    assert sorted(stream_errors.collect()) == sorted(
+        store.all_errors().collect()) == [
+        ("http://h1.x/missing", "FetchMiss: url not in corpus")]
+    stream_lineage = spark.read.parquet(work + "/lineage/epoch-*")
+    assert stream_lineage.schema == store.all_lineage().schema
+    assert stream_lineage.agg(F.sum("emitted_rows")).first()[0] \
+        == len(stream_recs)
 
 
 def test_stream_clean_corpus_mixes(spark, tmp_path):
@@ -559,11 +619,16 @@ def test_stream_clean_corpus_mixes(spark, tmp_path):
     assert len([i for i in got if i % 2 == 1]) < 20
 
 
-def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path):
-    """The streaming round body applies the SAME queue-entry URL
-    blocklist as CrawlConfig.blocked_domains: blocking h1.x keeps the
+@pytest.mark.parametrize("seen_mode", ["exact", "cuckoo"])
+@pytest.mark.parametrize("gate", ["blocklist", "robots"])
+def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path,
+                                                      gate, seen_mode):
+    """The streaming round body applies the SAME queue-entry gates as
+    the batch round: blocking h1.x — by the URL blocklist
+    (CrawlConfig.blocked_domains) or by a robots Disallow — keeps the
     whole h1.x subtree (seeds AND loop-back children) out of both
-    engines, and the drained record sets still match."""
+    engines, and the drained record sets still match under either
+    seen gate."""
     from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.rounds import (
         CrawlConfig,
@@ -571,7 +636,7 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path):
         run_crawl,
     )
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
-    from hepcrawl_spark.schema import POLITENESS_SCHEMA
+    from hepcrawl_spark.schema import POLITENESS_SCHEMA, ROBOTS_SCHEMA
     from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
 
     def page(url, links):
@@ -596,6 +661,12 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path):
         [("h0.x", 0.1, 4), ("h1.x", 0.1, 4)], POLITENESS_SCHEMA
     )
     seed_urls = sorted(tree)
+    robots = (spark.createDataFrame([("h1.x", ["/"], None)], ROBOTS_SCHEMA)
+              if gate == "robots" else None)
+    config = CrawlConfig(
+        seen_mode=seen_mode, num_shards=4, max_rounds=4, max_depth=2,
+        blocked_domains=("h1.x",) if gate == "blocklist" else (),
+    )
 
     # streaming engine, h1.x blocked (covers the blocked SEED s1 and
     # the blocked loop-back CHILD cross linked from an h0.x page)
@@ -606,8 +677,7 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path):
         .write.mode("append").parquet(str(frontier))
     out = drive_stream_crawl(
         spark, str(frontier), pages, str(tmp_path / "work"),
-        politeness=politeness, num_shards=4, max_depth=2,
-        blocked_domains=("h1.x",),
+        politeness=politeness, robots=robots, config=config,
     )
     assert out["drained"]
     stream_urls = sorted(
@@ -617,20 +687,40 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path):
     )
     assert stream_urls == ["http://h0.x/s0", "http://h0.x/s0/c0"]
 
-    # batch engine, same blocklist → identical record set
+    # batch engine, same config → identical record set
     ckpt = str(tmp_path / "ckpt")
     run_crawl(
         spark,
         make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls]),
-        pages, politeness=politeness, checkpoint_path=ckpt,
-        config=CrawlConfig(seen_mode="exact", max_rounds=4, max_depth=2,
-                           blocked_domains=("h1.x",)),
+        pages, politeness=politeness, robots=robots, checkpoint_path=ckpt,
+        config=config,
     )
     batch_urls = sorted(
         r.url for r in RoundStore(spark, ckpt).all_records()
         .select("url").collect()
     )
     assert batch_urls == stream_urls
+
+
+@pytest.mark.parametrize("field, value", [
+    ("seen_mode", "off"), ("seen_mode", "bloom"),
+    ("horizon", 10.0), ("pages_table", "pages_bucketed"),
+])
+def test_stream_crawl_round_rejects_batch_only_config(spark, tmp_path,
+                                                      field, value):
+    """Config the streaming crawl cannot honour fails on the driver
+    before any query starts, instead of a bare KeyError or silence."""
+    import dataclasses
+
+    from hepcrawl_spark.frontier.rounds import CrawlConfig
+    from hepcrawl_spark.streaming.pipeline import stream_crawl_round
+
+    config = dataclasses.replace(CrawlConfig(seen_mode="exact"),
+                                 **{field: value})
+    pages = spark.createDataFrame([], "url string, html binary")
+    with pytest.raises(ValueError, match=field):
+        stream_crawl_round(spark, str(tmp_path / "frontier"), pages,
+                           str(tmp_path / "work"), config=config)
 
 
 def test_read_warc_stream_parses_members(spark, tmp_path):
@@ -754,7 +844,7 @@ def test_stream_content_seen_ends_mirror_loop(spark, tmp_path):
     (self-link page) — without the checksum ledger and with URL-seen
     sharded off the dup URL, the loop would re-expand forever; the
     ledger ends it, and the state survives the per-round restarts."""
-    from hepcrawl_spark.frontier.rounds import make_seeds
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
     from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
 
@@ -772,7 +862,8 @@ def test_stream_content_seen_ends_mirror_loop(spark, tmp_path):
         .write.mode("append").parquet(str(frontier))
     out = drive_stream_crawl(
         spark, str(frontier), pages, str(tmp_path / "work"),
-        num_shards=2, max_depth=6, content_seen=True,
+        config=CrawlConfig(seen_mode="exact", num_shards=2, max_depth=6,
+                           content_seen=True),
     )
     assert out["drained"]
     recs = spark.read.parquet(out["records_path"] + "/epoch-*") \
