@@ -10,8 +10,11 @@ Scrapy reactor draining its scheduler, resumable via JOBDIR):
           → lineage/metrics → atomic checkpoint commit
 
 All state (queue, seen set, host offsets, records, lineage) lives in
-the RoundStore, so a killed job resumes from the last committed round
-bit-identically (test: tests/test_rounds.py).
+the round store, so a killed job resumes from the last committed round
+bit-identically (test: tests/test_rounds.py).  Every round has one
+shape: persist what it reads twice, commit, re-read the next round's
+state from the store, and release everything it persisted from one
+list the round owns (``caches``), on normal exit and on error alike.
 
 The queue-entry gates (``_entry_gates``) and everything after the
 fetch join (``_round_body``) are shared with the streaming crawl
@@ -21,6 +24,7 @@ in seen-gate placement, the ``schedule`` call and where state lands.
 
 from __future__ import annotations
 
+import tempfile
 from dataclasses import dataclass, field
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
@@ -29,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..extract import extract_records
 from ..schema import POLITENESS_SCHEMA, ROBOTS_SCHEMA
-from .checkpoint import RoundStore
+from .checkpoint import BaseRoundStore, RoundStore
 from .fingerprint import content_seen_flag, with_url_identity
 from .politeness import schedule
 from .robots import effective_politeness, robots_filter
@@ -117,36 +121,16 @@ def make_seeds(spark: SparkSession, seeds: List[Tuple[str, str, int]]) -> DataFr
     return with_url_identity(df.drop("canon_url", "url_host", "fingerprint"))
 
 
-def _local_ckpt(df: DataFrame) -> DataFrame:
-    """``localCheckpoint()`` + ownership marker, so the round loop can
-    later free the blocks with :func:`_release_local_checkpoint`
-    (caller-supplied frames never carry the marker and are never
-    touched)."""
-    out = df.localCheckpoint()
-    out._owned_ckpt = True
-    return out
+def _persist(df: DataFrame, caches: List[DataFrame]) -> DataFrame:
+    """``df.persist()``, registered in the round's ``caches``."""
+    caches.append(df.persist())
+    return caches[-1]
 
 
-def _release_local_checkpoint(df: Optional[DataFrame]) -> None:
-    """Free the executor blocks behind a frame the loop itself
-    ``localCheckpoint()``ed.  ``DataFrame.unpersist()`` cannot reach
-    them — checkpoint blocks belong to the internal RDD, not the
-    cache manager — so without this a long store-less crawl
-    accumulates one per-host-tiny block set per round until the
-    driver's periodic ContextCleaner GC notices the JVM-side RDD is
-    unreachable (spark.cleaner.periodicGC.interval, default 30 min).
-    Called only AFTER the round's actions have materialized every
-    frame that could otherwise recompute through the released blocks.
-    Best-effort: a reflection failure falls back to that GC path.
-    """
-    if df is None or not getattr(df, "_owned_ckpt", False):
-        return
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
+def _release(caches: List[DataFrame]) -> None:
+    """Unpersist everything the round registered in ``caches``."""
+    for df in caches:
+        df.unpersist()
 
 
 def _merge_offsets(old: Optional[DataFrame], new: DataFrame) -> DataFrame:
@@ -247,9 +231,9 @@ def _expand_children(records: DataFrame, scheduled: DataFrame,
     # permuted child seq).  With the cache there is exactly one
     # physical plan, one boundary sample, one partition-id evaluation;
     # every branch reads the same InMemoryRelation (and AQE does not
-    # re-plan inside cached plans).  run_crawl releases the cache once
-    # the next round's queue is materialized; direct callers can
-    # unpersist via the ``_expand_cache`` attribute on the result.
+    # re-plan inside cached plans).  _round_body registers the cache
+    # with the round, which releases it after commit; direct callers
+    # can unpersist via the ``_expand_cache`` attribute on the result.
     counts = (
         counts.repartitionByRange(n_buckets, *_order)
         .withColumn("_bkt", F.spark_partition_id())
@@ -352,11 +336,14 @@ class RoundOutputs(NamedTuple):
 
 def _round_body(fetched: DataFrame, scheduled: DataFrame,
                 content_state: Optional[DataFrame], round_no: int,
-                config: CrawlConfig) -> RoundOutputs:
+                config: CrawlConfig, caches: List[DataFrame]
+                ) -> RoundOutputs:
     """Everything after the fetch join: content-seen flag against the
     carried checksum state, extraction, errors, lineage and child
     expansion.  ``fetched`` is the raw ``scheduled`` ⋈ pages join;
     ``run_crawl`` and the streaming ``foreachBatch`` both call this.
+    The frames it persists (``fetched``, ``extracted``, the expansion
+    count cache) go into the caller's ``caches``.
     """
     if config.content_seen:
         # content-seen (Mercator §4.1): within-round first owner
@@ -380,7 +367,7 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
                 F.col("content_dup")
                 | F.coalesce("_seen_before", F.lit(False)),
             ).drop("_seen_before")
-    fetched = fetched.persist()
+    fetched = _persist(fetched, caches)
     miss_errors = fetched.filter(F.col("html").isNull()).select(
         "url", F.lit("FetchMiss: url not in corpus").alias("error")
     )
@@ -389,9 +376,9 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
         # the expensive half Mercator's test exists to skip:
         # content-dup pages are neither extracted nor expanded
         extract_src = extract_src.filter(~F.col("content_dup"))
-    extracted = extract_records(
+    extracted = _persist(extract_records(
         extract_src.select("url", "html", "format")
-    ).persist()
+    ), caches)
 
     records = extracted.filter(F.col("error").isNull())
     errors = extracted.filter(F.col("error").isNotNull()).select(
@@ -421,6 +408,7 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
         max_depth=config.max_depth,
         format_routes=config.child_format_routes,
     )
+    caches.append(children._expand_cache)
     if config.content_seen:
         # everything fetched this round is now "seen" content
         round_fps = fetched.filter(
@@ -434,16 +422,23 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
                         children, content_state)
 
 
+def _committed_state(store: BaseRoundStore, n: int) -> Tuple:
+    """(queue, seen, offsets, content) as round ``n`` committed them;
+    a table the round did not commit reads as None."""
+    return tuple(store.read_table(n, name)
+                 for name in ("queue", "seen", "offsets", "content"))
+
+
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
     pages: DataFrame,
     politeness: Optional[DataFrame] = None,
     robots: Optional[DataFrame] = None,
-    checkpoint_path: Optional[str] = None,
     config: CrawlConfig = CrawlConfig(),
-    store: Optional["RoundStore"] = None,
     host_priorities: Optional[DataFrame] = None,
+    *,
+    store: Optional[BaseRoundStore] = None,
 ) -> Dict:
     """Run the crawl to completion (or max_rounds); returns a summary.
 
@@ -456,15 +451,25 @@ def run_crawl(
     url equi-join — at cluster scale both sides are bucketed by
     url_host, making it shuffle-free; SURVEY.md §2.6 J5).
 
-    ``store`` may be any ``BaseRoundStore`` implementation (e.g.
-    ``SnapshotLogStore`` — the Iceberg-shaped metadata log); when None,
-    ``checkpoint_path`` selects the default filesystem ``RoundStore``.
+    Crawl state always lives in ``store``, any ``BaseRoundStore``
+    (``RoundStore(spark, path)``, or ``SnapshotLogStore`` — the
+    Iceberg-shaped metadata log): every round commits to it, the next
+    round re-reads its state from it, and a store that already holds
+    committed rounds resumes after the last one.  The former path
+    keyword is gone; pass ``store=RoundStore(spark, path)``.  A crawl
+    given no store (``perfbench``'s horizon probe) commits to a
+    throwaway ``RoundStore`` in a temporary directory that is removed
+    on return, so its summary has no ``manifest_path``.
     """
-    if store is None and checkpoint_path:
-        store = RoundStore(spark, checkpoint_path)
+    if store is None:
+        with tempfile.TemporaryDirectory(prefix="crawl-store-") as root:
+            totals = run_crawl(spark, seeds, pages, politeness, robots,
+                               config, host_priorities,
+                               store=RoundStore(spark, root))
+        del totals["manifest_path"]
+        return totals
     politeness = effective_politeness(politeness, robots)
 
-    frontier_tables: List[str] = []
     pages_buckets: Optional[int] = None
     if config.pages_table:
         from ..sources.bucketed import table_num_buckets
@@ -481,213 +486,164 @@ def run_crawl(
                 "write it with sources.bucketed.write_bucketed"
             )
 
-    round_no = 0
-    queue: Optional[DataFrame] = seeds
-    seen_state: Optional[DataFrame] = None
-    offsets: Optional[DataFrame] = None
-    content_state: Optional[DataFrame] = None
-
-    if store is not None:
-        last = store.last_committed_round()
-        if last is not None:
-            queue = store.read_table(last, "queue")
-            seen_state = store.read_table(last, "seen")
-            offsets = store.read_table(last, "offsets")
-            if config.content_seen:
-                content_state = store.read_table(last, "content")
-            round_no = last + 1
+    last = store.last_committed_round()
+    if last is None:
+        round_no = 0
+        queue, seen_state, offsets, content_state = seeds, None, None, None
+    else:
+        round_no = last + 1
+        queue, seen_state, offsets, content_state = _committed_state(
+            store, last)
 
     totals = {"records": 0, "errors": 0, "scheduled": 0, "blocked": 0,
               "url_filtered": 0, "content_dup": 0}
-    pending_expand_cache: Optional[DataFrame] = None
 
     while queue is not None and round_no < config.max_rounds:
-        queue = queue.persist()
-        # bookkeeping job 1 of 2: queue size + seq bounds in one action
-        # (the bounds feed the skew-safe rank's bucketing, saving its
-        # own driver round-trip; queue ⊇ admitted so the range is a
-        # valid superset)
-        qstats = queue.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("seq").alias("lo"), F.max("seq").alias("hi"),
-        ).first()
-        # qstats materialized the queue cache, so the previous round's
-        # bucketed expansion-count cache (store-less mode) is no longer
-        # reachable — release it
-        if pending_expand_cache is not None:
-            pending_expand_cache.unpersist()
-            pending_expand_cache = None
-        if qstats.n == 0:
-            queue.unpersist()
-            break
+        # every frame this round persists, and its bucketed frontier
+        # table: released in the finally below, after the commit or on
+        # error
+        caches: List[DataFrame] = []
+        ftable: Optional[str] = None
+        try:
+            queue = _persist(queue, caches)
+            # bookkeeping job 1 of 2: queue size + seq bounds in one
+            # action (the bounds feed the skew-safe rank's bucketing,
+            # saving its own driver round-trip; queue ⊇ admitted so the
+            # range is a valid superset)
+            qstats = queue.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+            ).first()
+            if qstats.n == 0:
+                break
 
-        allowed, blocked, url_filtered = _entry_gates(queue, robots, config)
-        prev_seen = seen_state
-        # rows an earlier round deferred past its horizon were admitted
-        # (and entered the seen state) then: they skip the gate now
-        fresh = F.col("seq") >= round_no * config.seq_block
-        carried = qstats.lo < round_no * config.seq_block
-        admitted, seen_state = filter_unseen(
-            allowed.filter(fresh) if carried else allowed, seen_state,
-            mode=config.seen_mode, num_shards=config.num_shards,
-        )
-        if carried:
-            admitted = admitted.unionByName(
-                allowed.filter(~fresh).select(_CAND_COLS))
-        if store is None and seen_state is not None \
-                and config.seen_mode != "off":
-            # same round-boundary plan truncation as next_queue below;
-            # the filter state is tiny (shard blobs / fingerprints)
-            seen_state = _local_ckpt(seen_state)
-        scheduled, deferred, new_offsets = schedule(
-            admitted, politeness, offsets,
-            round_start=round_no * (config.horizon or 0.0),
-            horizon=config.horizon,
-            seq_bounds=(int(qstats.lo), int(qstats.hi)),
-            host_priorities=host_priorities,
-        )
-        if config.collect_fetch_plans:
-            # pre-persist: the full scheduling lineage (rank windows,
-            # offset joins) is still inline here — the window plan
-            # guard reads these (tests/test_plans.py)
-            totals.setdefault("schedule_plans", []).append(
-                scheduled._jdf.queryExecution().executedPlan().toString()
+            allowed, blocked, url_filtered = _entry_gates(queue, robots,
+                                                          config)
+            # rows an earlier round deferred past its horizon were
+            # admitted (and entered the seen state) then: they skip the
+            # gate now
+            fresh = F.col("seq") >= round_no * config.seq_block
+            carried = qstats.lo < round_no * config.seq_block
+            admitted, seen_state = filter_unseen(
+                allowed.filter(fresh) if carried else allowed, seen_state,
+                mode=config.seen_mode, num_shards=config.num_shards,
+                caches=caches,
             )
-        if config.pages_table:
-            from ..sources.bucketed import write_bucketed
-
-            import re as _re
-
-            ftable = "crawl_frontier_%s_r%05d" % (
-                _re.sub(r"[^0-9a-zA-Z_]", "_", config.job_id or "job"),
-                round_no,
+            if carried:
+                admitted = admitted.unionByName(
+                    allowed.filter(~fresh).select(_CAND_COLS))
+            scheduled, deferred, new_offsets = schedule(
+                admitted, politeness, offsets,
+                round_start=round_no * (config.horizon or 0.0),
+                horizon=config.horizon,
+                seq_bounds=(int(qstats.lo), int(qstats.hi)),
+                host_priorities=host_priorities,
             )
-            # one bucketed write per round buys a shuffle-free fetch
-            # join (the write shuffles the SMALL frontier side once;
-            # the huge corpus side never moves)
-            write_bucketed(scheduled, ftable, buckets=pages_buckets)
-            scheduled = spark.table(ftable)
-            frontier_tables.append(ftable)
-        else:
-            scheduled = scheduled.persist()
-        prev_offsets = offsets
-        offsets = _merge_offsets(offsets, new_offsets)
-        if store is None:
-            # store-less (test/bench) mode: localCheckpoint truncates
-            # the ledger's LOGICAL plan (the full_outer merge otherwise
-            # nests every previous round's plan — see the next_queue
-            # comment below) and materializes the per-host-tiny table
-            # in one job; the store path gets the same truncation for
-            # free from the commit/re-read cycle below
-            offsets = _local_ckpt(offsets)
-        else:
-            offsets = offsets.persist()
-
-        fetched = scheduled.join(
-            pages.select("url", "html"), on="url", how="left"
-        )
-        if config.collect_fetch_plans:
-            totals.setdefault("fetch_plans", []).append(
-                fetched._jdf.queryExecution().executedPlan().toString()
-            )
-        out = _round_body(fetched, scheduled, content_state, round_no,
-                          config)
-        fetched, extracted, records, children = (
-            out.fetched, out.extracted, out.records, out.children)
-        expand_cache = getattr(children, "_expand_cache", None)
-        next_queue = deferred.select(_CAND_COLS).unionByName(
-            children.select(_CAND_COLS)
-        )
-        if config.collect_fetch_plans:
-            totals.setdefault("queue_plans", []).append(
-                next_queue._jdf.queryExecution().executedPlan().toString()
-            )
-        if store is None:
-            # TRUNCATE the logical plan at the round boundary.  persist()
-            # caches data but analysis still walks the full nested tree,
-            # and the two-phase expansion references its upstream several
-            # times (counts → cumsum/totals/bases), so the un-truncated
-            # queue plan grows geometrically with rounds — observed as a
-            # JVM stuck in analysis on 3+-round crawls.  localCheckpoint
-            # swaps the plan for a LogicalRDD (one eager job — the queue
-            # is materialized by the next round's qstats anyway); the
-            # store path gets the same truncation from commit/re-read.
-            next_queue = _local_ckpt(next_queue)
-            if expand_cache is not None:
-                # children are durably in the checkpoint blocks now
-                expand_cache.unpersist()
-                expand_cache = None
-        else:
-            next_queue = next_queue.persist()
-
-        # bookkeeping job 2 of 2: every round counter in ONE action —
-        # four 1-row aggregates cross-joined (each over an already
-        # persisted or narrow frame), instead of four separate jobs
-        # whose driver round-trips dominate at high round rates
-        stats = (
-            extracted.agg(
-                F.coalesce(F.sum(
-                    F.when(F.col("error").isNull(), 1).otherwise(0)
-                ), F.lit(0)).alias("n_records"),
-                F.coalesce(F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ), F.lit(0)).alias("n_extract_errors"),
-            )
-            .crossJoin(fetched.agg(
-                F.coalesce(F.sum(
-                    F.when(F.col("html").isNull(), 1).otherwise(0)
-                ), F.lit(0)).alias("n_fetch_miss"),
-                *([F.coalesce(F.sum(
-                    F.when(F.col("content_dup")
-                           & F.col("html").isNotNull(), 1).otherwise(0)
-                ), F.lit(0)).alias("n_content_dup")]
-                  if config.content_seen else []),
-            ))
-            .crossJoin(scheduled.agg(
-                F.count(F.lit(1)).alias("n_scheduled"),
-            ))
-            .crossJoin(blocked.agg(
-                F.count(F.lit(1)).alias("n_blocked"),
-            ))
-            .crossJoin(
-                url_filtered.agg(
-                    F.count(F.lit(1)).alias("n_url_filtered"),
+            if config.collect_fetch_plans:
+                # pre-persist: the full scheduling lineage (rank windows,
+                # offset joins) is still inline here — the window plan
+                # guard reads these (tests/test_plans.py)
+                totals.setdefault("schedule_plans", []).append(
+                    scheduled._jdf.queryExecution().executedPlan().toString()
                 )
-                if url_filtered is not None
-                else spark.range(1).select(
-                    F.lit(0).cast("long").alias("n_url_filtered")
-                )
-            )
-        ).first()
-        n_records = int(stats.n_records)
-        n_errors = int(stats.n_extract_errors) + int(stats.n_fetch_miss)
-        n_scheduled = int(stats.n_scheduled)
-        totals["records"] += n_records
-        totals["errors"] += n_errors
-        totals["scheduled"] += n_scheduled
-        totals["blocked"] += int(stats.n_blocked)
-        totals["url_filtered"] += int(stats.n_url_filtered)
-        if config.content_seen:
-            totals["content_dup"] += int(stats.n_content_dup)
-        # carry the checksum state with the URL-seen state's
-        # round-boundary plan truncation / release discipline
-        prev_content = content_state
-        content_state = out.content_state
-        if store is None and content_state is not None:
-            content_state = _local_ckpt(content_state)
+            if config.pages_table:
+                from ..sources.bucketed import write_bucketed
 
-        if store is not None:
+                import re as _re
+
+                ftable = "crawl_frontier_%s_r%05d" % (
+                    _re.sub(r"[^0-9a-zA-Z_]", "_", config.job_id or "job"),
+                    round_no,
+                )
+                # one bucketed write per round buys a shuffle-free fetch
+                # join (the write shuffles the SMALL frontier side once;
+                # the huge corpus side never moves)
+                write_bucketed(scheduled, ftable, buckets=pages_buckets)
+                scheduled = spark.table(ftable)
+            else:
+                scheduled = _persist(scheduled, caches)
+            offsets = _persist(_merge_offsets(offsets, new_offsets), caches)
+
+            fetched = scheduled.join(
+                pages.select("url", "html"), on="url", how="left"
+            )
+            if config.collect_fetch_plans:
+                totals.setdefault("fetch_plans", []).append(
+                    fetched._jdf.queryExecution().executedPlan().toString()
+                )
+            out = _round_body(fetched, scheduled, content_state, round_no,
+                              config, caches)
+            fetched, extracted = out.fetched, out.extracted
+            next_queue = deferred.select(_CAND_COLS).unionByName(
+                out.children.select(_CAND_COLS)
+            )
+            if config.collect_fetch_plans:
+                totals.setdefault("queue_plans", []).append(
+                    next_queue._jdf.queryExecution().executedPlan().toString()
+                )
+            next_queue = _persist(next_queue, caches)
+
+            # bookkeeping job 2 of 2: every round counter in ONE action —
+            # four 1-row aggregates cross-joined (each over an already
+            # persisted or narrow frame), instead of four separate jobs
+            # whose driver round-trips dominate at high round rates
+            stats = (
+                extracted.agg(
+                    F.coalesce(F.sum(
+                        F.when(F.col("error").isNull(), 1).otherwise(0)
+                    ), F.lit(0)).alias("n_records"),
+                    F.coalesce(F.sum(
+                        F.when(F.col("error").isNotNull(), 1).otherwise(0)
+                    ), F.lit(0)).alias("n_extract_errors"),
+                )
+                .crossJoin(fetched.agg(
+                    F.coalesce(F.sum(
+                        F.when(F.col("html").isNull(), 1).otherwise(0)
+                    ), F.lit(0)).alias("n_fetch_miss"),
+                    *([F.coalesce(F.sum(
+                        F.when(F.col("content_dup")
+                               & F.col("html").isNotNull(), 1).otherwise(0)
+                    ), F.lit(0)).alias("n_content_dup")]
+                      if config.content_seen else []),
+                ))
+                .crossJoin(scheduled.agg(
+                    F.count(F.lit(1)).alias("n_scheduled"),
+                ))
+                .crossJoin(blocked.agg(
+                    F.count(F.lit(1)).alias("n_blocked"),
+                ))
+                .crossJoin(
+                    url_filtered.agg(
+                        F.count(F.lit(1)).alias("n_url_filtered"),
+                    )
+                    if url_filtered is not None
+                    else spark.range(1).select(
+                        F.lit(0).cast("long").alias("n_url_filtered")
+                    )
+                )
+            ).first()
+            n_records = int(stats.n_records)
+            n_errors = int(stats.n_extract_errors) + int(stats.n_fetch_miss)
+            n_scheduled = int(stats.n_scheduled)
+            totals["records"] += n_records
+            totals["errors"] += n_errors
+            totals["scheduled"] += n_scheduled
+            totals["blocked"] += int(stats.n_blocked)
+            totals["url_filtered"] += int(stats.n_url_filtered)
+            if config.content_seen:
+                totals["content_dup"] += int(stats.n_content_dup)
+
             tables = {
                 "queue": next_queue,
                 "offsets": offsets,
-                "records": records.drop("new_urls"),
+                "records": out.records.drop("new_urls"),
                 "lineage": out.lineage,
                 "errors": out.errors,
             }
             if seen_state is not None and config.seen_mode != "off":
                 tables["seen"] = seen_state
-            if config.content_seen and content_state is not None:
-                tables["content"] = content_state
+            if config.content_seen and out.content_state is not None:
+                tables["content"] = out.content_state
             store.commit_round(
                 round_no, tables,
                 meta={"scheduled": n_scheduled, "records": n_records,
@@ -695,52 +651,22 @@ def run_crawl(
             )
             # re-read state from the committed round: the next round's
             # lineage starts from durable storage, not a live lineage
-            # chain — and the live cached frames can be dropped (a
+            # chain — and this round's cached frames can be dropped (a
             # long crawl must not accumulate one pinned RDD per round)
-            next_queue.unpersist()
-            offsets.unpersist()
-            if expand_cache is not None:
-                # the committed parquet holds the children now
-                expand_cache.unpersist()
-                expand_cache = None
-            next_queue = store.read_table(round_no, "queue")
-            offsets = store.read_table(round_no, "offsets")
-            if config.seen_mode != "off":
-                seen_state = store.read_table(round_no, "seen")
-            if config.content_seen:
-                content_state = store.read_table(round_no, "content")
-
-        queue.unpersist()
-        scheduled.unpersist()
-        fetched.unpersist()
-        extracted.unpersist()
-        if store is None:
-            # free the SUPERSEDED rounds' localCheckpoint blocks —
-            # every frame that could recompute through them has been
-            # materialized by this round's actions (next_queue/new
-            # seen/new offsets checkpoints were eager; stats ran the
-            # scheduled/fetched/extracted caches)
-            _release_local_checkpoint(prev_offsets)
-            if prev_seen is not seen_state:
-                _release_local_checkpoint(prev_seen)
-            if prev_content is not content_state:
-                _release_local_checkpoint(prev_content)
-            _release_local_checkpoint(queue)
-        pending_expand_cache = expand_cache
-        queue = next_queue
+            queue, seen_state, offsets, content_state = _committed_state(
+                store, round_no)
+        finally:
+            _release(caches)
+            if ftable is not None:  # the round's scratch table
+                spark.sql(f"DROP TABLE IF EXISTS {ftable}")
         round_no += 1
 
-    if pending_expand_cache is not None:
-        pending_expand_cache.unpersist()
-    for t in frontier_tables:  # per-round scratch tables
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
     totals["rounds"] = round_no
-    if store is not None:
-        # close-of-crawl push payload (K3/K4 analog,
-        # reference pipelines.py:159-192)
-        from ..sinks.manifest import write_crawl_manifest
+    # close-of-crawl push payload (K3/K4 analog,
+    # reference pipelines.py:159-192)
+    from ..sinks.manifest import write_crawl_manifest
 
-        totals["manifest_path"] = write_crawl_manifest(
-            store, job_id=config.job_id, totals=dict(totals)
-        )
+    totals["manifest_path"] = write_crawl_manifest(
+        store, job_id=config.job_id, totals=dict(totals)
+    )
     return totals

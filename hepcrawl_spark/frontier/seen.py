@@ -32,7 +32,7 @@ an exhausted cuckoo eviction walk fails the round (``_cuckoo_insert``).
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Tuple
+from typing import Callable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -132,9 +132,12 @@ def _probe_shard(cand_pdf: pd.DataFrame, shard, shard_id: int,
 
 def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
                    num_shards: int, new_shard: Callable, load_shard: Callable,
-                   insert: Callable) -> Tuple[DataFrame, DataFrame]:
+                   insert: Callable, caches: Optional[List[DataFrame]]
+                   ) -> Tuple[DataFrame, DataFrame]:
     """(admitted, new_state) through one cogroup probe per shard; a
-    shard object needs ``contains_many`` and ``to_bytes``."""
+    shard object needs ``contains_many`` and ``to_bytes``.  The probe
+    output is persisted (both results read it) and appended to
+    ``caches`` for the caller to release."""
     if state is None:
         state = empty_cuckoo_state(candidates.sparkSession)
     with_shard = candidates.withColumn(
@@ -162,6 +165,8 @@ def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
     unioned = with_shard.groupBy("shard").cogroup(
         state.groupBy("shard")
     ).applyInPandas(probe, _UNION_SCHEMA).persist()
+    if caches is not None:
+        caches.append(unioned)
     admitted = unioned.filter(F.col("row_kind") == "url").select(*names)
     new_state = unioned.filter(F.col("row_kind") == "state").select(
         "shard", "blob"
@@ -175,8 +180,15 @@ def filter_unseen(
     mode: str = "cuckoo",
     num_shards: int = 64,
     shard_buckets: int = 1 << 16,
+    *,
+    caches: Optional[List[DataFrame]] = None,
 ) -> Tuple[DataFrame, DataFrame | None]:
-    """(admitted, new_state).  ``candidates`` must carry CANDIDATE columns."""
+    """(admitted, new_state).  ``candidates`` must carry CANDIDATE columns.
+
+    The cuckoo and bloom probes persist their output; pass ``caches``
+    (a list the gate appends that frame to) to release it once both
+    results are materialized, as ``run_crawl`` does after its commit.
+    """
     spark = candidates.sparkSession
     candidates = candidates.select(*[n for n, _ in CANDIDATE_FIELDS])
 
@@ -199,7 +211,7 @@ def filter_unseen(
         return _sharded_probe(
             candidates, state, num_shards,
             lambda: CuckooShard(n_buckets=shard_buckets),
-            CuckooShard.from_bytes, _cuckoo_insert,
+            CuckooShard.from_bytes, _cuckoo_insert, caches,
         )
 
     if mode == "bloom":
@@ -221,7 +233,7 @@ def filter_unseen(
             lambda: BloomShard(m_bits=m_bits, k=8),
             BloomShard.from_bytes,
             # int64 (possibly negative) — BloomShard remaps to uint64
-            _insert_many,
+            _insert_many, caches,
         )
 
     raise ValueError(f"unknown seen mode: {mode!r}")

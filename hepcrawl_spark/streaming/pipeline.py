@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import glob
 import os
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -36,7 +36,8 @@ from ..extract import extract_records
 from ..frontier.politeness import schedule
 from ..frontier.robots import effective_politeness
 from ..frontier.rounds import (
-    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets, _round_body,
+    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets, _persist,
+    _release, _round_body,
 )
 from ..frontier.cuckoo import CuckooShard
 from ..frontier.seen import (
@@ -355,58 +356,58 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
         scheduled, _deferred, new_offsets = schedule(
             allowed, pol, offsets, host_priorities=host_priorities,
         )
-        scheduled = scheduled.persist()
-        write(scheduled.withColumn("epoch", F.lit(epoch)), "scheduled")
-        # the checksum ledger rebuilds a retried epoch from epoch-1's
-        # basis, exactly like the offsets ledger
-        prior_fps = (_prior_epoch(spark, work_path("content"), epoch)
-                     if config.content_seen else None)
-        out = _round_body(
-            scheduled.join(pages_slim, on="url", how="left"), scheduled,
-            prior_fps, epoch, config,
-        )
-        write(out.records.drop("new_urls").withColumn("epoch", F.lit(epoch)),
-              "records")
-        write(out.errors, "errors")
-        write(out.lineage, "lineage")
-        if config.content_seen:
-            write(out.content_state, "content")
-        write(_merge_offsets(offsets, new_offsets), "offsets")
-
-        children = out.children.select(_CAND_COLS)
-        # land children under a scratch dir, then give each part a
-        # FIXED per-epoch name inside the watched directory: the file
-        # source keys processed files by path, so a retried epoch
-        # re-creates the same paths and nothing double-enqueues
-        # a retried epoch may produce FEWER partitions than the first
-        # attempt; sweep every prior children-{epoch}-* first so the
-        # retry fully replaces its earlier output (stale higher-index
-        # files would be re-enqueued, and only the seen gate saves us)
-        for stale in glob.glob(os.path.join(
-                frontier_path, f"children-{epoch:09d}-*.parquet")):
-            os.remove(stale)
-        if not children.isEmpty():
-            # publish only non-empty rounds: Spark writes one (empty)
-            # part file even for an empty frame, and an always-growing
-            # watched dir would re-trigger empty micro-batches forever
-            # — the drained-frontier signal drive_stream_crawl watches
-            # for is "this round added no files"
-            scratch = work_path(f"children-{epoch:09d}")
-            children.write.mode("overwrite").parquet(scratch)
-            parts = sorted(
-                glob.glob(os.path.join(scratch, "part-*.parquet"))
+        # everything the epoch persists (scheduled, then _round_body's
+        # fetched, extracted and expansion count cache), released once
+        caches: List[DataFrame] = []
+        try:
+            scheduled = _persist(scheduled, caches)
+            write(scheduled.withColumn("epoch", F.lit(epoch)), "scheduled")
+            # the checksum ledger rebuilds a retried epoch from epoch-1's
+            # basis, exactly like the offsets ledger
+            prior_fps = (_prior_epoch(spark, work_path("content"), epoch)
+                         if config.content_seen else None)
+            out = _round_body(
+                scheduled.join(pages_slim, on="url", how="left"), scheduled,
+                prior_fps, epoch, config, caches,
             )
-            for i, p in enumerate(parts):
-                os.replace(p, os.path.join(
-                    frontier_path,
-                    f"children-{epoch:09d}-{i:05d}.parquet"
-                ))
-        expand_cache = getattr(out.children, "_expand_cache", None)
-        if expand_cache is not None:
-            expand_cache.unpersist()
-        out.extracted.unpersist()
-        out.fetched.unpersist()
-        scheduled.unpersist()
+            write(out.records.drop("new_urls")
+                  .withColumn("epoch", F.lit(epoch)), "records")
+            write(out.errors, "errors")
+            write(out.lineage, "lineage")
+            if config.content_seen:
+                write(out.content_state, "content")
+            write(_merge_offsets(offsets, new_offsets), "offsets")
+
+            children = out.children.select(_CAND_COLS)
+            # land children under a scratch dir, then give each part a
+            # FIXED per-epoch name inside the watched directory: the file
+            # source keys processed files by path, so a retried epoch
+            # re-creates the same paths and nothing double-enqueues
+            # a retried epoch may produce FEWER partitions than the first
+            # attempt; sweep every prior children-{epoch}-* first so the
+            # retry fully replaces its earlier output (stale higher-index
+            # files would be re-enqueued, and only the seen gate saves us)
+            for stale in glob.glob(os.path.join(
+                    frontier_path, f"children-{epoch:09d}-*.parquet")):
+                os.remove(stale)
+            if not children.isEmpty():
+                # publish only non-empty rounds: Spark writes one (empty)
+                # part file even for an empty frame, and an always-growing
+                # watched dir would re-trigger empty micro-batches forever
+                # — the drained-frontier signal drive_stream_crawl watches
+                # for is "this round added no files"
+                scratch = work_path(f"children-{epoch:09d}")
+                children.write.mode("overwrite").parquet(scratch)
+                parts = sorted(
+                    glob.glob(os.path.join(scratch, "part-*.parquet"))
+                )
+                for i, p in enumerate(parts):
+                    os.replace(p, os.path.join(
+                        frontier_path,
+                        f"children-{epoch:09d}-{i:05d}.parquet"
+                    ))
+        finally:
+            _release(caches)
 
     writer = (
         admitted.writeStream

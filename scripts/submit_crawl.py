@@ -89,12 +89,12 @@ def main() -> int:
             [(r.url, "html-generic", 0)
              for r in pages.select("url").orderBy("url").collect()],
         )
+    store = RoundStore(spark, args.checkpoint)
     summary = run_crawl(
-        spark, seeds, pages, checkpoint_path=args.checkpoint,
+        spark, seeds, pages, store=store,
         config=CrawlConfig(seen_mode="exact", max_rounds=args.max_rounds,
                            job_id=args.job_id),
     )
-    store = RoundStore(spark, args.checkpoint)
     records = store.all_records()
     n_out = 0
     if records is not None:

@@ -121,12 +121,13 @@ def test_pagination_empty_page_still_walks():
     assert records == [{"new_urls": ["https://api/page3"]}]
 
 
-def test_pagination_flow_three_pages_to_exhaustion(spark):
+def test_pagination_flow_three_pages_to_exhaustion(spark, tmp_path):
     """Crawl a 3-page APS Link-header sequence to exhaustion: one
     seed, records harvested from every page (frontier walk through
     _expand_children, not a spider loop)."""
     import json
 
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 
     with open(FIXTURE, "rb") as fh:
@@ -151,6 +152,7 @@ def test_pagination_flow_three_pages_to_exhaustion(spark):
     summary = run_crawl(
         spark, seeds, pages,
         config=CrawlConfig(seen_mode="off", max_rounds=8),
+        store=RoundStore(spark, str(tmp_path)),
     )
     assert summary["records"] == 3      # one article per page
     assert summary["scheduled"] == 3    # the walk visited every page

@@ -18,6 +18,7 @@ from hepcrawl_spark.extractors.elsevier import (
     extract_sd_splash,
 )
 from hepcrawl_spark.flows.enrichment import elsevier_sd_flow
+from hepcrawl_spark.frontier.checkpoint import RoundStore
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 
 RESPONSES = "/root/reference/tests/responses/elsevier"
@@ -88,7 +89,7 @@ def test_sd_splash_proof_marker():
     assert extract_sd_splash(PROOF_BODY) == [{"journal_volume": "proof"}]
 
 
-def test_atom_to_zip_to_sciencedirect_crawl(spark):
+def test_atom_to_zip_to_sciencedirect_crawl(spark, tmp_path):
     """Three frontier hops from one atom-feed seed: feed → zip
     packages (expanded in-batch) → member records → sciencedirect
     splash pages, with child formats routed by URL pattern."""
@@ -122,6 +123,7 @@ def test_atom_to_zip_to_sciencedirect_crawl(spark):
                 ),
             },
         ),
+        store=RoundStore(spark, str(tmp_path)),
     )
     assert summary["errors"] == 0
     assert summary["scheduled"] == 5    # feed + 2 zips + 2 splash pages

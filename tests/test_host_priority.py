@@ -102,19 +102,22 @@ def test_children_order_by_eff_but_inherit_base(spark):
     assert all(r.priority == 0 for r in rows)
 
 
-def test_run_crawl_boost_invariant_on_single_host(spark):
+def test_run_crawl_boost_invariant_on_single_host(spark, tmp_path):
     # one-host corpus: a uniform boost must change NOTHING (within-host
     # order is boost-free by construction)
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.sources.fixtures import fixture_pages
 
     pages = fixture_pages(spark, formats=["arxiv-oai"])
     urls = [r.url for r in pages.select("url").orderBy("url").collect()]
     seeds = make_seeds(spark, [(u, "arXiv", 0) for u in urls])
     plain = run_crawl(spark, seeds, pages,
-                      config=CrawlConfig(max_rounds=2))
+                      config=CrawlConfig(max_rounds=2),
+                      store=RoundStore(spark, str(tmp_path / "plain")))
     boosted = run_crawl(
         spark, seeds, pages, config=CrawlConfig(max_rounds=2),
-        host_priorities=_prio(spark, [("export.arxiv.org", 50)]))
+        host_priorities=_prio(spark, [("export.arxiv.org", 50)]),
+        store=RoundStore(spark, str(tmp_path / "boosted")))
     assert (plain["records"], plain["scheduled"]) == \
         (boosted["records"], boosted["scheduled"]) == (22, 12)
 

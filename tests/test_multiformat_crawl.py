@@ -40,7 +40,7 @@ def test_multiformat_crawl(spark, corpus, tmp_path_factory):
     )
     summary = run_crawl(
         spark, seeds_df, corpus, politeness=politeness,
-        checkpoint_path=ckpt,
+        store=RoundStore(spark, ckpt),
         config=CrawlConfig(seen_mode="exact", max_rounds=1),
     )
     assert summary["errors"] == 0

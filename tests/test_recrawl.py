@@ -81,6 +81,7 @@ def test_f12_f13_registered():
 def test_as_frontier_seeds_feeds_run_crawl(spark, tmp_path):
     # the freshness loop end-to-end: stale URLs re-enter the frontier
     # with their recrawl priority and actually get fetched again
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
     from hepcrawl_spark.sources.fixtures import fixture_pages
@@ -98,5 +99,6 @@ def test_as_frontier_seeds_feeds_run_crawl(spark, tmp_path):
     assert all(r.priority == 4 * (1 + 2) for r in got)  # 4 buckets x churn
     assert all(r.source == "recrawl" and r.depth == 0 for r in got)
     summary = run_crawl(spark, seeds, pages,
-                        config=CrawlConfig(max_rounds=2))
+                        config=CrawlConfig(max_rounds=2),
+                        store=RoundStore(spark, str(tmp_path / "store")))
     assert summary["records"] == 22 and summary["errors"] == 0

@@ -26,7 +26,7 @@ def test_single_round_crawl(spark, arxiv_pages):
     seeds = _arxiv_seeds(spark, arxiv_pages)
     with tempfile.TemporaryDirectory() as ckpt:
         summary = run_crawl(
-            spark, seeds, arxiv_pages, checkpoint_path=ckpt,
+            spark, seeds, arxiv_pages, store=RoundStore(spark, ckpt),
             config=CrawlConfig(seen_mode="off", max_rounds=4),
         )
         assert summary["records"] == 22
@@ -42,12 +42,13 @@ def test_single_round_crawl(spark, arxiv_pages):
 def test_fetch_miss_is_error_not_failure(spark, arxiv_pages):
     seeds = make_seeds(spark, [("http://nowhere.org/missing.xml", "arXiv", 0)])
     with tempfile.TemporaryDirectory() as ckpt:
-        summary = run_crawl(spark, seeds, arxiv_pages, checkpoint_path=ckpt)
+        summary = run_crawl(spark, seeds, arxiv_pages,
+                            store=RoundStore(spark, ckpt))
         assert summary["records"] == 0
         assert summary["errors"] == 1
 
 
-def test_robots_blocks(spark, arxiv_pages):
+def test_robots_blocks(spark, arxiv_pages, tmp_path):
     seeds = _arxiv_seeds(spark, arxiv_pages)
     robots = spark.createDataFrame(
         [("export.arxiv.org", ["/"], None)], ROBOTS_SCHEMA
@@ -55,45 +56,112 @@ def test_robots_blocks(spark, arxiv_pages):
     summary = run_crawl(
         spark, seeds, arxiv_pages, robots=robots,
         config=CrawlConfig(max_rounds=2),
+        store=RoundStore(spark, str(tmp_path)),
     )
     assert summary["blocked"] == 12
     assert summary["records"] == 0
 
 
-def test_seen_dedup_prevents_refetch(spark, arxiv_pages):
+def test_seen_dedup_prevents_refetch(spark, arxiv_pages, tmp_path):
     url = arxiv_pages.select("url").orderBy("url").first().url
     seeds = make_seeds(spark, [(url, "arXiv", 0), (url, "arXiv", 0)])
     with tempfile.TemporaryDirectory() as ckpt:
         summary = run_crawl(
-            spark, seeds, arxiv_pages, checkpoint_path=ckpt,
+            spark, seeds, arxiv_pages, store=RoundStore(spark, ckpt),
             config=CrawlConfig(seen_mode="exact"),
         )
         assert summary["scheduled"] == 1
     # parity mode: both admitted (reference dupefilter disabled)
     summary_off = run_crawl(
         spark, seeds, arxiv_pages, config=CrawlConfig(seen_mode="off"),
+        store=RoundStore(spark, str(tmp_path)),
     )
     assert summary_off["scheduled"] == 2
 
 
-def test_storeless_crawl_releases_checkpoint_blocks(spark, arxiv_pages):
-    # store-less rounds localCheckpoint the queue/seen/offsets ledgers;
-    # DataFrame.unpersist() cannot free those blocks (they belong to
-    # the internal RDD, not the cache manager), so without the explicit
-    # release a long crawl pins one block set per round until driver GC
-    seeds = _arxiv_seeds(spark, arxiv_pages)
-    jsc = spark.sparkContext._jsc.sc()
-    before = len(jsc.getRDDStorageInfo())
+_HOSTS = ("a.test", "b.test", "c.test")
+
+
+def _tree_pages(spark, depth=4):
+    """Per host a binary link tree ``depth`` levels deep whose pages
+    also link back to the root: every round fetches new pages, and
+    every round after the first re-offers a URL the seen gate holds."""
+    rows = []
+    for host in _HOSTS:
+        for d in range(depth + 1):
+            for i in range(2 ** d):
+                url = f"http://{host}/{d}/{i}"
+                links = [f"http://{host}/{d + 1}/{2 * i + j}"
+                         for j in (0, 1) if d < depth]
+                body = "".join(f"<a href='{u}'>k</a>"
+                               for u in links + [f"http://{host}/0/0"])
+                rows.append((url, f"<html><title>{url}</title>"
+                                  f"<body>{body}</body></html>"))
+    return _html_pages(spark, rows)
+
+
+def _tree_seeds(spark):
+    return make_seeds(spark, [(f"http://{h}/0/0", "html-generic", 0)
+                              for h in _HOSTS])
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("mode", ["exact", "cuckoo", "bloom"])
+def test_crawl_releases_round_caches(spark, tmp_path, mode):
+    # every frame a round persists (queue, scheduled, offsets, next
+    # queue, fetched, extracted, the expansion count cache and the
+    # seen-probe output) is released once the round has committed,
+    # so a long crawl pins nothing per round
+    pages = _tree_pages(spark)
+    seeds = _tree_seeds(spark)
+    before = _persistent_rdds(spark)
     summary = run_crawl(
-        spark, seeds, arxiv_pages,
-        config=CrawlConfig(seen_mode="exact", max_rounds=4),
+        spark, seeds, pages, store=RoundStore(spark, str(tmp_path)),
+        config=CrawlConfig(seen_mode=mode, num_shards=4, max_rounds=4),
     )
-    assert summary["records"] == 22
-    after = len(jsc.getRDDStorageInfo())
-    # only the FINAL round's superseded state may remain pinned
-    # (queue + seen + offsets of the last boundary), never one set
-    # per completed round
-    assert after - before <= 4, (before, after)
+    assert summary["rounds"] == 4
+    assert summary["records"] == 3 * (1 + 2 + 4 + 8)
+    assert _persistent_rdds(spark) == before
+
+
+class _FailingStore(RoundStore):
+    def commit_round(self, n, tables, meta=None):
+        if n == 1:
+            raise RuntimeError("commit of round 1 failed")
+        super().commit_round(n, tables, meta)
+
+
+def test_failed_round_leaves_no_tables_or_caches(spark, tmp_path):
+    # a round that raises still drops its bucketed frontier table and
+    # releases everything it persisted
+    import uuid
+
+    from hepcrawl_spark.sources.bucketed import write_bucketed
+
+    # fresh names: a crawl killed before its cleanup leaves its table
+    # locations in the warehouse directory, which outlives the session
+    job = "fail_" + uuid.uuid4().hex[:8]
+    pages_table = f"pages_{job}"
+    write_bucketed(_tree_pages(spark), pages_table, buckets=4)
+    seeds = _tree_seeds(spark)
+    before = _persistent_rdds(spark)
+    try:
+        with pytest.raises(RuntimeError, match="commit of round 1 failed"):
+            run_crawl(
+                spark, seeds, None,
+                store=_FailingStore(spark, str(tmp_path)),
+                config=CrawlConfig(seen_mode="cuckoo", num_shards=4,
+                                   max_rounds=4, pages_table=pages_table,
+                                   job_id=job),
+            )
+        assert [t.name for t in spark.catalog.listTables()
+                if t.name.startswith(f"crawl_frontier_{job}")] == []
+        assert _persistent_rdds(spark) == before
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {pages_table}")
 
 
 def test_kill_resume_produces_identical_output(spark, arxiv_pages):
@@ -103,18 +171,18 @@ def test_kill_resume_produces_identical_output(spark, arxiv_pages):
          tempfile.TemporaryDirectory() as resumed_ckpt:
         # uninterrupted run
         run_crawl(
-            spark, seeds, arxiv_pages, checkpoint_path=full_ckpt,
+            spark, seeds, arxiv_pages, store=RoundStore(spark, full_ckpt),
             config=CrawlConfig(seen_mode="exact", max_rounds=4),
         )
         full = RoundStore(spark, full_ckpt).all_records()
 
         # "killed" run: stop after round 0 (max_rounds=1), then resume
         run_crawl(
-            spark, seeds, arxiv_pages, checkpoint_path=resumed_ckpt,
+            spark, seeds, arxiv_pages, store=RoundStore(spark, resumed_ckpt),
             config=CrawlConfig(seen_mode="exact", max_rounds=1),
         )
         run_crawl(
-            spark, seeds, arxiv_pages, checkpoint_path=resumed_ckpt,
+            spark, seeds, arxiv_pages, store=RoundStore(spark, resumed_ckpt),
             config=CrawlConfig(seen_mode="exact", max_rounds=4),
         )
         resumed = RoundStore(spark, resumed_ckpt).all_records()
@@ -214,7 +282,7 @@ def test_expand_children_multi_record_parent_unique_seq(spark):
     ]
 
 
-def test_url_blocklist_gates_seeds(spark, arxiv_pages):
+def test_url_blocklist_gates_seeds(spark, arxiv_pages, tmp_path):
     # registrable-domain suffix rule: blocking arxiv.org catches the
     # export.arxiv.org fixture host at queue entry — nothing reaches
     # robots/scheduling, and the drop is counted per reason
@@ -223,6 +291,7 @@ def test_url_blocklist_gates_seeds(spark, arxiv_pages):
         spark, seeds, arxiv_pages,
         config=CrawlConfig(max_rounds=2,
                            blocked_domains=("arxiv.org",)),
+        store=RoundStore(spark, str(tmp_path)),
     )
     assert summary["url_filtered"] == 12
     assert summary["scheduled"] == 0
@@ -230,18 +299,21 @@ def test_url_blocklist_gates_seeds(spark, arxiv_pages):
     assert summary["blocked"] == 0    # distinct from the robots count
 
 
-def test_url_blocklist_extension_and_default_off(spark, arxiv_pages):
+def test_url_blocklist_extension_and_default_off(spark, arxiv_pages,
+                                                 tmp_path):
     seeds = _arxiv_seeds(spark, arxiv_pages)
     gated = run_crawl(
         spark, seeds, arxiv_pages,
         config=CrawlConfig(max_rounds=2,
                            blocked_extensions=("xml",)),
+        store=RoundStore(spark, str(tmp_path / "gated")),
     )
     assert gated["url_filtered"] == 12 and gated["records"] == 0
     # empty blocklists: the gate is inert and the crawl is unchanged
     plain = run_crawl(
         spark, _arxiv_seeds(spark, arxiv_pages), arxiv_pages,
         config=CrawlConfig(max_rounds=2),
+        store=RoundStore(spark, str(tmp_path / "plain")),
     )
     assert plain["url_filtered"] == 0
     assert plain["records"] == 22
@@ -254,7 +326,7 @@ def _html_pages(spark, pages):
     )
 
 
-def test_content_seen_suppresses_dup_processing(spark):
+def test_content_seen_suppresses_dup_processing(spark, tmp_path):
     # Mercator content-seen: two URLs serving byte-identical pages —
     # the later fetch is neither extracted nor expanded
     body = ("<html><title>Same</title><body>same words "
@@ -272,6 +344,7 @@ def test_content_seen_suppresses_dup_processing(spark):
     summary = run_crawl(
         spark, seeds, pages,
         config=CrawlConfig(content_seen=True, seen_mode="exact"),
+        store=RoundStore(spark, str(tmp_path / "seen")),
     )
     # one of a/b processed + kid = 2 records; the dup page counted
     assert summary["records"] == 2
@@ -279,12 +352,14 @@ def test_content_seen_suppresses_dup_processing(spark):
     # control: without the test both copies are processed
     control = run_crawl(
         spark, seeds, pages, config=CrawlConfig(seen_mode="exact"),
+        store=RoundStore(spark, str(tmp_path / "control")),
     )
     assert control["records"] == 3
     assert control["content_dup"] == 0
 
 
-def test_content_seen_state_carries_across_rounds_and_resume(spark):
+def test_content_seen_state_carries_across_rounds_and_resume(spark,
+                                                            tmp_path):
     # a links to b; b serves the SAME bytes as a (self-link page) —
     # round 1 must suppress b from the carried checksum state, even
     # when the crawl resumes from a checkpoint between the rounds
@@ -296,7 +371,8 @@ def test_content_seen_state_carries_across_rounds_and_resume(spark):
     ])
     seeds = make_seeds(spark, [("http://y.test/a", "html-generic", 0)])
     cfg = CrawlConfig(content_seen=True, seen_mode="off")
-    summary = run_crawl(spark, seeds, pages, config=cfg)
+    summary = run_crawl(spark, seeds, pages, config=cfg,
+                        store=RoundStore(spark, str(tmp_path)))
     # without content-seen this corpus is an infinite self-loop
     # (seen_mode off); the checksum state ends it at depth 1
     assert summary["records"] == 1
@@ -306,13 +382,13 @@ def test_content_seen_state_carries_across_rounds_and_resume(spark):
     import tempfile
     with tempfile.TemporaryDirectory() as ckpt:
         first = run_crawl(
-            spark, seeds, pages, checkpoint_path=ckpt,
+            spark, seeds, pages, store=RoundStore(spark, ckpt),
             config=CrawlConfig(content_seen=True, seen_mode="off",
                                max_rounds=1),
         )
         assert first["records"] == 1 and first["content_dup"] == 0
         resumed = run_crawl(
-            spark, seeds, pages, checkpoint_path=ckpt,
+            spark, seeds, pages, store=RoundStore(spark, ckpt),
             config=cfg,
         )
         # the resumed half sees round 0's checksums from the store

@@ -154,7 +154,7 @@ def test_horizon_deferred_urls_scheduled_exactly_once(spark, mode):
     with tempfile.TemporaryDirectory() as ckpt:
         totals = run_crawl(
             spark, make_seeds(spark, [(u, "html-generic", 0) for u in urls]),
-            pages, politeness=politeness, checkpoint_path=ckpt,
+            pages, politeness=politeness, store=RoundStore(spark, ckpt),
             config=CrawlConfig(seen_mode=mode, horizon=25.0, max_rounds=3))
         fetched = [r.url for r in RoundStore(spark, ckpt).all_records()
                    .select("url").collect()]
@@ -184,7 +184,7 @@ def test_resume_from_dense_layout_seen_blobs(spark):
     seeds = make_seeds(spark, [(f"{h}/", "html-generic", 0) for h in hosts])
 
     def crawl(ckpt, max_rounds):
-        run_crawl(spark, seeds, pages, checkpoint_path=ckpt,
+        run_crawl(spark, seeds, pages, store=RoundStore(spark, ckpt),
                   config=CrawlConfig(seen_mode="cuckoo", num_shards=4,
                                      max_rounds=max_rounds))
         return RoundStore(spark, ckpt).all_records().select("url", "title")

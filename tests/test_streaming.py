@@ -528,6 +528,8 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
     frontier.mkdir()
     seeds.select(CANDIDATE_SCHEMA.fieldNames()).coalesce(1) \
         .write.mode("append").parquet(str(frontier))
+    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persistent_rdds()
     out = drive_stream_crawl(
         spark, str(frontier), pages, str(tmp_path / "work"),
         politeness=politeness,
@@ -535,6 +537,8 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
     )
     # depth 0/1/2 rounds + one empty confirming round, then drained
     assert out["drained"] and 3 <= out["rounds"] <= 4
+    # every epoch released what it persisted
+    assert persistent_rdds() == before
 
     stream_recs = sorted(
         (r.url, r.title) for r in spark.read.parquet(
@@ -692,8 +696,8 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path,
     run_crawl(
         spark,
         make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls]),
-        pages, politeness=politeness, robots=robots, checkpoint_path=ckpt,
-        config=config,
+        pages, politeness=politeness, robots=robots,
+        store=RoundStore(spark, ckpt), config=config,
     )
     batch_urls = sorted(
         r.url for r in RoundStore(spark, ckpt).all_records()
