@@ -9,6 +9,13 @@ strictly monotone.  This mirrors the reference's JOBDIR persistence
 (/root/reference/hepcrawl/settings.py:120) — a killed job resumes from
 the last committed round and re-does at most one uncommitted round.
 
+A commit writes the round's tables concurrently, one Spark job per
+table on its own thread (``BaseRoundStore._write_round``), with the
+caller's counter query alongside them when ``meta`` is a callable; it
+waits for every write, re-raises the first failure, and only then
+creates the commit point.  A failed write therefore leaves the round
+uncommitted, exactly like a kill mid-commit.
+
 Two interchangeable implementations prove the contract actually swaps
 (tests/test_checkpoint_contract.py runs both through the same suite):
 
@@ -29,9 +36,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Dict, List, Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Dict, List, Optional, Union
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# a round's manifest payload, or a zero-argument callable computing it
+# (run alongside the table writes)
+Meta = Union[dict, Callable[[], dict], None]
 
 
 class CommitConflictError(RuntimeError):
@@ -75,10 +89,14 @@ class BaseRoundStore:
         raise NotImplementedError
 
     def commit_round(self, n: int, tables: Dict[str, DataFrame],
-                     meta: dict | None = None) -> None:
+                     meta: Meta = None) -> None:
         raise NotImplementedError
 
-    def read_table(self, n: int, name: str) -> Optional[DataFrame]:
+    def read_table(self, n: int, name: str,
+                   schema: Optional[StructType] = None
+                   ) -> Optional[DataFrame]:
+        """``schema`` (when the caller knows it) skips the parquet
+        schema-inference job."""
         raise NotImplementedError
 
     def read_meta(self, n: int) -> dict:
@@ -92,6 +110,35 @@ class BaseRoundStore:
 
     def records_path(self, n: int) -> str:
         raise NotImplementedError
+
+    # -- shared commit body ---------------------------------------------------
+
+    def _write_round(self, paths: Dict[str, str],
+                     tables: Dict[str, DataFrame], meta: Meta) -> dict:
+        """Write ``tables[name]`` to ``paths[name]`` concurrently, one
+        thread per table (and one for a callable ``meta``); wait for all
+        of them and re-raise the first failure.  Returns the resolved
+        meta; the caller creates the commit point only after this
+        returns."""
+        jobs = [
+            (lambda df=df, path=paths[name]:
+             df.write.mode("overwrite").parquet(path))
+            for name, df in tables.items()
+        ]
+        if callable(meta):
+            jobs.append(meta)
+        # the threads inherit the caller's local properties (job group,
+        # scheduler pool, tags); leaving the block waits for every job
+        with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(job))
+                       for job in jobs]
+        results = [fut.result() for fut in futures]
+        return results[-1] if callable(meta) else (meta or {})
+
+    def _read(self, path: str, schema: Optional[StructType]) -> DataFrame:
+        reader = self.spark.read
+        return (reader.schema(schema) if schema is not None
+                else reader).parquet(path)
 
     # -- cross-round readers (append-only outputs) ----------------------------
 
@@ -147,31 +194,31 @@ class RoundStore(BaseRoundStore):
         return max(committed) if committed else None
 
     def commit_round(self, n: int, tables: Dict[str, DataFrame],
-                     meta: dict | None = None) -> None:
+                     meta: Meta = None) -> None:
         if os.path.exists(self._manifest_path(n)):
             raise CommitConflictError(f"round {n} is already committed")
         rdir = self._round_dir(n)
         if os.path.exists(rdir):  # uncommitted leftovers from a kill
             shutil.rmtree(rdir)
         os.makedirs(rdir)
-        manifest = {"snapshot_id": n, "round": n, "tables": {},
-                    "meta": meta or {}}
-        for name, df in tables.items():
-            path = os.path.join(rdir, name)
-            df.write.mode("overwrite").parquet(path)
-            manifest["tables"][name] = name
+        meta = self._write_round(
+            {name: os.path.join(rdir, name) for name in tables}, tables, meta)
+        manifest = {"snapshot_id": n, "round": n,
+                    "tables": {name: name for name in tables}, "meta": meta}
         tmp = self._manifest_path(n) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         _atomic_create(tmp, self._manifest_path(n))  # commit point
 
-    def read_table(self, n: int, name: str) -> Optional[DataFrame]:
+    def read_table(self, n: int, name: str,
+                   schema: Optional[StructType] = None
+                   ) -> Optional[DataFrame]:
         if not os.path.exists(self._manifest_path(n)):
             return None
         path = os.path.join(self._round_dir(n), name)
         if not os.path.exists(path):
             return None
-        return self.spark.read.parquet(path)
+        return self._read(path, schema)
 
     def read_meta(self, n: int) -> dict:
         with open(self._manifest_path(n)) as fh:
@@ -255,23 +302,20 @@ class SnapshotLogStore(BaseRoundStore):
         return max(map(int, rounds)) if rounds else None
 
     def commit_round(self, n: int, tables: Dict[str, DataFrame],
-                     meta: dict | None = None) -> None:
+                     meta: Meta = None) -> None:
         cur = self._current_meta()
         if str(n) in cur["rounds"]:
             raise CommitConflictError(f"round {n} is already committed")
         ver = cur["snapshot_id"] + 1
         snap_dir = os.path.join(self.root, "data", f"snap-{ver:06d}-r{n}")
-        written = {}
-        for name, df in tables.items():
-            path = os.path.join(snap_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            written[name] = path
+        written = {name: os.path.join(snap_dir, name) for name in tables}
+        meta = self._write_round(written, tables, meta)
         new_meta = {
             "snapshot_id": ver,
             "parent_snapshot_id": cur["snapshot_id"],
             "rounds": {**cur["rounds"],
                        str(n): {"snapshot_id": ver, "tables": written,
-                                "meta": meta or {}}},
+                                "meta": meta}},
             "snapshots": cur["snapshots"] + [{"snapshot_id": ver,
                                               "round": n}],
         }
@@ -283,11 +327,13 @@ class SnapshotLogStore(BaseRoundStore):
     def _round_entry(self, n: int) -> Optional[dict]:
         return self._current_meta()["rounds"].get(str(n))
 
-    def read_table(self, n: int, name: str) -> Optional[DataFrame]:
+    def read_table(self, n: int, name: str,
+                   schema: Optional[StructType] = None
+                   ) -> Optional[DataFrame]:
         entry = self._round_entry(n)
         if entry is None or name not in entry["tables"]:
             return None
-        return self.spark.read.parquet(entry["tables"][name])
+        return self._read(entry["tables"][name], schema)
 
     def read_meta(self, n: int) -> dict:
         entry = self._round_entry(n)

@@ -26,7 +26,7 @@ the widest shuffle key is (host, priority, bucket).
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -97,6 +97,8 @@ def schedule(
     horizon: Optional[float] = None,
     seq_bounds: Optional[Tuple[int, int]] = None,
     host_priorities: Optional[DataFrame] = None,
+    *,
+    caches: Optional[List[DataFrame]] = None,
 ) -> Tuple[DataFrame, DataFrame, DataFrame]:
     """(scheduled, deferred, new_host_offsets).
 
@@ -117,6 +119,11 @@ def schedule(
     round and can never compound across rounds or depths.  Without the
     dimension ``eff_priority == priority`` (the reference-parity
     default: every reference request is priority 0).
+
+    ``caches`` (a list, as in ``seen.filter_unseen``): the ranked frame
+    is persisted and appended to it, so the three results share one
+    evaluation of the rank; the caller releases it.  Without ``caches``
+    nothing is persisted and each result re-derives the rank.
     """
     df = per_host_rank(admitted, seq_bounds=seq_bounds)
 
@@ -172,6 +179,9 @@ def schedule(
         F.col("_base")
         + F.floor((F.col("host_rank") - 1) / F.col("_conc")) * F.col("_delay"),
     )
+    if caches is not None:
+        caches.append(df.persist())
+        df = caches[-1]
 
     if horizon is not None:
         deadline = float(round_start) + float(horizon)

@@ -12,9 +12,12 @@ Scrapy reactor draining its scheduler, resumable via JOBDIR):
 All state (queue, seen set, host offsets, records, lineage) lives in
 the round store, so a killed job resumes from the last committed round
 bit-identically (test: tests/test_rounds.py).  Every round has one
-shape: persist what it reads twice, commit, re-read the next round's
-state from the store, and release everything it persisted from one
-list the round owns (``caches``), on normal exit and on error alike.
+shape: persist what it reads twice, commit (the round's tables are
+written concurrently, its counter query runs alongside them, and the
+commit point follows the last of them), re-read the next round's
+state from the store with schemas known here, and release everything
+it persisted from one list the round owns (``caches``), on normal exit
+and on error alike.
 
 The queue-entry gates (``_entry_gates``) and everything after the
 fetch join (``_round_body``) are shared with the streaming crawl
@@ -30,14 +33,15 @@ from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..extract import extract_records
-from ..schema import POLITENESS_SCHEMA, ROBOTS_SCHEMA
+from ..schema import HOST_OFFSETS_SCHEMA, POLITENESS_SCHEMA, ROBOTS_SCHEMA
 from .checkpoint import BaseRoundStore, RoundStore
 from .fingerprint import content_seen_flag, with_url_identity
 from .politeness import schedule
 from .robots import effective_politeness, robots_filter
-from .seen import CANDIDATE_SCHEMA, filter_unseen
+from .seen import CANDIDATE_SCHEMA, CUCKOO_STATE_SCHEMA, filter_unseen
 from .urlfilter import url_filter
 
 # spider name → pages format tag (the reference's spider choice is the
@@ -64,6 +68,25 @@ SOURCE_FORMATS = {
 }
 
 _CAND_COLS = CANDIDATE_SCHEMA.fieldNames()
+
+# error strings a lineage row keeps per partition (``error_rows``
+# counts them all)
+LINEAGE_ERROR_SAMPLES = 20
+
+# the state tables a round commits and the next round re-reads, with
+# their schemas: written conformed to them, read without inference
+_CONTENT_SCHEMA = StructType([StructField("content_fp", StringType())])
+_EXACT_SEEN_SCHEMA = StructType([StructField("fingerprint", LongType())])
+
+
+def _state_schemas(seen_mode: str) -> Dict[str, StructType]:
+    return {
+        "queue": CANDIDATE_SCHEMA,
+        "seen": (_EXACT_SEEN_SCHEMA if seen_mode == "exact"
+                 else CUCKOO_STATE_SCHEMA),
+        "offsets": HOST_OFFSETS_SCHEMA,
+        "content": _CONTENT_SCHEMA,
+    }
 
 
 @dataclass
@@ -385,20 +408,36 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
         "url", "error"
     ).unionByName(miss_errors)
 
-    # per-partition lineage + metrics (F8)
-    lineage = (
-        extracted.withColumn("_pid", F.spark_partition_id())
+    # per-partition lineage + metrics (F8).  ``errors`` samples the
+    # first LINEAGE_ERROR_SAMPLES errors of each partition in partition
+    # order: the rank filter runs as a window group limit on both sides
+    # of the shuffle, so no task ever holds more than that many strings
+    # of one partition; ``error_rows`` stays exact
+    tagged = extracted.withColumn("_pid", F.spark_partition_id())
+    samples = (
+        tagged.filter(F.col("error").isNotNull())
+        .withColumn("_pos", F.monotonically_increasing_id())
+        .withColumn("_rn", F.row_number().over(
+            Window.partitionBy("_pid").orderBy("_pos")))
+        .filter(F.col("_rn") <= LINEAGE_ERROR_SAMPLES)
         .groupBy("_pid")
+        .agg(F.array_sort(F.collect_list(F.struct("_pos", "error")))
+             .alias("_samples"))
+    )
+    lineage = (
+        tagged.groupBy("_pid")
         .agg(
             F.count(F.lit(1)).alias("input_rows"),
             F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("emitted_rows"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
-            F.collect_list("error").alias("errors"),
         )
+        .join(F.broadcast(samples), on="_pid", how="left")
         .select(
             F.lit(round_no).alias("round"),
             F.col("_pid").alias("partition_id"),
-            "input_rows", "emitted_rows", "error_rows", "errors",
+            "input_rows", "emitted_rows", "error_rows",
+            F.coalesce(F.col("_samples.error"),
+                       F.array().cast("array<string>")).alias("errors"),
         )
     )
 
@@ -422,11 +461,17 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
                         children, content_state)
 
 
-def _committed_state(store: BaseRoundStore, n: int) -> Tuple:
-    """(queue, seen, offsets, content) as round ``n`` committed them;
-    a table the round did not commit reads as None."""
-    return tuple(store.read_table(n, name)
+def _committed_state(store: BaseRoundStore, n: int, seen_mode: str) -> Tuple:
+    """(queue, seen, offsets, content) as round ``n`` committed them,
+    read with their schemas (no inference job); a table the round did
+    not commit reads as None."""
+    schemas = _state_schemas(seen_mode)
+    return tuple(store.read_table(n, name, schema=schemas[name])
                  for name in ("queue", "seen", "offsets", "content"))
+
+
+def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+    return df.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
 
 
 def run_crawl(
@@ -493,7 +538,7 @@ def run_crawl(
     else:
         round_no = last + 1
         queue, seen_state, offsets, content_state = _committed_state(
-            store, last)
+            store, last, config.seen_mode)
 
     totals = {"records": 0, "errors": 0, "scheduled": 0, "blocked": 0,
               "url_filtered": 0, "content_dup": 0}
@@ -532,22 +577,23 @@ def run_crawl(
             if carried:
                 admitted = admitted.unionByName(
                     allowed.filter(~fresh).select(_CAND_COLS))
+            # the ranked frame is persisted once in ``caches``: scheduled,
+            # deferred and new_offsets all read it
             scheduled, deferred, new_offsets = schedule(
                 admitted, politeness, offsets,
                 round_start=round_no * (config.horizon or 0.0),
                 horizon=config.horizon,
                 seq_bounds=(int(qstats.lo), int(qstats.hi)),
                 host_priorities=host_priorities,
+                caches=caches,
             )
             if config.collect_fetch_plans:
-                # pre-persist: the full scheduling lineage (rank windows,
-                # offset joins) is still inline here — the window plan
-                # guard reads these (tests/test_plans.py)
+                # the window plan guard reads these (tests/test_plans.py)
                 totals.setdefault("schedule_plans", []).append(
                     scheduled._jdf.queryExecution().executedPlan().toString()
                 )
             if config.pages_table:
-                from ..sources.bucketed import write_bucketed
+                from ..sources.bucketed import clear_table, write_bucketed
 
                 import re as _re
 
@@ -555,14 +601,16 @@ def run_crawl(
                     _re.sub(r"[^0-9a-zA-Z_]", "_", config.job_id or "job"),
                     round_no,
                 )
+                # a crawl killed inside this round left the table's
+                # location behind; the write below cannot create the
+                # table over it
+                clear_table(spark, ftable)
                 # one bucketed write per round buys a shuffle-free fetch
                 # join (the write shuffles the SMALL frontier side once;
                 # the huge corpus side never moves)
                 write_bucketed(scheduled, ftable, buckets=pages_buckets)
                 scheduled = spark.table(ftable)
-            else:
-                scheduled = _persist(scheduled, caches)
-            offsets = _persist(_merge_offsets(offsets, new_offsets), caches)
+            offsets = _merge_offsets(offsets, new_offsets)
 
             fetched = scheduled.join(
                 pages.select("url", "html"), on="url", how="left"
@@ -578,16 +626,18 @@ def run_crawl(
                 out.children.select(_CAND_COLS)
             )
             if config.collect_fetch_plans:
-                totals.setdefault("queue_plans", []).append(
-                    next_queue._jdf.queryExecution().executedPlan().toString()
-                )
-            next_queue = _persist(next_queue, caches)
+                for name, df in (("queue_plans", next_queue),
+                                 ("offsets_plans", offsets)):
+                    totals.setdefault(name, []).append(
+                        df._jdf.queryExecution().executedPlan().toString())
 
             # bookkeeping job 2 of 2: every round counter in ONE action —
-            # four 1-row aggregates cross-joined (each over an already
-            # persisted or narrow frame), instead of four separate jobs
-            # whose driver round-trips dominate at high round rates
-            stats = (
+            # four 1-row aggregates cross-joined (each over a persisted or
+            # narrow frame), instead of four separate jobs whose driver
+            # round-trips dominate at high round rates.  The store runs it
+            # alongside the table writes and puts its result in the
+            # round's manifest
+            stats_query = (
                 extracted.agg(
                     F.coalesce(F.sum(
                         F.when(F.col("error").isNull(), 1).otherwise(0)
@@ -621,40 +671,43 @@ def run_crawl(
                         F.lit(0).cast("long").alias("n_url_filtered")
                     )
                 )
-            ).first()
-            n_records = int(stats.n_records)
-            n_errors = int(stats.n_extract_errors) + int(stats.n_fetch_miss)
-            n_scheduled = int(stats.n_scheduled)
-            totals["records"] += n_records
-            totals["errors"] += n_errors
-            totals["scheduled"] += n_scheduled
-            totals["blocked"] += int(stats.n_blocked)
-            totals["url_filtered"] += int(stats.n_url_filtered)
-            if config.content_seen:
-                totals["content_dup"] += int(stats.n_content_dup)
+            )
 
+            def round_meta() -> dict:
+                stats = stats_query.first()
+                n_records = int(stats.n_records)
+                n_errors = int(stats.n_extract_errors) + int(stats.n_fetch_miss)
+                n_scheduled = int(stats.n_scheduled)
+                totals["records"] += n_records
+                totals["errors"] += n_errors
+                totals["scheduled"] += n_scheduled
+                totals["blocked"] += int(stats.n_blocked)
+                totals["url_filtered"] += int(stats.n_url_filtered)
+                if config.content_seen:
+                    totals["content_dup"] += int(stats.n_content_dup)
+                return {"scheduled": n_scheduled, "records": n_records,
+                        "errors": n_errors}
+
+            schemas = _state_schemas(config.seen_mode)
             tables = {
-                "queue": next_queue,
-                "offsets": offsets,
+                "queue": _conform(next_queue, schemas["queue"]),
+                "offsets": _conform(offsets, schemas["offsets"]),
                 "records": out.records.drop("new_urls"),
                 "lineage": out.lineage,
                 "errors": out.errors,
             }
             if seen_state is not None and config.seen_mode != "off":
-                tables["seen"] = seen_state
+                tables["seen"] = _conform(seen_state, schemas["seen"])
             if config.content_seen and out.content_state is not None:
-                tables["content"] = out.content_state
-            store.commit_round(
-                round_no, tables,
-                meta={"scheduled": n_scheduled, "records": n_records,
-                      "errors": n_errors},
-            )
+                tables["content"] = _conform(out.content_state,
+                                             schemas["content"])
+            store.commit_round(round_no, tables, meta=round_meta)
             # re-read state from the committed round: the next round's
             # lineage starts from durable storage, not a live lineage
             # chain — and this round's cached frames can be dropped (a
             # long crawl must not accumulate one pinned RDD per round)
             queue, seen_state, offsets, content_state = _committed_state(
-                store, round_no)
+                store, round_no, config.seen_mode)
         finally:
             _release(caches)
             if ftable is not None:  # the round's scratch table

@@ -40,6 +40,19 @@ def write_bucketed(df: DataFrame, table: str, key: str = "url",
     )
 
 
+def clear_table(spark: SparkSession, table: str) -> None:
+    """Drop ``table`` and delete its default warehouse location.  A job
+    killed before dropping a managed table leaves the location without
+    the (in-memory) catalog entry, and ``saveAsTable`` then refuses to
+    create the table there (``LOCATION_ALREADY_EXISTS``)."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), table.lower())
+    path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
+        path, True)
+
+
 def bucketed_fetch_join(spark: SparkSession, frontier_table: str,
                         pages_table: str) -> DataFrame:
     """frontier ⋈ pages on url over co-bucketed tables — the

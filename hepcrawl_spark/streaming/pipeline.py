@@ -36,7 +36,7 @@ from ..extract import extract_records
 from ..frontier.politeness import schedule
 from ..frontier.robots import effective_politeness
 from ..frontier.rounds import (
-    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets, _persist,
+    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets,
     _release, _round_body,
 )
 from ..frontier.cuckoo import CuckooShard
@@ -353,14 +353,15 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
 
         allowed, _blocked, _url_filtered = _entry_gates(df, robots, config)
         offsets = _prior_epoch(spark, work_path("offsets"), epoch)
-        scheduled, _deferred, new_offsets = schedule(
-            allowed, pol, offsets, host_priorities=host_priorities,
-        )
-        # everything the epoch persists (scheduled, then _round_body's
-        # fetched, extracted and expansion count cache), released once
+        # everything the epoch persists (schedule's ranked frame, then
+        # _round_body's fetched, extracted and expansion count cache),
+        # released once
         caches: List[DataFrame] = []
         try:
-            scheduled = _persist(scheduled, caches)
+            scheduled, _deferred, new_offsets = schedule(
+                allowed, pol, offsets, host_priorities=host_priorities,
+                caches=caches,
+            )
             write(scheduled.withColumn("epoch", F.lit(epoch)), "scheduled")
             # the checksum ledger rebuilds a retried epoch from epoch-1's
             # basis, exactly like the offsets ledger

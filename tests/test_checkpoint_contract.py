@@ -161,3 +161,71 @@ def test_run_crawl_kill_resume_on_snapshotlog_store(spark):
         with open(summary["manifest_path"]) as fh:
             assert json.load(fh)["errors"] == []
     pages.unpersist()
+
+
+def _link_tree(spark):
+    """Two hosts, each a binary link tree three levels deep."""
+    rows = []
+    for host in ("a.test", "b.test"):
+        for d in range(4):
+            for i in range(2 ** d):
+                links = "".join(
+                    f"<a href='http://{host}/{d + 1}/{2 * i + j}'>k</a>"
+                    for j in (0, 1) if d < 3)
+                url = f"http://{host}/{d}/{i}"
+                rows.append((url, bytearray(
+                    f"<html><title>{url}</title><body>{links}</body></html>"
+                    .encode())))
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    seeds = make_seeds(spark, [(f"http://{h}/0/0", "html-generic", 0)
+                               for h in ("a.test", "b.test")])
+    return pages, seeds
+
+
+@pytest.mark.parametrize("store_cls", STORES)
+def test_failed_table_write_leaves_round_uncommitted(spark, tmp_path,
+                                                     store_cls):
+    # one of round 1's concurrent table writes raises: the error
+    # propagates, no commit point appears, the round's caches are
+    # released, and resuming the store gives the uninterrupted crawl
+    from pyspark.sql import functions as F
+
+    def boom(value):  # nested: pickled by value for the Python workers
+        raise RuntimeError("planted write failure")
+
+    class FailingStore(store_cls):
+        def commit_round(self, n, tables, meta=None):
+            if n == 1:
+                tables = {**tables, "offsets": tables["offsets"].withColumn(
+                    "url_host", F.udf(boom, "string")("url_host"))}
+            super().commit_round(n, tables, meta)
+
+    pages, seeds = _link_tree(spark)
+    config = CrawlConfig(seen_mode="cuckoo", num_shards=4, max_rounds=4)
+    full_root, root = str(tmp_path / "full"), str(tmp_path / "cut")
+    run_crawl(spark, seeds, pages, config=config,
+              store=store_cls(spark, full_root))
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="planted write failure"):
+        run_crawl(spark, seeds, pages, config=config,
+                  store=FailingStore(spark, root))
+    store = store_cls(spark, root)
+    assert store.last_committed_round() == 0
+    assert [s["round"] for s in store.snapshot_log()] == [0]
+    if store_cls is RoundStore:
+        assert not os.path.exists(store._manifest_path(1))
+    else:
+        assert store._current_version() == 1
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+    summary = run_crawl(spark, seeds, pages, config=config,
+                        store=store_cls(spark, root))
+    assert summary["rounds"] == 4
+
+    def records(r):
+        return sorted(map(tuple, store_cls(spark, r).all_records()
+                          .select("url", "title").collect()))
+
+    assert len(records(full_root)) == 2 * (1 + 2 + 4 + 8)
+    assert records(root) == records(full_root)

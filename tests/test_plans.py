@@ -432,6 +432,88 @@ def test_run_crawl_plans_have_no_unpartitioned_window(spark, tmp_path):
             )
 
 
+def _outside_caches(plan: str) -> str:
+    """``plan`` without the cached plans printed under each
+    InMemoryRelation (they are indented deeper than the relation)."""
+    kept, cut = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and col > cut:
+            continue
+        cut = col if "InMemoryRelation" in line else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def _host_tree_crawl_inputs(spark):
+    from hepcrawl_spark.frontier.rounds import make_seeds
+    from hepcrawl_spark.schema import POLITENESS_SCHEMA
+
+    rows, seed_urls = [], []
+    for h in range(3):
+        for i in range(6):
+            url = f"http://h{h}.x/s{i}"
+            links = "".join(f'<a href="{url}/c{j}">x</a>' for j in range(2))
+            rows.append((url, f"<html><title>{url}</title>"
+                              f"<body>{links}</body></html>".encode()))
+            rows.extend((f"{url}/c{j}", f"<html><title>{url}/c{j}</title>"
+                                        f"</html>".encode())
+                        for j in range(2))
+            seed_urls.append(url)
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    seeds = make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls])
+    politeness = spark.createDataFrame(
+        [(f"h{h}.x", 1.0, 1) for h in range(3)], POLITENESS_SCHEMA)
+    return pages, seeds, politeness
+
+
+def test_run_crawl_commit_plans_read_the_persisted_rank(spark, tmp_path):
+    # schedule persists its ranked frame once per round: the committed
+    # next queue (deferred rows + children) and the merged host offsets
+    # read that cache and carry no per-host rank Window of their own
+    # (before, the offsets write re-ran the whole rank)
+    import re
+
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
+
+    pages, seeds, politeness = _host_tree_crawl_inputs(spark)
+    summary = run_crawl(
+        spark, seeds, pages, politeness,
+        config=CrawlConfig(seen_mode="exact", max_rounds=3, horizon=3.0,
+                           collect_fetch_plans=True),
+        store=RoundStore(spark, str(tmp_path)),
+    )
+    assert summary["rounds"] == 3
+    plans = summary["queue_plans"] + summary["offsets_plans"]
+    assert len(plans) == 6
+    rank_window = re.compile(r"windowspecdefinition\(url_host#")
+    for plan in plans:
+        assert rank_window.search(plan)     # inside the cached rank
+        own = _outside_caches(plan)
+        assert "InMemoryTableScan" in own
+        assert not rank_window.search(own), own
+
+
+def test_repeat_crawl_compiles_no_new_code(spark, tmp_path):
+    # the session's generated-code cache holds a whole crawl's classes:
+    # an identical second crawl compiles nothing
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    pages, seeds, politeness = _host_tree_crawl_inputs(spark)
+    compiled = []
+    for name in ("cold", "repeat"):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        run_crawl(spark, seeds, pages, politeness,
+                  config=CrawlConfig(seen_mode="cuckoo", num_shards=4,
+                                     max_rounds=3, horizon=3.0),
+                  store=RoundStore(spark, str(tmp_path / name)))
+        compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] == 0, compiled
+
+
 def test_s06_int8_ann_jvm_only_broadcast_queries(spark):
     # SQ8 top-k: the query side broadcasts against the streamed corpus
     # (brute force is all-pairs by definition, so the nested-loop join

@@ -164,6 +164,91 @@ def test_failed_round_leaves_no_tables_or_caches(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {pages_table}")
 
 
+def _records(store):
+    return sorted(map(tuple, store.all_records()
+                      .select("url", "title").collect()))
+
+
+def test_bucketed_kill_resume_over_stale_frontier_location(spark, tmp_path):
+    # a crawl killed inside a bucketed round leaves that round's
+    # crawl_frontier_* location in the warehouse (the in-memory catalog
+    # entry dies with the session); the resumed round must write over it
+    import os
+    import uuid
+
+    from hepcrawl_spark.sources.bucketed import write_bucketed
+
+    job = "stale_" + uuid.uuid4().hex[:8]
+    pages_table = f"pages_{job}"
+    write_bucketed(_tree_pages(spark), pages_table, buckets=4)
+    seeds = _tree_seeds(spark)
+
+    def crawl(root, max_rounds, job_id):
+        return run_crawl(
+            spark, seeds, None, store=RoundStore(spark, str(root)),
+            config=CrawlConfig(seen_mode="cuckoo", num_shards=4,
+                               max_rounds=max_rounds,
+                               pages_table=pages_table, job_id=job_id),
+        )
+
+    try:
+        crawl(tmp_path / "full", 4, job + "_full")
+        crawl(tmp_path / "cut", 1, job)
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        stale = os.path.join(warehouse.removeprefix("file:"),
+                             f"crawl_frontier_{job}_r00001")
+        spark.range(3).write.parquet(stale)
+        summary = crawl(tmp_path / "cut", 4, job)
+        assert summary["rounds"] == 4
+        full = _records(RoundStore(spark, str(tmp_path / "full")))
+        assert len(full) == 3 * (1 + 2 + 4 + 8)
+        assert _records(RoundStore(spark, str(tmp_path / "cut"))) == full
+        assert not os.path.exists(stale)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {pages_table}")
+
+
+def test_lineage_error_samples_are_bounded(spark):
+    # one partition with more extraction errors than the sample bound:
+    # the lineage row keeps LINEAGE_ERROR_SAMPLES strings and still
+    # counts every error
+    from hepcrawl_spark.frontier.rounds import (
+        LINEAGE_ERROR_SAMPLES,
+        _release,
+        _round_body,
+    )
+
+    n_bad, n_good = LINEAGE_ERROR_SAMPLES + 15, 5
+    rows = [(f"http://e.test/bad{i:03d}", "no-such-format")
+            for i in range(n_bad)]
+    rows += [(f"http://e.test/good{i}", "html-generic")
+             for i in range(n_good)]
+    scheduled = spark.createDataFrame(
+        [(u, fmt, float(i), 0, 0, i, 0, "t") for i, (u, fmt) in
+         enumerate(rows)],
+        "url string, format string, fetch_ts double, priority long, "
+        "eff_priority long, seq long, depth int, source string",
+    ).coalesce(1)
+    fetched = scheduled.withColumn(
+        "html", F.encode(F.concat(F.lit("<html><title>"), F.col("url"),
+                                  F.lit("</title></html>")), "utf-8"))
+    caches = []
+    try:
+        out = _round_body(fetched, scheduled, None, 0, CrawlConfig(), caches)
+        lineage = out.lineage.collect()
+        errors = {r.url: r.error for r in out.errors.collect()}
+    finally:
+        _release(caches)
+    assert len(lineage) == 1
+    row = lineage[0]
+    assert row.input_rows == n_bad + n_good
+    assert row.emitted_rows == n_good
+    assert row.error_rows == n_bad
+    assert len(row.errors) == LINEAGE_ERROR_SAMPLES
+    assert set(row.errors) <= set(errors.values())
+    assert len(errors) == n_bad
+
+
 def test_kill_resume_produces_identical_output(spark, arxiv_pages):
     seeds = _arxiv_seeds(spark, arxiv_pages)
 
