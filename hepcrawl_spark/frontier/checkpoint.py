@@ -10,11 +10,11 @@ strictly monotone.  This mirrors the reference's JOBDIR persistence
 the last committed round and re-does at most one uncommitted round.
 
 A commit writes the round's tables concurrently, one Spark job per
-table on its own thread (``BaseRoundStore._write_round``), with the
-caller's counter query alongside them when ``meta`` is a callable; it
-waits for every write, re-raises the first failure, and only then
-creates the commit point.  A failed write therefore leaves the round
-uncommitted, exactly like a kill mid-commit.
+table on its own thread (``BaseRoundStore._write_round``); it waits
+for every write, re-raises the first failure, resolves the round's
+``meta`` and only then creates the commit point.  A failed write
+therefore leaves the round uncommitted, exactly like a kill
+mid-commit.
 
 Two interchangeable implementations prove the contract actually swaps
 (tests/test_checkpoint_contract.py runs both through the same suite):
@@ -43,8 +43,9 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# a round's manifest payload, or a zero-argument callable computing it
-# (run alongside the table writes)
+# a round's manifest payload, or a zero-argument callable returning it,
+# called once every table write has returned (so it can read counts the
+# writes observed)
 Meta = Union[dict, Callable[[], dict], None]
 
 
@@ -116,24 +117,21 @@ class BaseRoundStore:
     def _write_round(self, paths: Dict[str, str],
                      tables: Dict[str, DataFrame], meta: Meta) -> dict:
         """Write ``tables[name]`` to ``paths[name]`` concurrently, one
-        thread per table (and one for a callable ``meta``); wait for all
-        of them and re-raise the first failure.  Returns the resolved
-        meta; the caller creates the commit point only after this
-        returns."""
-        jobs = [
-            (lambda df=df, path=paths[name]:
-             df.write.mode("overwrite").parquet(path))
-            for name, df in tables.items()
-        ]
-        if callable(meta):
-            jobs.append(meta)
+        thread per table; wait for all of them and re-raise the first
+        failure.  Returns the resolved meta; the caller creates the
+        commit point only after this returns."""
         # the threads inherit the caller's local properties (job group,
         # scheduler pool, tags); leaving the block waits for every job
-        with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
-            futures = [pool.submit(inheritable_thread_target(self.spark)(job))
-                       for job in jobs]
-        results = [fut.result() for fut in futures]
-        return results[-1] if callable(meta) else (meta or {})
+        with ThreadPoolExecutor(max_workers=max(1, len(tables))) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(
+                    lambda df=df, path=paths[name]:
+                    df.write.mode("overwrite").parquet(path)))
+                for name, df in tables.items()
+            ]
+        for fut in futures:
+            fut.result()
+        return (meta() if callable(meta) else meta) or {}
 
     def _read(self, path: str, schema: Optional[StructType]) -> DataFrame:
         reader = self.spark.read

@@ -19,7 +19,17 @@ from pyspark.sql import functions as F
 def robots_filter(
     candidates: DataFrame, robots: Optional[DataFrame]
 ) -> Tuple[DataFrame, DataFrame]:
-    """(allowed, blocked).  ``robots`` columns: url_host,
+    """(allowed, blocked): ``robots_verdict`` split on its column."""
+    verdict = robots_verdict(candidates, robots)
+    blocked = F.col("robots_blocked")
+    return (verdict.filter(~blocked).drop("robots_blocked"),
+            verdict.filter(blocked).drop("robots_blocked"))
+
+
+def robots_verdict(candidates: DataFrame,
+                   robots: Optional[DataFrame]) -> DataFrame:
+    """``candidates`` plus a boolean ``robots_blocked`` column (always
+    false without a ``robots`` table).  ``robots`` columns: url_host,
     disallow_prefixes array<string>, optionally allow_prefixes
     array<string>, crawl_delay double (nullable).
 
@@ -34,7 +44,7 @@ def robots_filter(
     higher-order fold — the frontier never shuffles.
     """
     if robots is None:
-        return candidates, candidates.limit(0)
+        return candidates.withColumn("robots_blocked", F.lit(False))
     has_allow = "allow_prefixes" in robots.columns
     cols = ["url_host", "disallow_prefixes"] + (
         ["allow_prefixes"] if has_allow else []
@@ -64,10 +74,7 @@ def robots_filter(
 
     maxd = _longest("disallow_prefixes")
     maxa = _longest("allow_prefixes") if has_allow else F.lit(-1)
-    blocked_cond = maxd > maxa
-    allowed = joined.filter(~blocked_cond).drop(*cols[1:])
-    blocked = joined.filter(blocked_cond).drop(*cols[1:])
-    return allowed, blocked
+    return joined.withColumn("robots_blocked", maxd > maxa).drop(*cols[1:])
 
 
 def effective_politeness(

@@ -13,11 +13,14 @@ All state (queue, seen set, host offsets, records, lineage) lives in
 the round store, so a killed job resumes from the last committed round
 bit-identically (test: tests/test_rounds.py).  Every round has one
 shape: persist what it reads twice, commit (the round's tables are
-written concurrently, its counter query runs alongside them, and the
-commit point follows the last of them), re-read the next round's
-state from the store with schemas known here, and release everything
-it persisted from one list the round owns (``caches``), on normal exit
-and on error alike.
+written concurrently and the commit point follows the last of them),
+re-read the next round's state from the store with schemas known here,
+and release everything it persisted from one list the round owns
+(``caches``), on normal exit and on error alike.  The round's counters
+(scheduled, records, errors, gate drops, content duplicates) and the
+next queue's size and seq range are observed (``DataFrame.observe``)
+on the table writes themselves; only a crawl's first queue is counted
+by an action of its own.
 
 The queue-entry gates (``_entry_gates``) and everything after the
 fetch join (``_round_body``) are shared with the streaming crawl
@@ -31,16 +34,16 @@ import tempfile
 from dataclasses import dataclass, field
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..extract import extract_records
-from ..schema import HOST_OFFSETS_SCHEMA, POLITENESS_SCHEMA, ROBOTS_SCHEMA
+from ..schema import HOST_OFFSETS_SCHEMA
 from .checkpoint import BaseRoundStore, RoundStore
 from .fingerprint import content_seen_flag, with_url_identity
 from .politeness import schedule
-from .robots import effective_politeness, robots_filter
+from .robots import effective_politeness, robots_verdict
 from .seen import CANDIDATE_SCHEMA, CUCKOO_STATE_SCHEMA, filter_unseen
 from .urlfilter import url_filter
 
@@ -325,36 +328,48 @@ def _expand_children(records: DataFrame, scheduled: DataFrame,
 
 
 def _entry_gates(queue: DataFrame, robots: Optional[DataFrame],
-                 config: CrawlConfig
-                 ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
-    """Queue entry: URL blocklist, then robots.  Returns (allowed,
-    blocked, url_filtered); ``url_filtered`` is None when both
-    blocklists are empty, and the URL gate is then absent from the plan.
+                 config: CrawlConfig) -> DataFrame:
+    """Queue entry as one frame: ``queue``'s rows plus a ``gate``
+    column, "url_filtered" (the URL blocklist), else "blocked"
+    (robots), else "allowed".  The round goes on with the allowed
+    rows; ``_queue_stats`` counts the other two.  With both blocklists
+    empty the URL gate is absent from the plan, and without a robots
+    table so is the robots join.
     """
-    url_filtered = None
+    gated = robots_verdict(queue, robots)
+    gate = F.when(F.col("robots_blocked"), "blocked").otherwise("allowed")
     if config.blocked_domains or config.blocked_extensions:
-        verdict = url_filter(
-            queue,
+        gated = url_filter(
+            gated,
             blocked_domains=list(config.blocked_domains),
             blocked_extensions=list(config.blocked_extensions),
             allowed_schemes=config.allowed_schemes,
         )
-        url_filtered = verdict.filter(~F.col("keep")).select("url")
-        queue = verdict.filter(F.col("keep")).drop(
-            "scheme_ok", "domain_blocked", "ext_blocked", "keep"
-        )
-    allowed, blocked = robots_filter(queue, robots)
-    return allowed, blocked, url_filtered
+        gate = F.when(~F.col("keep"), "url_filtered").otherwise(gate)
+    return gated.select(*queue.columns, gate.alias("gate"))
+
+
+def _queue_stats() -> List[Column]:
+    """Aggregates over a gated queue: its size, its seq range (the
+    skew-safe rank's bucketing and the carried-rows test) and the gate
+    drops.  The crawl's first queue is counted with one action; every
+    later queue is observed where the round before writes it."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+        F.count(F.when(F.col("gate") == "blocked", 1)).alias("blocked"),
+        F.count(F.when(F.col("gate") == "url_filtered", 1))
+        .alias("url_filtered"),
+    ]
 
 
 class RoundOutputs(NamedTuple):
-    fetched: DataFrame     # persisted; content_dup/content_fp when content_seen
-    extracted: DataFrame   # persisted
     records: DataFrame
     errors: DataFrame      # (url, error): extraction errors + fetch misses
     lineage: DataFrame
     children: DataFrame    # next round's candidates, ``_expand_cache`` attached
     content_state: Optional[DataFrame]  # next checksum state (lazy)
+    fetch_stats: Observation  # scheduled, content_dup; the errors write fills it
 
 
 def _round_body(fetched: DataFrame, scheduled: DataFrame,
@@ -391,7 +406,16 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
                 | F.coalesce("_seen_before", F.lit(False)),
             ).drop("_seen_before")
     fetched = _persist(fetched, caches)
-    miss_errors = fetched.filter(F.col("html").isNull()).select(
+    # the fetch-miss branch of the errors table reads every fetched row
+    # (one per scheduled URL), and no query but that write holds the
+    # observed node, so no other plan can complete it
+    fetch_stats = Observation()
+    miss_errors = fetched.observe(
+        fetch_stats,
+        F.count(F.lit(1)).alias("scheduled"),
+        (F.count(F.when(F.col("content_dup") & F.col("html").isNotNull(), 1))
+         if config.content_seen else F.lit(0)).alias("content_dup"),
+    ).filter(F.col("html").isNull()).select(
         "url", F.lit("FetchMiss: url not in corpus").alias("error")
     )
     extract_src = fetched.filter(F.col("html").isNotNull())
@@ -457,8 +481,8 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
             round_fps if content_state is None
             else content_state.unionByName(round_fps).distinct()
         )
-    return RoundOutputs(fetched, extracted, records, errors, lineage,
-                        children, content_state)
+    return RoundOutputs(records, errors, lineage, children, content_state,
+                        fetch_stats)
 
 
 def _committed_state(store: BaseRoundStore, n: int, seen_mode: str) -> Tuple:
@@ -500,9 +524,8 @@ def run_crawl(
     (``RoundStore(spark, path)``, or ``SnapshotLogStore`` — the
     Iceberg-shaped metadata log): every round commits to it, the next
     round re-reads its state from it, and a store that already holds
-    committed rounds resumes after the last one.  The former path
-    keyword is gone; pass ``store=RoundStore(spark, path)``.  A crawl
-    given no store (``perfbench``'s horizon probe) commits to a
+    committed rounds resumes after the last one.  A crawl given no
+    store (``perfbench``'s horizon probe) commits to a
     throwaway ``RoundStore`` in a temporary directory that is removed
     on return, so its summary has no ``manifest_path``.
     """
@@ -542,6 +565,9 @@ def run_crawl(
 
     totals = {"records": 0, "errors": 0, "scheduled": 0, "blocked": 0,
               "url_filtered": 0, "content_dup": 0}
+    # the stats (``_queue_stats``) of ``queue``: None until the first
+    # round counts them; each commit observes them for the next queue
+    qstats: Optional[dict] = None
 
     while queue is not None and round_no < config.max_rounds:
         # every frame this round persists, and its bucketed frontier
@@ -550,25 +576,18 @@ def run_crawl(
         caches: List[DataFrame] = []
         ftable: Optional[str] = None
         try:
-            queue = _persist(queue, caches)
-            # bookkeeping job 1 of 2: queue size + seq bounds in one
-            # action (the bounds feed the skew-safe rank's bucketing,
-            # saving its own driver round-trip; queue ⊇ admitted so the
-            # range is a valid superset)
-            qstats = queue.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("seq").alias("lo"), F.max("seq").alias("hi"),
-            ).first()
-            if qstats.n == 0:
+            gated = _persist(_entry_gates(queue, robots, config), caches)
+            if qstats is None:
+                qstats = gated.agg(*_queue_stats()).first().asDict()
+            if qstats["n"] == 0:
                 break
 
-            allowed, blocked, url_filtered = _entry_gates(queue, robots,
-                                                          config)
+            allowed = gated.filter(F.col("gate") == "allowed").drop("gate")
             # rows an earlier round deferred past its horizon were
             # admitted (and entered the seen state) then: they skip the
             # gate now
             fresh = F.col("seq") >= round_no * config.seq_block
-            carried = qstats.lo < round_no * config.seq_block
+            carried = qstats["lo"] < round_no * config.seq_block
             admitted, seen_state = filter_unseen(
                 allowed.filter(fresh) if carried else allowed, seen_state,
                 mode=config.seen_mode, num_shards=config.num_shards,
@@ -578,12 +597,13 @@ def run_crawl(
                 admitted = admitted.unionByName(
                     allowed.filter(~fresh).select(_CAND_COLS))
             # the ranked frame is persisted once in ``caches``: scheduled,
-            # deferred and new_offsets all read it
+            # deferred and new_offsets all read it; the queue's seq range
+            # (a superset of admitted's) buckets the rank
             scheduled, deferred, new_offsets = schedule(
                 admitted, politeness, offsets,
                 round_start=round_no * (config.horizon or 0.0),
                 horizon=config.horizon,
-                seq_bounds=(int(qstats.lo), int(qstats.hi)),
+                seq_bounds=(int(qstats["lo"]), int(qstats["hi"])),
                 host_priorities=host_priorities,
                 caches=caches,
             )
@@ -621,7 +641,6 @@ def run_crawl(
                 )
             out = _round_body(fetched, scheduled, content_state, round_no,
                               config, caches)
-            fetched, extracted = out.fetched, out.extracted
             next_queue = deferred.select(_CAND_COLS).unionByName(
                 out.children.select(_CAND_COLS)
             )
@@ -631,77 +650,45 @@ def run_crawl(
                     totals.setdefault(name, []).append(
                         df._jdf.queryExecution().executedPlan().toString())
 
-            # bookkeeping job 2 of 2: every round counter in ONE action —
-            # four 1-row aggregates cross-joined (each over a persisted or
-            # narrow frame), instead of four separate jobs whose driver
-            # round-trips dominate at high round rates.  The store runs it
-            # alongside the table writes and puts its result in the
-            # round's manifest
-            stats_query = (
-                extracted.agg(
-                    F.coalesce(F.sum(
-                        F.when(F.col("error").isNull(), 1).otherwise(0)
-                    ), F.lit(0)).alias("n_records"),
-                    F.coalesce(F.sum(
-                        F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                    ), F.lit(0)).alias("n_extract_errors"),
-                )
-                .crossJoin(fetched.agg(
-                    F.coalesce(F.sum(
-                        F.when(F.col("html").isNull(), 1).otherwise(0)
-                    ), F.lit(0)).alias("n_fetch_miss"),
-                    *([F.coalesce(F.sum(
-                        F.when(F.col("content_dup")
-                               & F.col("html").isNotNull(), 1).otherwise(0)
-                    ), F.lit(0)).alias("n_content_dup")]
-                      if config.content_seen else []),
-                ))
-                .crossJoin(scheduled.agg(
-                    F.count(F.lit(1)).alias("n_scheduled"),
-                ))
-                .crossJoin(blocked.agg(
-                    F.count(F.lit(1)).alias("n_blocked"),
-                ))
-                .crossJoin(
-                    url_filtered.agg(
-                        F.count(F.lit(1)).alias("n_url_filtered"),
-                    )
-                    if url_filtered is not None
-                    else spark.range(1).select(
-                        F.lit(0).cast("long").alias("n_url_filtered")
-                    )
-                )
-            )
-
-            def round_meta() -> dict:
-                stats = stats_query.first()
-                n_records = int(stats.n_records)
-                n_errors = int(stats.n_extract_errors) + int(stats.n_fetch_miss)
-                n_scheduled = int(stats.n_scheduled)
-                totals["records"] += n_records
-                totals["errors"] += n_errors
-                totals["scheduled"] += n_scheduled
-                totals["blocked"] += int(stats.n_blocked)
-                totals["url_filtered"] += int(stats.n_url_filtered)
-                if config.content_seen:
-                    totals["content_dup"] += int(stats.n_content_dup)
-                return {"scheduled": n_scheduled, "records": n_records,
-                        "errors": n_errors}
-
+            # the round's counters are observed on the writes themselves
+            # (one query holds each observed node, always above anything
+            # adaptive execution could prune) and read once they return
             schemas = _state_schemas(config.seen_mode)
+            counted = {name: Observation() for name in ("records", "errors",
+                                                        "queue")}
+            n_rows = F.count(F.lit(1)).alias("n")
             tables = {
-                "queue": _conform(next_queue, schemas["queue"]),
+                # the next round's entry gates run here too, for its stats
+                "queue": _conform(
+                    _entry_gates(next_queue, robots, config)
+                    .observe(counted["queue"], *_queue_stats()),
+                    schemas["queue"]),
                 "offsets": _conform(offsets, schemas["offsets"]),
-                "records": out.records.drop("new_urls"),
+                "records": out.records.drop("new_urls")
+                .observe(counted["records"], n_rows),
                 "lineage": out.lineage,
-                "errors": out.errors,
+                "errors": out.errors.observe(counted["errors"], n_rows),
             }
             if seen_state is not None and config.seen_mode != "off":
                 tables["seen"] = _conform(seen_state, schemas["seen"])
             if config.content_seen and out.content_state is not None:
                 tables["content"] = _conform(out.content_state,
                                              schemas["content"])
+
+            def round_meta() -> dict:
+                fetch = out.fetch_stats.get
+                meta = {"scheduled": fetch["scheduled"],
+                        "records": counted["records"].get["n"],
+                        "errors": counted["errors"].get["n"]}
+                for key, value in {**meta, "content_dup": fetch["content_dup"],
+                                   "blocked": qstats["blocked"],
+                                   "url_filtered": qstats["url_filtered"]
+                                   }.items():
+                    totals[key] += value
+                return meta
+
             store.commit_round(round_no, tables, meta=round_meta)
+            qstats = counted["queue"].get
             # re-read state from the committed round: the next round's
             # lineage starts from durable storage, not a live lineage
             # chain — and this round's cached frames can be dropped (a

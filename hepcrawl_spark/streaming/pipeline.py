@@ -351,7 +351,8 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
             frame.write.mode("overwrite").parquet(
                 _epoch_dir(work_path(name), epoch))
 
-        allowed, _blocked, _url_filtered = _entry_gates(df, robots, config)
+        allowed = _entry_gates(df, robots, config).filter(
+            F.col("gate") == "allowed").drop("gate")
         offsets = _prior_epoch(spark, work_path("offsets"), epoch)
         # everything the epoch persists (schedule's ranked frame, then
         # _round_body's fetched, extracted and expansion count cache),

@@ -6,7 +6,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from hepcrawl_spark.frontier.checkpoint import RoundStore
+from hepcrawl_spark.frontier.checkpoint import RoundStore, SnapshotLogStore
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 from hepcrawl_spark.schema import ROBOTS_SCHEMA
 from hepcrawl_spark.sources.fixtures import fixture_pages
@@ -479,3 +479,213 @@ def test_content_seen_state_carries_across_rounds_and_resume(spark,
         # the resumed half sees round 0's checksums from the store
         assert resumed["records"] == 0
         assert resumed["content_dup"] == 1
+
+
+# the counter crawl: a.test is the main host, s.test fetches one page
+# per round (delay 10 s, one at a time, horizon 10 s), robots disallows
+# r.test/private/ and the blocklist holds bad.test
+_A = "http://a.test"
+
+
+def _page(title, links=()):
+    body = "".join(f"<a href='{u}'>k</a>" for u in links)
+    return f"<html><title>{title}</title><body>{body}</body></html>"
+
+
+def _counter_crawl(spark, root, store_cls, mode):
+    from hepcrawl_spark.schema import POLITENESS_SCHEMA
+
+    pages = _html_pages(spark, [
+        (f"{_A}/", _page("root", [
+            f"{_A}/p1", f"{_A}/dup", f"{_A}/p2", f"{_A}/p3",
+            f"{_A}/missing", f"{_A}/broken/1", "http://r.test/ok",
+            "http://r.test/private/q", "http://bad.test/y", f"{_A}/"])),
+        # p1 and dup serve the same bytes
+        (f"{_A}/p1", _page("same")),
+        (f"{_A}/dup", _page("same")),
+        (f"{_A}/p2", _page("p2", [f"{_A}/c"])),
+        (f"{_A}/p3", _page("p3", [f"{_A}/c", f"{_A}/p1"])),
+        # routed to a format no extractor is registered for
+        (f"{_A}/broken/1", _page("broken")),
+        (f"{_A}/c", _page("c", ["http://r.test/private/z"])),
+        ("http://r.test/ok", _page("ok")),
+        *[(f"http://s.test/{i}", _page(f"s{i}")) for i in (1, 2, 3)],
+    ])
+    seeds = make_seeds(spark, [
+        (u, "html-generic", 0) for u in (
+            f"{_A}/", "http://s.test/1", "http://s.test/2",
+            "http://s.test/3", "http://bad.test/x",
+            "http://r.test/private/p")])
+    politeness = spark.createDataFrame([("s.test", 10.0, 1)],
+                                       POLITENESS_SCHEMA)
+    robots = spark.createDataFrame([("r.test", ["/private/"], None)],
+                                   ROBOTS_SCHEMA)
+    config = CrawlConfig(
+        seen_mode=mode, num_shards=4, horizon=10.0, content_seen=True,
+        blocked_domains=("bad.test",),
+        child_format_routes={r"/broken/": "no-such-format"},
+    )
+    store = store_cls(spark, root)
+    return store, run_crawl(spark, seeds, pages, politeness, robots,
+                            config, store=store)
+
+
+# each round's queue as the crawl must see it: (carried, offered) —
+# carried rows were deferred by the round before and skip the seen gate
+_COUNTER_QUEUES = [
+    ([], [f"{_A}/", "http://s.test/1", "http://s.test/2", "http://s.test/3",
+          "http://bad.test/x", "http://r.test/private/p"]),
+    (["http://s.test/2", "http://s.test/1"],
+     [f"{_A}/p1", f"{_A}/dup", f"{_A}/p2", f"{_A}/p3", f"{_A}/missing",
+      f"{_A}/broken/1", "http://r.test/ok", "http://r.test/private/q",
+      "http://bad.test/y", f"{_A}/"]),
+    (["http://s.test/1"], [f"{_A}/c", f"{_A}/c", f"{_A}/p1"]),
+    ([], ["http://r.test/private/z"]),
+]
+
+
+def _seen_dropped(queues):
+    """Offers the seen gate drops, replayed from the URL lists: a URL
+    already admitted, or offered twice in one round."""
+    seen, dropped = set(), 0
+    for _, offered in queues:
+        for url in offered:
+            if "bad.test" in url or "/private/" in url:
+                continue
+            if url in seen:
+                dropped += 1
+            seen.add(url)
+    return dropped
+
+
+@pytest.mark.parametrize("mode", ["exact", "cuckoo"])
+@pytest.mark.parametrize("store_cls", [RoundStore, SnapshotLogStore])
+def test_round_counters_are_exact(spark, tmp_path, store_cls, mode):
+    # every counter a crawl reports, on a crawl where each one moves:
+    # blocklist, robots, seen drops, horizon deferral, a content
+    # duplicate, a fetch miss and an extraction error
+    store, totals = _counter_crawl(spark, str(tmp_path), store_cls, mode)
+    counters = {k: v for k, v in totals.items() if k != "manifest_path"}
+    assert counters == {
+        "rounds": 4, "scheduled": 12, "records": 9, "errors": 2,
+        "blocked": 3, "url_filtered": 2, "content_dup": 1,
+    }
+    assert [store.read_meta(n) for n in range(4)] == [
+        {"scheduled": 2, "records": 2, "errors": 0},
+        {"scheduled": 8, "records": 5, "errors": 2},
+        {"scheduled": 2, "records": 2, "errors": 0},
+        {"scheduled": 0, "records": 0, "errors": 0},
+    ]
+    # queue = url_filtered + blocked + seen_dropped + scheduled +
+    # deferred; round n's committed queue is round n+1's
+    queues = [store.read_table(n, "queue") for n in range(4)]
+    sizes = [q.count() for q in queues]
+    assert sizes == [len(c) + len(o) for c, o in _COUNTER_QUEUES[1:]] + [0]
+    deferred = sum(q.filter(F.col("seq") < (n + 1) * (1 << 40)).count()
+                   for n, q in enumerate(queues))
+    assert deferred == sum(len(c) for c, _ in _COUNTER_QUEUES) == 3
+    seen_dropped = _seen_dropped(_COUNTER_QUEUES)
+    assert seen_dropped == 3
+    queue_total = sum(len(c) + len(o) for c, o in _COUNTER_QUEUES)
+    assert queue_total == 23 == (
+        totals["url_filtered"] + totals["blocked"] + seen_dropped
+        + totals["scheduled"] + deferred)
+
+
+def _edge_crawl(spark, root, case):
+    pages = _html_pages(spark, [
+        (f"{_A}/", _page("root", [f"{_A}/broken/1", f"{_A}/broken/2"])),
+        (f"{_A}/broken/1", _page("b1")),
+        (f"{_A}/broken/2", _page("b2")),
+    ])
+    seeds = {
+        # round 1 fetches only pages that fail extraction: the child
+        # expansion joins an empty record set
+        "extraction_errors": [f"{_A}/"],
+        "robots_blocked": ["http://r.test/private/p",
+                           "http://r.test/private/q"],
+        "empty_seeds": [],
+    }[case]
+    robots = spark.createDataFrame([("r.test", ["/private/"], None)],
+                                   ROBOTS_SCHEMA)
+    store = RoundStore(spark, root)
+    totals = run_crawl(
+        spark, make_seeds(spark, [(u, "html-generic", 0) for u in seeds]),
+        pages, robots=robots, store=store,
+        config=CrawlConfig(seen_mode="exact",
+                           child_format_routes={r"/broken/": "no-such-format"}),
+    )
+    return store, totals
+
+
+@pytest.mark.parametrize("case, counters, metas", [
+    ("extraction_errors",
+     {"rounds": 2, "scheduled": 3, "records": 1, "errors": 2, "blocked": 0},
+     [{"scheduled": 1, "records": 1, "errors": 0},
+      {"scheduled": 2, "records": 0, "errors": 2}]),
+    ("robots_blocked",
+     {"rounds": 1, "scheduled": 0, "records": 0, "errors": 0, "blocked": 2},
+     [{"scheduled": 0, "records": 0, "errors": 0}]),
+    ("empty_seeds",
+     {"rounds": 0, "scheduled": 0, "records": 0, "errors": 0, "blocked": 0},
+     []),
+])
+def test_degenerate_rounds_count_exactly(spark, tmp_path, case, counters,
+                                         metas):
+    # rounds whose frames are empty at run time (adaptive execution
+    # prunes joins over them) still finish with exact counters
+    store, totals = _edge_crawl(spark, str(tmp_path), case)
+    assert {k: totals[k] for k in counters} == counters
+    assert totals["url_filtered"] == totals["content_dup"] == 0
+    assert [store.read_meta(n) for n in range(len(metas))] == metas
+    assert store.last_committed_round() == (len(metas) - 1 if metas
+                                            else None)
+
+
+class _CommitGroupStore(RoundStore):
+    """Runs each commit under its own job group; records the jobs the
+    crawl's own group held when each commit started and ended."""
+
+    def __init__(self, spark, root, crawl_group):
+        super().__init__(spark, root)
+        self.crawl_group = crawl_group
+        self.crawl_jobs = []
+
+    def _jobs(self):
+        tracker = self.spark.sparkContext.statusTracker()
+        return set(tracker.getJobIdsForGroup(self.crawl_group))
+
+    def commit_round(self, n, tables, meta=None):
+        sc = self.spark.sparkContext
+        self.crawl_jobs.append(self._jobs())
+        sc.setJobGroup(self.crawl_group + "-commit", "round commit")
+        try:
+            super().commit_round(n, tables, meta)
+        finally:
+            sc.setJobGroup(self.crawl_group, "crawl loop")
+        self.crawl_jobs.append(self._jobs())
+
+
+def test_rounds_launch_no_job_outside_the_commit(spark, tmp_path):
+    # after the crawl-start queue stats every Spark job of a round runs
+    # inside commit_round: the round's frames are lazy up to the commit,
+    # and its counters come from the commit's own writes
+    import uuid
+
+    group = "crawl-" + uuid.uuid4().hex[:8]
+    sc = spark.sparkContext
+    store = _CommitGroupStore(spark, str(tmp_path), group)
+    sc.setJobGroup(group, "crawl loop")
+    try:
+        summary = run_crawl(
+            spark, _tree_seeds(spark), _tree_pages(spark), store=store,
+            config=CrawlConfig(seen_mode="cuckoo", num_shards=4,
+                               max_rounds=3),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert summary["rounds"] == 3
+    assert summary["records"] == 3 * (1 + 2 + 4)
+    first, last = store.crawl_jobs[0], store.crawl_jobs[-1]
+    assert first                       # the crawl-start queue stats
+    assert last - first == set()
