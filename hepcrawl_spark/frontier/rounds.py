@@ -22,17 +22,19 @@ next queue's size and seq range are observed (``DataFrame.observe``)
 on the table writes themselves; only a crawl's first queue is counted
 by an action of its own.
 
-The queue-entry gates (``_entry_gates``) and everything after the
-fetch join (``_round_body``) are shared with the streaming crawl
-(``streaming.pipeline.stream_crawl_round``); the engines differ only
-in seen-gate placement, the ``schedule`` call and where state lands.
+The queue-entry gates (``_entry_gates``), everything after the fetch
+join (``_round_body``) and the tables a round commits
+(``_round_tables``) are shared with the streaming crawl
+(``streaming.pipeline.stream_crawl_round``), which commits its
+micro-batches as rounds to the same kind of store; the engines differ
+only in seen-gate placement and the ``schedule`` call.
 """
 
 from __future__ import annotations
 
 import tempfile
 from dataclasses import dataclass, field
-from typing import Dict, List, NamedTuple, Optional, Tuple
+from typing import Callable, Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -498,6 +500,36 @@ def _conform(df: DataFrame, schema: StructType) -> DataFrame:
     return df.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
 
 
+def _round_tables(out: RoundOutputs, offsets: DataFrame, config: CrawlConfig
+                  ) -> Tuple[Dict[str, DataFrame], Callable[[], dict]]:
+    """The tables both engines commit for a round — ``offsets`` (the
+    merged host offsets), ``records``, ``lineage``, ``errors`` and, with
+    content-seen, ``content`` — and the round's meta ``{scheduled,
+    records, errors}``, a callable to call once the writes have
+    returned.  The counters are observed on the writes themselves: one
+    query holds each observed node, always above anything adaptive
+    execution could prune."""
+    counted = {name: Observation() for name in ("records", "errors")}
+    n_rows = F.count(F.lit(1)).alias("n")
+    schemas = _state_schemas(config.seen_mode)
+    tables = {
+        "offsets": _conform(offsets, schemas["offsets"]),
+        "records": out.records.drop("new_urls")
+        .observe(counted["records"], n_rows),
+        "lineage": out.lineage,
+        "errors": out.errors.observe(counted["errors"], n_rows),
+    }
+    if config.content_seen and out.content_state is not None:
+        tables["content"] = _conform(out.content_state, schemas["content"])
+
+    def meta() -> dict:
+        return {"scheduled": out.fetch_stats.get["scheduled"],
+                "records": counted["records"].get["n"],
+                "errors": counted["errors"].get["n"]}
+
+    return tables, meta
+
+
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -650,45 +682,32 @@ def run_crawl(
                     totals.setdefault(name, []).append(
                         df._jdf.queryExecution().executedPlan().toString())
 
-            # the round's counters are observed on the writes themselves
-            # (one query holds each observed node, always above anything
-            # adaptive execution could prune) and read once they return
             schemas = _state_schemas(config.seen_mode)
-            counted = {name: Observation() for name in ("records", "errors",
-                                                        "queue")}
-            n_rows = F.count(F.lit(1)).alias("n")
+            tables, meta = _round_tables(out, offsets, config)
+            queue_stats = Observation()
             tables = {
                 # the next round's entry gates run here too, for its stats
                 "queue": _conform(
                     _entry_gates(next_queue, robots, config)
-                    .observe(counted["queue"], *_queue_stats()),
+                    .observe(queue_stats, *_queue_stats()),
                     schemas["queue"]),
-                "offsets": _conform(offsets, schemas["offsets"]),
-                "records": out.records.drop("new_urls")
-                .observe(counted["records"], n_rows),
-                "lineage": out.lineage,
-                "errors": out.errors.observe(counted["errors"], n_rows),
+                **tables,
             }
             if seen_state is not None and config.seen_mode != "off":
                 tables["seen"] = _conform(seen_state, schemas["seen"])
-            if config.content_seen and out.content_state is not None:
-                tables["content"] = _conform(out.content_state,
-                                             schemas["content"])
 
             def round_meta() -> dict:
-                fetch = out.fetch_stats.get
-                meta = {"scheduled": fetch["scheduled"],
-                        "records": counted["records"].get["n"],
-                        "errors": counted["errors"].get["n"]}
-                for key, value in {**meta, "content_dup": fetch["content_dup"],
+                counts = meta()
+                content_dup = out.fetch_stats.get["content_dup"]
+                for key, value in {**counts, "content_dup": content_dup,
                                    "blocked": qstats["blocked"],
                                    "url_filtered": qstats["url_filtered"]
                                    }.items():
                     totals[key] += value
-                return meta
+                return counts
 
             store.commit_round(round_no, tables, meta=round_meta)
-            qstats = counted["queue"].get
+            qstats = queue_stats.get
             # re-read state from the committed round: the next round's
             # lineage starts from durable storage, not a live lineage
             # chain — and this round's cached frames can be dropped (a

@@ -36,9 +36,12 @@ def write_crawl_manifest(store: RoundStore, job_id: str = "",
     errors_df = store.all_errors()
     errors = []
     if errors_df is not None:
+        # ordered before the cap: part-file order varies between
+        # identical crawls, so the listed errors would too
         errors = [
             [r.error, r.url]
-            for r in errors_df.limit(MAX_MANIFEST_ERRORS).collect()
+            for r in errors_df.orderBy("url", "error")
+            .limit(MAX_MANIFEST_ERRORS).collect()
         ]
     payload = {
         "job_id": job_id,

@@ -9,7 +9,9 @@ fetched WARC batches), the same Arrow extraction UDF, and a
 micro-batch: ``frontier.rounds._entry_gates`` (URL blocklist, robots),
 ``frontier.politeness.schedule`` and ``frontier.rounds._round_body``
 (content-seen, extraction, errors, lineage, ``_expand_children``),
-driven by the same ``CrawlConfig`` as ``run_crawl``.  Its URL-seen
+driven by the same ``CrawlConfig`` as ``run_crawl``, and commits each
+micro-batch as one round of a ``BaseRoundStore`` with the batch
+round's tables (``frontier.rounds._round_tables``).  Its URL-seen
 gate ``stream_unseen`` runs the batch gate's per-shard probe
 (``frontier.seen._probe_shard``) against GroupState.
 
@@ -23,21 +25,23 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..extract import extract_records
+from ..frontier.checkpoint import BaseRoundStore
 from ..frontier.politeness import schedule
 from ..frontier.robots import effective_politeness
 from ..frontier.rounds import (
-    _CAND_COLS, CrawlConfig, _entry_gates, _merge_offsets,
-    _release, _round_body,
+    _CAND_COLS, CrawlConfig, _committed_state, _entry_gates,
+    _merge_offsets, _release, _round_body, _round_tables,
 )
 from ..frontier.cuckoo import CuckooShard
 from ..frontier.seen import (
@@ -199,74 +203,34 @@ def stream_unseen(cand_stream: DataFrame, num_shards: int = 64,
     )
 
 
-def _epoch_dir(root: str, epoch: int) -> str:
-    return os.path.join(root, f"epoch-{int(epoch):09d}")
-
-
-def _prior_epoch(spark: SparkSession, root: str,
-                 epoch: int) -> Optional[DataFrame]:
-    """The epoch-versioned ledger under ``root`` as of the highest
-    ``epoch-N`` with N < ``epoch`` (None before the first), so a
-    retried epoch rebuilds from the same basis."""
-    prior = [p for p in sorted(glob.glob(os.path.join(root, "epoch-*")))
-             if int(p.rsplit("-", 1)[1]) < int(epoch)]
-    return spark.read.parquet(prior[-1]) if prior else None
-
-
-def stream_schedule(cand_stream: DataFrame, checkpoint: str,
-                    output_path: str, offsets_path: str,
-                    politeness: Optional[DataFrame] = None,
-                    available_now: bool = True):
-    """Streaming politeness scheduler (SURVEY §1.2: "streaming via
-    foreachBatch over the same round function").
-
-    Each micro-batch of frontier candidates runs the SAME
-    ``frontier.politeness.schedule`` the batch round loop uses; the
-    per-host offset ledger (``next_fetch_ts`` per host) is carried
-    across micro-batches through an epoch-versioned parquet ledger and
-    merged with the batch loop's ``_merge_offsets`` — so each
-    micro-batch IS exactly one batch round (same function, same
-    carried-offset semantics) and per-host spacing holds CONTINUOUSLY:
-    a host throttled to one fetch per ``delay`` seconds stays
-    throttled across batch boundaries.  (A batch boundary closes any
-    partially-filled concurrency slot — conservative, never early.)
-
-    Epoch-versioned writes make retried micro-batches idempotent: a
-    re-run of epoch N overwrites ``epoch-N`` of both ledgers, and the
-    next batch reads only the highest committed epoch.  At scale both
-    writers are per-host-tiny; the scheduled output is the streaming
-    peer of the round loop's ``scheduled`` table.
+def _publish_children(children: DataFrame, frontier_path: str,
+                      epoch: int) -> None:
+    """Publish round ``epoch``'s children into the watched
+    ``frontier_path`` as ``children-<epoch>-<i>.parquet``: the file
+    source keys files by path, so a retried epoch re-creates the same
+    paths and nothing double-enqueues.  Parts are staged in a
+    ``_``-prefixed directory inside ``frontier_path`` (the file source
+    skips it), so the rename stays on one filesystem.  An empty round
+    publishes nothing: an empty part would start an empty micro-batch.
     """
-    from ..frontier.fingerprint import with_url_identity
-
-    def batch_fn(df: DataFrame, epoch: int) -> None:
-        if "url_host" not in df.columns:
-            df = with_url_identity(df)
-        offsets = _prior_epoch(df.sparkSession, offsets_path, epoch)
-        scheduled, _deferred, new_offsets = schedule(
-            df, politeness, offsets
-        )
-        (
-            scheduled.withColumn("epoch", F.lit(int(epoch)))
-            .write.mode("overwrite")
-            .parquet(_epoch_dir(output_path, epoch))
-        )
-        _merge_offsets(offsets, new_offsets).write.mode("overwrite").parquet(
-            _epoch_dir(offsets_path, epoch)
-        )
-
-    writer = (
-        cand_stream.writeStream
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    name = f"children-{epoch:09d}"
+    # an earlier attempt may have published more parts
+    for stale in glob.glob(os.path.join(frontier_path, f"{name}-*.parquet")):
+        os.remove(stale)
+    staging = os.path.join(frontier_path, f"_{name}")
+    counted = Observation()
+    children.observe(counted, F.count(F.lit(1)).alias("n")) \
+        .write.mode("overwrite").parquet(staging)
+    if counted.get["n"]:
+        parts = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
+        for i, part in enumerate(parts):
+            os.replace(part, os.path.join(frontier_path,
+                                          f"{name}-{i:05d}.parquet"))
+    shutil.rmtree(staging)
 
 
 def stream_crawl_round(spark: SparkSession, frontier_path: str,
-                       pages: DataFrame, work_dir: str, *,
+                       pages: DataFrame, store: BaseRoundStore, *,
                        config: CrawlConfig,
                        politeness: Optional[DataFrame] = None,
                        robots: Optional[DataFrame] = None,
@@ -279,46 +243,30 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
 
         frontier files → URL-seen gate (``stream_unseen``, GroupState)
         → foreachBatch [``_entry_gates`` (URL blocklist, robots) →
-        ``schedule`` with the carried offset ledger → fetch join →
-        ``_round_body`` (content-seen, extraction, errors, lineage,
-        ``_expand_children``)] → child candidates written BACK into
-        ``frontier_path`` → picked up as the next micro-batch.
+        ``schedule`` with the committed host offsets → fetch join →
+        ``_round_body`` → children published BACK into
+        ``frontier_path`` → commit] → the next micro-batch.
 
-    ``_entry_gates`` and ``_round_body`` are the functions ``run_crawl``
-    calls, with the same ``config``, so the URL gate, robots, per-host
-    spacing, content-seen, LIFO ordering, depth caps and child format
-    routing are definitionally identical; the micro-batch epoch plays
-    the round number.  What differs is where the seen gate sits
-    (before the body, as the one stateful exchange) and where state
-    lands: the URL-seen state in the state-store checkpoint, the
-    per-host offsets and checksum state in epoch-versioned parquet
-    ledgers — so all of it survives a full stop/start.  With a static
-    robots table the admitted-then-blocked order changes no outcome.
+    ``_entry_gates``, ``_round_body`` and ``_round_tables`` are the
+    functions ``run_crawl`` calls, with the same ``config``, so the
+    gates, spacing, content-seen, LIFO order, depth caps, child format
+    routing and the committed tables are identical: micro-batch N
+    commits as round N of ``store`` (any ``BaseRoundStore``), and reads
+    its host offsets and checksum state from the round before.  The
+    seen gate sits before the body, as the one stateful exchange, with
+    its state in the query checkpoint under ``store.root``; with a
+    static robots table the admitted-then-blocked order changes no
+    outcome.
 
     ``config`` must use ``seen_mode`` exact or cuckoo, and no
-    ``horizon`` (every admitted URL is scheduled in its micro-batch)
-    or ``pages_table``; ``max_rounds`` bounds :func:`drive_stream_crawl`,
+    ``horizon`` (every admitted URL is scheduled in its micro-batch) or
+    ``pages_table``; ``max_rounds`` bounds :func:`drive_stream_crawl`,
     and ``job_id`` / ``collect_fetch_plans`` shape only the batch summary.
 
-    Epoch-versioned writes make retried micro-batches idempotent:
-    ``scheduled``, ``records``, ``errors`` and ``lineage`` land in
-    ``work_dir/<table>/epoch-N`` (overwrite; errors and lineage with
-    the batch store's schemas), child files as
-    ``frontier_path/children-N-*.parquet`` (fixed names per epoch —
-    the file source processes each path once, so a retry cannot
-    double-enqueue).  ``availableNow`` processes the files present at
-    start then stops; children written during the run form the NEXT
-    trigger's input — use :func:`drive_stream_crawl` for the restart
-    loop that drains the frontier to empty.
-
-    Storage restriction: the child loop-back publishes files with
-    driver-local ``glob()`` + ``os.replace()``, so ``frontier_path``
-    and ``work_dir`` must live on the SAME local POSIX filesystem
-    (local disk / NFS mount) — not HDFS or S3, and not two different
-    mounts (``os.replace`` across devices raises ``EXDEV``).  On a
-    cluster, point both at a shared mount, or swap the rename for the
-    Hadoop FileSystem API (``spark._jvm.org.apache.hadoop.fs``) —
-    the per-epoch fixed-name idempotency contract is unchanged.
+    A retried micro-batch whose round is committed commits nothing, and
+    children are published before the commit point, so a retry neither
+    loses nor duplicates them.  :func:`drive_stream_crawl` owns the
+    ``availableNow`` restart loop that drains the frontier.
     """
     if config.seen_mode not in ("exact", "cuckoo"):
         raise ValueError(f"the streaming seen gate needs seen_mode 'exact' "
@@ -343,17 +291,18 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
 
     def round_body(df: DataFrame, epoch: int) -> None:
         epoch = int(epoch)
-
-        def work_path(name: str) -> str:
-            return os.path.join(work_dir, name)
-
-        def write(frame: DataFrame, name: str) -> None:
-            frame.write.mode("overwrite").parquet(
-                _epoch_dir(work_path(name), epoch))
-
+        last = store.last_committed_round()
+        if last is not None and last >= epoch:
+            # a retried micro-batch whose round is committed: only its
+            # seen-state update reruns (Spark checks every state commit)
+            df.write.format("noop").mode("overwrite").save()
+            return
+        offsets = content_state = None
+        if last is not None:
+            _, _, offsets, content_state = _committed_state(
+                store, last, config.seen_mode)
         allowed = _entry_gates(df, robots, config).filter(
             F.col("gate") == "allowed").drop("gate")
-        offsets = _prior_epoch(spark, work_path("offsets"), epoch)
         # everything the epoch persists (schedule's ranked frame, then
         # _round_body's fetched, extracted and expansion count cache),
         # released once
@@ -363,58 +312,23 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
                 allowed, pol, offsets, host_priorities=host_priorities,
                 caches=caches,
             )
-            write(scheduled.withColumn("epoch", F.lit(epoch)), "scheduled")
-            # the checksum ledger rebuilds a retried epoch from epoch-1's
-            # basis, exactly like the offsets ledger
-            prior_fps = (_prior_epoch(spark, work_path("content"), epoch)
-                         if config.content_seen else None)
             out = _round_body(
                 scheduled.join(pages_slim, on="url", how="left"), scheduled,
-                prior_fps, epoch, config, caches,
+                content_state, epoch, config, caches,
             )
-            write(out.records.drop("new_urls")
-                  .withColumn("epoch", F.lit(epoch)), "records")
-            write(out.errors, "errors")
-            write(out.lineage, "lineage")
-            if config.content_seen:
-                write(out.content_state, "content")
-            write(_merge_offsets(offsets, new_offsets), "offsets")
-
-            children = out.children.select(_CAND_COLS)
-            # land children under a scratch dir, then give each part a
-            # FIXED per-epoch name inside the watched directory: the file
-            # source keys processed files by path, so a retried epoch
-            # re-creates the same paths and nothing double-enqueues
-            # a retried epoch may produce FEWER partitions than the first
-            # attempt; sweep every prior children-{epoch}-* first so the
-            # retry fully replaces its earlier output (stale higher-index
-            # files would be re-enqueued, and only the seen gate saves us)
-            for stale in glob.glob(os.path.join(
-                    frontier_path, f"children-{epoch:09d}-*.parquet")):
-                os.remove(stale)
-            if not children.isEmpty():
-                # publish only non-empty rounds: Spark writes one (empty)
-                # part file even for an empty frame, and an always-growing
-                # watched dir would re-trigger empty micro-batches forever
-                # — the drained-frontier signal drive_stream_crawl watches
-                # for is "this round added no files"
-                scratch = work_path(f"children-{epoch:09d}")
-                children.write.mode("overwrite").parquet(scratch)
-                parts = sorted(
-                    glob.glob(os.path.join(scratch, "part-*.parquet"))
-                )
-                for i, p in enumerate(parts):
-                    os.replace(p, os.path.join(
-                        frontier_path,
-                        f"children-{epoch:09d}-{i:05d}.parquet"
-                    ))
+            _publish_children(out.children.select(_CAND_COLS),
+                              frontier_path, epoch)
+            tables, meta = _round_tables(
+                out, _merge_offsets(offsets, new_offsets), config)
+            store.commit_round(epoch, tables, meta=meta)
         finally:
             _release(caches)
 
     writer = (
         admitted.writeStream
         .foreachBatch(round_body)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
+        .option("checkpointLocation",
+                os.path.join(store.root, "stream-checkpoint"))
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -422,51 +336,36 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
 
 
 def drive_stream_crawl(spark: SparkSession, frontier_path: str,
-                       pages: DataFrame, work_dir: str, *,
+                       pages: DataFrame, store: BaseRoundStore, *,
                        config: CrawlConfig,
                        round_timeout: float = 600.0,
                        **kwargs) -> dict:
     """Drain loop for :func:`stream_crawl_round`: ``availableNow``
     processes the frontier files present at START, so children written
-    during a run form the NEXT run's input — this helper owns the
-    restart loop, re-running the query until a round publishes no new
-    frontier files (the crawl has drained) or ``config.max_rounds`` is
-    hit.  ``kwargs`` pass through to :func:`stream_crawl_round`.
+    during a run form the NEXT run's input.  The query is re-run until
+    a run commits no new round (it found no new frontier file: the
+    crawl has drained) or ``config.max_rounds`` rounds are committed.
+    ``kwargs`` pass through to :func:`stream_crawl_round`.
 
-    Drain detection is the file-source's own contract: each round
-    snapshots the watched directory before starting; a round that adds
-    nothing processed only already-seen-or-empty input, and — because
-    every child file published by round N is consumed by round N+1 —
-    an unchanged directory means nothing is left to process.  State
-    (URL-seen GroupState, offsets ledger) carries across the restarts
-    exactly as across any stop/start.
-
-    Returns ``{"rounds": n, "drained": bool, "records_path": …}``;
-    ``drained`` False means max_rounds stopped the loop first (a
-    depth-capped crawl drains naturally in ``max_depth + 1`` rounds +
-    one empty confirming round).
+    Returns ``{"rounds": committed rounds, "drained": bool}``.
     """
-    rounds, drained = 0, False
-    while rounds < config.max_rounds:
-        before = set(glob.glob(os.path.join(frontier_path, "*.parquet")))
-        q = stream_crawl_round(spark, frontier_path, pages, work_dir,
+    def committed() -> int:
+        last = store.last_committed_round()
+        return 0 if last is None else last + 1
+
+    drained = False
+    while committed() < config.max_rounds:
+        before = committed()
+        q = stream_crawl_round(spark, frontier_path, pages, store,
                                config=config, available_now=True, **kwargs)
         if not q.awaitTermination(round_timeout):
             q.stop()
-            raise TimeoutError(
-                f"stream crawl round {rounds} exceeded "
-                f"{round_timeout}s"
-            )
-        rounds += 1
-        after = set(glob.glob(os.path.join(frontier_path, "*.parquet")))
-        if after == before:
+            raise TimeoutError(f"stream crawl run from round {before} "
+                               f"exceeded {round_timeout}s")
+        if committed() == before:
             drained = True
             break
-    return {
-        "rounds": rounds,
-        "drained": drained,
-        "records_path": os.path.join(work_dir, "records"),
-    }
+    return {"rounds": committed(), "drained": drained}
 
 
 CLEAN_CORPUS_OUTPUT_SCHEMA = ("doc_id long, guessed_lang string, "

@@ -111,3 +111,39 @@ def test_files_pipeline_stores_and_attaches(spark, tmp_path):
     with open(os.path.join(store, f.path), "rb") as fh:
         assert fh.read() == b"%PDF-1.4 payload"
     assert by_url["http://r/2"].files is None    # no file_urls → no files
+
+
+def test_crawl_manifest_lists_errors_in_url_order(spark, tmp_path):
+    """Two identical crawls list the same errors in their manifests,
+    ordered by (url, error) whatever order the error part files are
+    read in: round 0 fetch misses, round 1 misses linked from a seed
+    and an extraction error."""
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import (
+        CrawlConfig,
+        make_seeds,
+        run_crawl,
+    )
+
+    links = "".join(f"<a href='http://m.x/a{i}'>a</a>" for i in range(6))
+    pages = spark.createDataFrame([
+        ("http://h.x/p", f"<html><body>{links}</body></html>".encode(),
+         "html-generic"),
+        ("http://h.x/bad", b"<html></html>", "no-such-format"),
+    ], "url string, html binary, format string")
+    seeds = make_seeds(spark, [("http://h.x/p", "html-generic", 0),
+                               ("http://h.x/bad", "no-such-format", 0)]
+                       + [(f"http://m.x/z{i}", "html-generic", 0)
+                          for i in range(6)])
+
+    def manifest_errors(name):
+        summary = run_crawl(
+            spark, seeds, pages, store=RoundStore(spark, str(tmp_path / name)),
+            config=CrawlConfig(seen_mode="exact", max_rounds=4))
+        with open(summary["manifest_path"]) as fh:
+            return json.load(fh)["errors"]
+
+    first = manifest_errors("a")
+    assert len(first) == 13
+    assert first == sorted(first, key=lambda e: (e[1], e[0]))
+    assert manifest_errors("b") == first

@@ -5,9 +5,38 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_stream_extract(spark, tmp_path):
+def _page(url, links=()):
+    """An inline html-generic page linking to ``links``."""
+    body = "".join(f'<a href="{u}">x</a>' for u in links)
+    return (url,
+            f"<html><head><title>T {url}</title></head>"
+            f"<body>doc body {url} {body}</body></html>".encode(),
+            "html-generic")
+
+
+def _pages_dir(spark, path):
+    """A generated corpus in the streaming pages schema: 24 pages on
+    three hosts, fetched one a minute from 2026-01-01 00:00 and written
+    as three files of eight minutes each, oldest first; one page is
+    routed to an unregistered format (an extraction error)."""
+    import datetime
+
     from hepcrawl_spark.schema import PAGES_WITH_FORMAT_SCHEMA
-    from hepcrawl_spark.sources.fixtures import fixture_rows
+
+    t0 = datetime.datetime(2026, 1, 1)
+    rows = []
+    for i in range(24):
+        url, html, fmt = _page(f"http://h{i % 3}.x/p{i}")
+        rows.append((url, t0 + datetime.timedelta(minutes=i), html,
+                     None, None, "no-such-format" if i == 7 else fmt))
+    for k in range(3):
+        spark.createDataFrame(rows[8 * k:8 * k + 8], PAGES_WITH_FORMAT_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(path)
+    return spark.createDataFrame(rows, PAGES_WITH_FORMAT_SCHEMA)
+
+
+def test_stream_extract(spark, tmp_path):
+    from hepcrawl_spark.extract import extract_records
     from hepcrawl_spark.streaming.pipeline import (
         read_pages_stream,
         stream_extract,
@@ -16,21 +45,21 @@ def test_stream_extract(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     out_dir = str(tmp_path / "records")
     ckpt = str(tmp_path / "ckpt")
-
-    batch = spark.createDataFrame(
-        fixture_rows(["arxiv-oai"]), PAGES_WITH_FORMAT_SCHEMA
-    )
-    batch.write.parquet(pages_dir)
+    batch = _pages_dir(spark, pages_dir)
 
     stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
     assert stream.isStreaming
     q = stream_extract(stream, ckpt, output_path=out_dir)
     q.awaitTermination(120)
 
-    records = spark.read.parquet(out_dir).filter(F.col("error").isNull())
-    # same records the batch path produces (22 arXiv fixture records)
-    assert records.count() == 22
-    assert records.filter(F.col("title").isNotNull()).count() == 22
+    # the same rows the batch extraction produces, errors included
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r.url)
+
+    want = rows(extract_records(batch))
+    assert len(want) == 24
+    assert sum(r.error is not None for r in want) == 1
+    assert rows(spark.read.parquet(out_dir)) == want
 
     # resume: a second availableNow run over the same checkpoint adds
     # nothing (exactly-once file-source tracking)
@@ -38,25 +67,22 @@ def test_stream_extract(spark, tmp_path):
         read_pages_stream(spark, pages_dir), ckpt, output_path=out_dir
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).filter(
-        F.col("error").isNull()
-    ).count() == 22
+    assert spark.read.parquet(out_dir).count() == 24
 
 
 def test_stream_host_stats(spark, tmp_path):
-    from hepcrawl_spark.schema import PAGES_WITH_FORMAT_SCHEMA
-    from hepcrawl_spark.sources.fixtures import fixture_rows
     from hepcrawl_spark.streaming.pipeline import (
         read_pages_stream,
         stream_host_stats,
     )
 
     pages_dir = str(tmp_path / "pages")
-    spark.createDataFrame(
-        fixture_rows(["arxiv-oai", "jats"]), PAGES_WITH_FORMAT_SCHEMA
-    ).write.parquet(pages_dir)
+    batch = _pages_dir(spark, pages_dir)
 
-    stats = stream_host_stats(read_pages_stream(spark, pages_dir))
+    # one file per micro-batch: the watermark (10 minutes behind the
+    # latest page) closes the first windows before the last batch
+    stats = stream_host_stats(
+        read_pages_stream(spark, pages_dir, max_files_per_trigger=1))
     q = (
         stats.writeStream.format("memory").queryName("host_stats")
         .outputMode("append")
@@ -65,15 +91,20 @@ def test_stream_host_stats(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    rows = spark.sql(
-        "select * from host_stats order by url_host"
-    ).collect()
-    hosts = {r.url_host for r in rows}
-    assert "export.arxiv.org" in hosts
-    assert all(r.n_pages > 0 and r.bytes > 0 for r in rows)
-
-
-import pytest
+    got = {(r.window_start, r.url_host): (r.n_pages, r.bytes)
+           for r in spark.sql("select * from host_stats").collect()}
+    want = {
+        (r.window_start, r.url_host): (r.n_pages, r.bytes)
+        for r in batch.groupBy(
+            F.window("warc_ts", "1 minute").start.alias("window_start"),
+            F.regexp_extract("url", r"^http://([^/]+)", 1).alias("url_host"),
+        ).agg(F.count(F.lit(1)).alias("n_pages"),
+              F.sum(F.octet_length("html")).alias("bytes")).collect()
+    }
+    # append mode emits a window once the watermark passes its end
+    assert got and set(got) < set(want)
+    assert {k: want[k] for k in got} == got
+    assert {host for _, host in got} == {"h0.x", "h1.x", "h2.x"}
 
 
 @pytest.mark.parametrize("mode", ["exact", "cuckoo"])
@@ -165,24 +196,33 @@ def test_stream_unseen_cuckoo_overflow_fails_loudly(spark, tmp_path):
         q.awaitTermination(120)
 
 
-def test_stream_crawl_round_full_loop(spark, tmp_path):
-    """VERDICT r3 #5: the FULL streaming crawl — seen gate, politeness
-    scheduler, fetch join, extraction and depth expansion composed in
-    one foreachBatch round body, with the frontier loop closed through
-    the watched directory.  Per-host spacing, URL-seen dedup and depth
-    expansion must hold across micro-batches AND across full query
-    restarts (state store + offset ledger)."""
-    from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds
+def _write_seeds(spark, frontier, urls):
+    """Append ``urls`` as one seed file to the watched ``frontier``."""
+    from hepcrawl_spark.frontier.rounds import make_seeds
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
+
+    seeds = make_seeds(spark, [(u, "html-generic", 0) for u in urls])
+    seeds.select(CANDIDATE_SCHEMA.fieldNames()).coalesce(1) \
+        .write.mode("append").parquet(str(frontier))
+    return seeds
+
+
+def _children_files(frontier):
+    """The published children files, name -> modification time."""
+    return {p.name: p.stat().st_mtime_ns for p in frontier.glob("children-*")}
+
+
+def test_stream_crawl_round_full_loop(spark, tmp_path):
+    """The FULL streaming crawl — seen gate, politeness scheduler,
+    fetch join, extraction and depth expansion composed in one
+    foreachBatch round body, with the frontier loop closed through the
+    watched directory.  Per-host spacing, URL-seen dedup and depth
+    expansion must hold across micro-batches AND across full query
+    restarts (state store + the store's committed offsets)."""
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import CrawlConfig
     from hepcrawl_spark.schema import POLITENESS_SCHEMA
     from hepcrawl_spark.streaming.pipeline import stream_crawl_round
-
-    def page(url, links):
-        body = "".join(f'<a href="{u}">x</a>' for u in links)
-        return (url,
-                f"<html><head><title>T {url}</title></head>"
-                f"<body>doc body {url} {body}</body></html>".encode(),
-                "html-generic")
 
     kids = {
         "http://h0.x/s0": ["http://h0.x/s0/c0", "http://h0.x/shared"],
@@ -191,8 +231,8 @@ def test_stream_crawl_round_full_loop(spark, tmp_path):
         "http://h1.x/s3": ["http://h1.x/s3/c0", "http://h1.x/s3/c1"],
     }
     uniq_children = sorted({u for v in kids.values() for u in v})
-    rows = [page(u, links) for u, links in kids.items()]
-    rows += [page(u, []) for u in uniq_children]
+    rows = [_page(u, links) for u, links in kids.items()]
+    rows += [_page(u) for u in uniq_children]
     pages = spark.createDataFrame(
         rows, "url string, html binary, format string"
     )
@@ -202,16 +242,12 @@ def test_stream_crawl_round_full_loop(spark, tmp_path):
 
     frontier = tmp_path / "frontier"
     frontier.mkdir()
-    work = str(tmp_path / "work")
-    cand_cols = CANDIDATE_SCHEMA.fieldNames()
-    seeds = make_seeds(
-        spark, [(u, "html-generic", 0) for u in sorted(kids)]
-    ).select(cand_cols)
-    seeds.coalesce(1).write.mode("append").parquet(str(frontier))
+    store = RoundStore(spark, str(tmp_path / "store"))
+    _write_seeds(spark, frontier, sorted(kids))
 
     def run_round():
         q = stream_crawl_round(
-            spark, str(frontier), pages, work,
+            spark, str(frontier), pages, store,
             politeness=politeness,
             config=CrawlConfig(seen_mode="exact", num_shards=4, max_depth=2),
         )
@@ -219,109 +255,82 @@ def test_stream_crawl_round_full_loop(spark, tmp_path):
 
     run_round()                      # epoch 0: the four seeds
     run_round()                      # RESTART; epoch 1: the children
+    assert store.last_committed_round() == 1
 
-    recs = spark.read.parquet(work + "/records/epoch-*")
-    fetched = sorted(r.url for r in recs.select("url").collect())
+    fetched = sorted(r.url for r in store.all_records().select("url")
+                     .collect())
     # every page exactly once: the shared child link dedups through
     # the GroupState seen gate, across two query lifetimes
     assert fetched == sorted(list(kids) + uniq_children)
-
-    sched = spark.read.parquet(work + "/scheduled/epoch-*")
-    by_epoch = {
-        int(r.epoch): r.cnt
-        for r in sched.groupBy("epoch").agg(
-            F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    assert by_epoch[0] == 4 and by_epoch[1] == len(uniq_children)
+    assert [store.read_meta(n)["scheduled"] for n in (0, 1)] \
+        == [4, len(uniq_children)]
     # depth expansion happened through the loop, and stopped there
-    assert {r.depth for r in sched.filter("epoch = 1").collect()} == {1}
+    assert {r.depth for r in spark.read.parquet(
+        str(frontier / "children-000000000-*")).collect()} == {1}
 
-    # per-host spacing holds CONTINUOUSLY: consecutive fetch_ts per
-    # host, pooled across micro-batches/restarts, differ >= delay
-    for host in ("h0.x", "h1.x"):
-        ts = sorted(r.fetch_ts for r in
-                    sched.filter(F.col("url_host") == host).collect())
-        gaps = [b - a for a, b in zip(ts, ts[1:])]
-        assert all(g >= 10.0 - 1e-9 for g in gaps), (host, ts)
+    # per-host spacing holds CONTINUOUSLY: each round's committed
+    # offsets carry the host's next slot across the restart (delay 10,
+    # concurrency 1): h0.x 2 seeds then 3 children, h1.x 2 then 4
+    offsets = {r.url_host: r.next_fetch_ts
+               for r in store.read_table(1, "offsets").collect()}
+    assert offsets == {"h0.x": 50.0, "h1.x": 60.0}
 
     # a re-injected duplicate seed file admits NOTHING (seen state
     # survived two restarts)
-    seeds.coalesce(1).write.mode("append").parquet(str(frontier))
+    _write_seeds(spark, frontier, sorted(kids))
     run_round()                      # epoch 2: all duplicates
-    assert spark.read.parquet(
-        work + "/records/epoch-*"
-    ).count() == len(kids) + len(uniq_children)
-    sched2 = spark.read.parquet(work + "/scheduled/epoch-*")
-    assert sched2.filter("epoch = 2").count() == 0
+    assert store.read_meta(2)["scheduled"] == 0
+    assert store.all_records().count() == len(kids) + len(uniq_children)
 
 
-def test_stream_schedule_politeness_across_microbatches(spark, tmp_path):
-    """VERDICT r2 #9: foreachBatch politeness — each micro-batch runs
-    the batch engine's schedule() with offsets carried through the
-    epoch ledger, so per-host spacing holds ACROSS batches and the
-    stream is bit-equal to running the batch engine round-by-round on
-    the same inputs."""
-    from hepcrawl_spark.frontier.fingerprint import with_url_identity
+def test_stream_crawl_offsets_replay_batch_schedule(spark, tmp_path):
+    """Each micro-batch runs the batch engine's schedule() with the
+    host offsets the round before committed, so per-host spacing holds
+    ACROSS batches: every round's committed offsets equal a batch
+    ``schedule`` + ``_merge_offsets`` replay of the same micro-batches,
+    and a host's slots never restart at a batch boundary."""
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.politeness import schedule
-    from hepcrawl_spark.frontier.rounds import _merge_offsets
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, _merge_offsets
     from hepcrawl_spark.schema import POLITENESS_SCHEMA
-    from hepcrawl_spark.streaming.pipeline import stream_schedule
+    from hepcrawl_spark.streaming.pipeline import stream_crawl_round
 
-    src = tmp_path / "cand"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sched")
-    led = str(tmp_path / "offsets")
-
-    cand_schema = "url string, priority long, seq long"
-    b1 = [("http://h0.x/u0", 0, 1), ("http://h0.x/u1", 0, 2),
-          ("http://h1.x/v0", 0, 3), ("http://h1.x/v1", 0, 4),
-          ("http://h1.x/v2", 0, 5)]
-    b2 = [("http://h0.x/u2", 0, 6), ("http://h0.x/u3", 0, 7),
-          ("http://h1.x/v3", 0, 8)]
-    spark.createDataFrame(b1, cand_schema).coalesce(1).write.parquet(
-        str(src / "b1"))
-    spark.createDataFrame(b2, cand_schema).coalesce(1).write.parquet(
-        str(src / "b2"))
+    b1 = ["http://h0.x/u0", "http://h0.x/u1", "http://h1.x/v0",
+          "http://h1.x/v1", "http://h1.x/v2"]
+    b2 = ["http://h0.x/u2", "http://h0.x/u3", "http://h1.x/v3"]
+    pages = spark.createDataFrame(
+        [_page(u) for u in b1 + b2], "url string, html binary, format string")
     politeness = spark.createDataFrame(
         [("h0.x", 5.0, 1), ("h1.x", 2.0, 2)], POLITENESS_SCHEMA
     )
+    frontier = tmp_path / "frontier"
+    frontier.mkdir()
+    # two seed files, one micro-batch each
+    batches = [_write_seeds(spark, frontier, b) for b in (b1, b2)]
+    store = RoundStore(spark, str(tmp_path / "store"))
+    stream_crawl_round(
+        spark, str(frontier), pages, store, politeness=politeness,
+        config=CrawlConfig(seen_mode="exact", num_shards=4),
+        max_files_per_trigger=1,
+    ).awaitTermination(180)
+    assert store.last_committed_round() == 1
 
-    stream = (
-        spark.readStream.schema(cand_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = stream_schedule(stream, ckpt, out, led, politeness=politeness)
-    q.awaitTermination(120)
+    def rows(df):
+        return {r.url_host: (r.next_fetch_ts, r.crawl_delay)
+                for r in df.collect()}
 
-    got = {
-        (r.url, r.fetch_ts)
-        for r in spark.read.parquet(out + "/epoch-*").collect()
-    }
-    assert len(got) == 8
-
-    # batch-engine round-by-round replay on the same inputs = parity
-    o = None
-    want = set()
-    for batch in (b1, b2):
-        df = with_url_identity(spark.createDataFrame(batch, cand_schema))
-        sched, _, new_o = schedule(df, politeness, o)
-        want |= {(r.url, r.fetch_ts) for r in sched.collect()}
+    o, fetch_ts = None, {}
+    for n, batch in enumerate(batches):
+        sched, _, new_o = schedule(batch, politeness, o)
         o = _merge_offsets(o, new_o)
-    assert got == want
-
-    # spacing invariant across the batch boundary, per host
-    by_host = {}
-    for url, ts in got:
-        by_host.setdefault(url.split("/")[2], []).append(ts)
-    # h0: delay 5, concurrency 1 → strictly one fetch per 5 s
-    h0 = sorted(by_host["h0.x"])
-    assert h0 == [0.0, 5.0, 10.0, 15.0]
-    # h1: delay 2, concurrency 2 → ≤2 per slot, slots ≥2 s apart,
-    # batch-2 url waits for the carried offset (4.0), never early
-    h1 = sorted(by_host["h1.x"])
-    assert h1 == [0.0, 0.0, 2.0, 4.0]
+        assert rows(store.read_table(n, "offsets")) == rows(o)
+        for r in sched.collect():
+            fetch_ts.setdefault(r.url_host, []).append(r.fetch_ts)
+    # h0: delay 5, concurrency 1 → one fetch per 5 s, batch 2 going on
+    # from the carried offset; h1: delay 2, concurrency 2 → ≤2 per slot,
+    # the batch-2 url waits for the carried offset (4.0), never early
+    assert sorted(fetch_ts["h0.x"]) == [0.0, 5.0, 10.0, 15.0]
+    assert sorted(fetch_ts["h1.x"]) == [0.0, 0.0, 2.0, 4.0]
 
 
 def test_stream_clean_corpus_dedup_across_microbatches(spark, tmp_path):
@@ -482,26 +491,10 @@ def test_stream_clean_corpus_state_survives_restart(spark, tmp_path):
     assert sorted(r.doc_id for r in sink2) == [6]
 
 
-def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
-    """VERDICT r4 #7: the drain-loop helper — a 3-level crawl runs to
-    empty through drive_stream_crawl's restart loop, and the drained
-    record set matches the batch engine on the same fixture corpus."""
-    from hepcrawl_spark.frontier.checkpoint import RoundStore
-    from hepcrawl_spark.frontier.rounds import (
-        CrawlConfig,
-        make_seeds,
-        run_crawl,
-    )
-    from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
+def _three_depths(spark):
+    """A 3-level link tree on two hosts with one linked page missing
+    from the corpus: (pages, politeness, seed urls, every page)."""
     from hepcrawl_spark.schema import POLITENESS_SCHEMA
-    from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
-
-    def page(url, links):
-        body = "".join(f'<a href="{u}">x</a>' for u in links)
-        return (url,
-                f"<html><head><title>T {url}</title></head>"
-                f"<body>doc body {url} {body}</body></html>".encode(),
-                "html-generic")
 
     tree = {
         "http://h0.x/s0": ["http://h0.x/s0/c0", "http://h0.x/s0/c1"],
@@ -513,63 +506,165 @@ def test_drive_stream_crawl_drains_three_depths(spark, tmp_path):
         "http://h1.x/s1/c3": ["http://h1.x/missing"],
     }
     leaves = ["http://h0.x/g0", "http://h0.x/g1", "http://h1.x/g2"]
-    rows = [page(u, links) for u, links in tree.items()]
-    rows += [page(u, []) for u in leaves]
+    rows = [_page(u, links) for u, links in tree.items()]
+    rows += [_page(u) for u in leaves]
     pages = spark.createDataFrame(
         rows, "url string, html binary, format string"
     )
     politeness = spark.createDataFrame(
         [("h0.x", 1.0, 1), ("h1.x", 1.0, 1)], POLITENESS_SCHEMA
     )
-    seed_urls = ["http://h0.x/s0", "http://h1.x/s1"]
-    seeds = make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls])
+    return (pages, politeness, ["http://h0.x/s0", "http://h1.x/s1"],
+            sorted(set(tree) | set(leaves)))
 
+
+@pytest.mark.parametrize("seen_mode", ["exact", "cuckoo"])
+def test_drive_stream_crawl_drains_three_depths(spark, tmp_path, seen_mode):
+    """The drain-loop helper — a 3-level crawl runs to empty through
+    drive_stream_crawl's restart loop and commits what the batch
+    engine commits on the same inputs: the same records (full rows)
+    and errors, the same per-round counters, and lineage with the
+    batch schema and the same emitted total."""
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
+    from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
+
+    pages, politeness, seed_urls, every_page = _three_depths(spark)
+    config = CrawlConfig(seen_mode=seen_mode, num_shards=4, max_rounds=8,
+                         max_depth=3)
     frontier = tmp_path / "frontier"
     frontier.mkdir()
-    seeds.select(CANDIDATE_SCHEMA.fieldNames()).coalesce(1) \
-        .write.mode("append").parquet(str(frontier))
+    seeds = _write_seeds(spark, frontier, seed_urls)
+    stream = RoundStore(spark, str(tmp_path / "stream_store"))
     persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs().size
     before = persistent_rdds()
-    out = drive_stream_crawl(
-        spark, str(frontier), pages, str(tmp_path / "work"),
-        politeness=politeness,
-        config=CrawlConfig(seen_mode="exact", num_shards=4, max_depth=3),
-    )
-    # depth 0/1/2 rounds + one empty confirming round, then drained
-    assert out["drained"] and 3 <= out["rounds"] <= 4
+    out = drive_stream_crawl(spark, str(frontier), pages, stream,
+                             politeness=politeness, config=config)
     # every epoch released what it persisted
     assert persistent_rdds() == before
 
-    stream_recs = sorted(
-        (r.url, r.title) for r in spark.read.parquet(
-            out["records_path"] + "/epoch-*"
-        ).select("url", "title").collect()
-    )
-    assert {u for u, _ in stream_recs} == set(tree) | set(leaves)
+    batch = RoundStore(spark, str(tmp_path / "batch_store"))
+    summary = run_crawl(spark, seeds, pages, politeness=politeness,
+                        store=batch, config=config)
+    # depth 0/1/2 rounds, then a run that commits nothing
+    assert out == {"rounds": summary["rounds"], "drained": True}
+    assert out["rounds"] == 3
 
-    # parity: the batch engine on the same corpus fetches the same
-    # records (url + extracted title)
-    store = RoundStore(spark, str(tmp_path / "batch_store"))
-    run_crawl(spark, seeds, pages, politeness=politeness, store=store,
-              config=CrawlConfig(seen_mode="exact", max_rounds=8,
-                                 max_depth=3))
-    batch_recs = sorted(
-        (r.url, r.title)
-        for r in store.all_records().select("url", "title").collect()
-    )
-    assert stream_recs == batch_recs
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: tuple(map(str, r)))
 
-    # the fetch miss is recorded, not dropped: the streaming error and
-    # lineage ledgers carry the batch store's rows and schemas
-    work = str(tmp_path / "work")
-    stream_errors = spark.read.parquet(work + "/errors/epoch-*")
-    assert sorted(stream_errors.collect()) == sorted(
-        store.all_errors().collect()) == [
+    stream_recs = rows(stream.all_records())
+    assert sorted(r.url for r in stream_recs) == every_page
+    assert stream_recs == rows(batch.all_records())
+    # the fetch miss is recorded, not dropped
+    assert rows(stream.all_errors()) == rows(batch.all_errors()) == [
         ("http://h1.x/missing", "FetchMiss: url not in corpus")]
-    stream_lineage = spark.read.parquet(work + "/lineage/epoch-*")
-    assert stream_lineage.schema == store.all_lineage().schema
-    assert stream_lineage.agg(F.sum("emitted_rows")).first()[0] \
-        == len(stream_recs)
+    for n in range(out["rounds"]):
+        assert stream.read_meta(n) == batch.read_meta(n)
+    assert stream.all_lineage().schema == batch.all_lineage().schema
+    assert stream.all_lineage().agg(F.sum("emitted_rows")).first()[0] \
+        == batch.all_lineage().agg(F.sum("emitted_rows")).first()[0] \
+        == len(every_page)
+
+
+@pytest.mark.parametrize("store_cls", ["RoundStore", "SnapshotLogStore"])
+def test_stream_crawl_retried_epoch_commits_once(spark, tmp_path,
+                                                 store_cls):
+    """A micro-batch that Spark re-runs after its round committed (the
+    query died between the store's commit point and its own commit
+    log) commits nothing: no CommitConflictError, no duplicate records,
+    its children are not published again, and the seen state still
+    rejects re-injected seeds."""
+    import os
+
+    from hepcrawl_spark.frontier import checkpoint
+    from hepcrawl_spark.frontier.rounds import CrawlConfig
+    from hepcrawl_spark.streaming.pipeline import stream_crawl_round
+
+    frontier = tmp_path / "frontier"
+    frontier.mkdir()
+    pages, politeness, seed_urls, every_page = _three_depths(spark)
+    _write_seeds(spark, frontier, seed_urls)
+    store = getattr(checkpoint, store_cls)(spark, str(tmp_path / "store"))
+
+    def run():  # one availableNow run
+        stream_crawl_round(
+            spark, str(frontier), pages, store, politeness=politeness,
+            config=CrawlConfig(seen_mode="cuckoo", num_shards=4, max_depth=3),
+        ).awaitTermination(180)
+
+    def urls():
+        return sorted(r.url for r in store.all_records().select("url")
+                      .collect())
+
+    run()                                   # round 0: the seeds
+    children = _children_files(frontier)    # round 0's children
+    assert children and store.last_committed_round() == 0
+    commits = tmp_path / "store" / "stream-checkpoint" / "commits"
+    for path in commits.glob("*0*"):        # 0 and its .crc
+        os.remove(path)
+    run()              # re-runs epoch 0, then round 1 takes its children
+    assert (commits / "0").exists()
+    assert store.last_committed_round() == 1
+    assert {name: mtime for name, mtime in _children_files(frontier).items()
+            if name in children} == children
+    assert [store.read_meta(n)["records"] for n in (0, 1)] == [2, 4]
+    assert len(urls()) == len(set(urls())) == 6
+
+    # round 2: round 1's children and the re-injected seeds, which the
+    # seen state rejects
+    _write_seeds(spark, frontier, seed_urls)
+    run()
+    assert store.read_meta(2)["scheduled"] == 4
+    assert urls() == every_page
+
+
+@pytest.mark.parametrize("store_cls", ["RoundStore", "SnapshotLogStore"])
+def test_stream_crawl_failed_write_leaves_round_uncommitted(spark, tmp_path,
+                                                            store_cls):
+    """One of round 1's table writes raises: the query fails, no commit
+    point appears, the epoch's caches are released, and restarting on
+    the store gives the uninterrupted crawl's records, each once."""
+    from hepcrawl_spark.frontier import checkpoint
+    from hepcrawl_spark.frontier.rounds import CrawlConfig
+    from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
+
+    def boom(value):  # nested: pickled by value for the Python workers
+        raise RuntimeError("planted write failure")
+
+    base = getattr(checkpoint, store_cls)
+
+    class FailingStore(base):
+        def commit_round(self, n, tables, meta=None):
+            if n == 1:
+                tables = {**tables, "offsets": tables["offsets"].withColumn(
+                    "url_host", F.udf(boom, "string")("url_host"))}
+            super().commit_round(n, tables, meta)
+
+    frontier = tmp_path / "frontier"
+    frontier.mkdir()
+    pages, politeness, seed_urls, every_page = _three_depths(spark)
+    _write_seeds(spark, frontier, seed_urls)
+
+    def drive(store):
+        return drive_stream_crawl(
+            spark, str(frontier), pages, store, politeness=politeness,
+            config=CrawlConfig(seen_mode="cuckoo", num_shards=4, max_depth=3))
+
+    root = str(tmp_path / "store")
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="planted write failure"):
+        drive(FailingStore(spark, root))
+    store = base(spark, root)
+    assert store.last_committed_round() == 0
+    assert [s["round"] for s in store.snapshot_log()] == [0]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+    assert drive(store) == {"rounds": 3, "drained": True}
+    titles = sorted(map(tuple, store.all_records().select("url", "title")
+                        .collect()))
+    assert titles == [(u, f"T {u}") for u in every_page]
+    assert [store.read_meta(n)["records"] for n in range(3)] == [2, 4, 3]
 
 
 def test_stream_clean_corpus_mixes(spark, tmp_path):
@@ -634,21 +729,9 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path,
     engines, and the drained record sets still match under either
     seen gate."""
     from hepcrawl_spark.frontier.checkpoint import RoundStore
-    from hepcrawl_spark.frontier.rounds import (
-        CrawlConfig,
-        make_seeds,
-        run_crawl,
-    )
-    from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
+    from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
     from hepcrawl_spark.schema import POLITENESS_SCHEMA, ROBOTS_SCHEMA
     from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
-
-    def page(url, links):
-        body = "".join(f'<a href="{u}">x</a>' for u in links)
-        return (url,
-                f"<html><head><title>T {url}</title></head>"
-                f"<body>doc body {url} {body}</body></html>".encode(),
-                "html-generic")
 
     tree = {
         "http://h0.x/s0": ["http://h0.x/s0/c0", "http://h1.x/cross"],
@@ -656,8 +739,8 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path,
     }
     leaves = ["http://h0.x/s0/c0", "http://h1.x/cross",
               "http://h1.x/s1/c2"]
-    rows = [page(u, links) for u, links in tree.items()]
-    rows += [page(u, []) for u in leaves]
+    rows = [_page(u, links) for u, links in tree.items()]
+    rows += [_page(u) for u in leaves]
     pages = spark.createDataFrame(
         rows, "url string, html binary, format string"
     )
@@ -676,27 +759,22 @@ def test_stream_crawl_url_blocklist_parity_with_batch(spark, tmp_path,
     # the blocked loop-back CHILD cross linked from an h0.x page)
     frontier = tmp_path / "frontier"
     frontier.mkdir()
-    make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls]) \
-        .select(CANDIDATE_SCHEMA.fieldNames()).coalesce(1) \
-        .write.mode("append").parquet(str(frontier))
+    seeds = _write_seeds(spark, frontier, seed_urls)
+    stream = RoundStore(spark, str(tmp_path / "stream_store"))
     out = drive_stream_crawl(
-        spark, str(frontier), pages, str(tmp_path / "work"),
+        spark, str(frontier), pages, stream,
         politeness=politeness, robots=robots, config=config,
     )
     assert out["drained"]
     stream_urls = sorted(
-        r.url for r in spark.read.parquet(
-            str(tmp_path / "work") + "/records/epoch-*"
-        ).select("url").collect()
+        r.url for r in stream.all_records().select("url").collect()
     )
     assert stream_urls == ["http://h0.x/s0", "http://h0.x/s0/c0"]
 
     # batch engine, same config → identical record set
     ckpt = str(tmp_path / "ckpt")
     run_crawl(
-        spark,
-        make_seeds(spark, [(u, "html-generic", 0) for u in seed_urls]),
-        pages, politeness=politeness, robots=robots,
+        spark, seeds, pages, politeness=politeness, robots=robots,
         store=RoundStore(spark, ckpt), config=config,
     )
     batch_urls = sorted(
@@ -716,6 +794,7 @@ def test_stream_crawl_round_rejects_batch_only_config(spark, tmp_path,
     before any query starts, instead of a bare KeyError or silence."""
     import dataclasses
 
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.rounds import CrawlConfig
     from hepcrawl_spark.streaming.pipeline import stream_crawl_round
 
@@ -724,7 +803,8 @@ def test_stream_crawl_round_rejects_batch_only_config(spark, tmp_path,
     pages = spark.createDataFrame([], "url string, html binary")
     with pytest.raises(ValueError, match=field):
         stream_crawl_round(spark, str(tmp_path / "frontier"), pages,
-                           str(tmp_path / "work"), config=config)
+                           RoundStore(spark, str(tmp_path / "store")),
+                           config=config)
 
 
 def test_read_warc_stream_parses_members(spark, tmp_path):
@@ -848,8 +928,8 @@ def test_stream_content_seen_ends_mirror_loop(spark, tmp_path):
     (self-link page) — without the checksum ledger and with URL-seen
     sharded off the dup URL, the loop would re-expand forever; the
     ledger ends it, and the state survives the per-round restarts."""
-    from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds
-    from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
+    from hepcrawl_spark.frontier.checkpoint import RoundStore
+    from hepcrawl_spark.frontier.rounds import CrawlConfig
     from hepcrawl_spark.streaming.pipeline import drive_stream_crawl
 
     body = ("<html><title>Loop</title><body>dup body "
@@ -859,18 +939,16 @@ def test_stream_content_seen_ends_mirror_loop(spark, tmp_path):
          ("http://z.test/b", body, "html-generic")],
         "url string, html binary, format string",
     )
-    seeds = make_seeds(spark, [("http://z.test/a", "html-generic", 0)])
     frontier = tmp_path / "frontier"
     frontier.mkdir()
-    seeds.select(CANDIDATE_SCHEMA.fieldNames()).coalesce(1) \
-        .write.mode("append").parquet(str(frontier))
+    _write_seeds(spark, frontier, ["http://z.test/a"])
+    store = RoundStore(spark, str(tmp_path / "store"))
     out = drive_stream_crawl(
-        spark, str(frontier), pages, str(tmp_path / "work"),
+        spark, str(frontier), pages, store,
         config=CrawlConfig(seen_mode="exact", num_shards=2, max_depth=6,
                            content_seen=True),
     )
     assert out["drained"]
-    recs = spark.read.parquet(out["records_path"] + "/epoch-*") \
-        .select("url").collect()
+    recs = store.all_records().select("url").collect()
     # only the first copy was ever processed
     assert [r.url for r in recs] == ["http://z.test/a"]
