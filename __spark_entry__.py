@@ -447,10 +447,8 @@ def _q_dedup_minhash(spark, sf_dir):
     pairs = dedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), n=3, threshold=0.8
     )
-    out = pairs.select("doc_a", "doc_b",
-                       F.round("jaccard", 9).alias("jaccard"))
-    out._lsh_cache = pairs._lsh_cache
-    return out
+    return pairs.select("doc_a", "doc_b",
+                        F.round("jaccard", 9).alias("jaccard"))
 
 
 def _q_dedup_jaccard_capped(spark, sf_dir):
@@ -1626,12 +1624,9 @@ def _q_clean_span_rewritten(spark, sf_dir):
 
     inner = clean_corpus_full(_t(spark, sf_dir, "documents"),
                               capacity=512, span_rewrite_w=3)
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "removed_cnt", "fingerprint", "seq_id",
-                       "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    out._caches = inner._caches
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "removed_cnt", "fingerprint", "seq_id",
+                        "seq_offset")
 
 
 def _q_pack_sequences(spark, sf_dir):
@@ -1640,9 +1635,7 @@ def _q_pack_sequences(spark, sf_dir):
     from hepcrawl_spark.operators.corpus import pack_sequences
 
     inner = pack_sequences(_t(spark, sf_dir, "documents"), capacity=512)
-    out = inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
 
 
 def _q_pack_clean_corpus(spark, sf_dir):
@@ -1656,10 +1649,8 @@ def _q_pack_clean_corpus(spark, sf_dir):
 
     cleaned = clean_corpus(_t(spark, sf_dir, "documents"))
     inner = pack_sequences(cleaned, capacity=512, count_col="token_cnt")
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "fingerprint", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "fingerprint", "seq_id", "seq_offset")
 
 
 def _q_clean_full(spark, sf_dir):
@@ -1671,11 +1662,8 @@ def _q_clean_full(spark, sf_dir):
 
     inner = clean_corpus_full(_t(spark, sf_dir, "documents"),
                               capacity=512)
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "fingerprint", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    out._caches = inner._caches
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "fingerprint", "seq_id", "seq_offset")
 
 
 def _q_benchmark_contamination(spark, sf_dir):
@@ -1701,11 +1689,8 @@ def _q_clean_decontaminated(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 7 == 2)
     inner = clean_corpus_full(docs, capacity=512, benchmark=bench)
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "fingerprint", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    out._caches = inner._caches
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "fingerprint", "seq_id", "seq_offset")
 
 
 def _q_clean_decontam_rewritten(spark, sf_dir):
@@ -1719,12 +1704,9 @@ def _q_clean_decontam_rewritten(spark, sf_dir):
     bench = docs.filter(F.col("doc_id") % 7 == 2)
     inner = clean_corpus_full(docs, capacity=512, benchmark=bench,
                               span_rewrite_w=3)
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "removed_cnt", "fingerprint", "seq_id",
-                       "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    out._caches = inner._caches
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "removed_cnt", "fingerprint", "seq_id",
+                        "seq_offset")
 
 
 def _q_unigram_logprob(spark, sf_dir):
@@ -1855,9 +1837,7 @@ def _q_balanced_pack(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").join(
         F.broadcast(keep), on="doc_id", how="inner")
     inner = pack_sequences(docs, capacity=512)
-    out = inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
 
 
 def _q_contamination_bloom(spark, sf_dir):
@@ -2221,11 +2201,9 @@ def _q_cross_corpus_lsh(spark, sf_dir):
     inner = dedup.cross_corpus_lsh(
         new_docs, ref_docs, n=3, threshold=0.8
     )
-    out = inner.select(
+    return inner.select(
         "doc_id", "exact_dup", "near_cnt", "max_jaccard", "keep"
     )
-    out._lsh_caches = inner._lsh_caches
-    return out
 
 
 def _q_normalize_punct(spark, sf_dir):
@@ -2267,10 +2245,8 @@ def _q_ccnet_pack(spark, sf_dir):
         "doc_id", "lang", "token_cnt", "bucket"
     )
     inner = pack_sequences(kept, capacity=512, count_col="token_cnt")
-    out = inner.select("doc_id", "lang", "token_cnt", "bucket",
-                       "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "lang", "token_cnt", "bucket",
+                        "seq_id", "seq_offset")
 
 
 def _q_dsir_weights(spark, sf_dir):
@@ -4046,9 +4022,7 @@ def _q_mix_quota(spark, sf_dir):
 
     inner = mix_quota(_t(spark, sf_dir, "documents"), _MIX_QUOTAS,
                       group_cols=("lang",), salt=_MIX_SALT)
-    out = inner.select("doc_id", "lang", "source")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "lang", "source")
 
 
 def _q_mix_pack(spark, sf_dir):
@@ -4059,9 +4033,7 @@ def _q_mix_pack(spark, sf_dir):
     mixed = mix_sample(_t(spark, sf_dir, "documents"), _MIX_RATES,
                        default_rate=_MIX_DEFAULT, salt=_MIX_SALT)
     inner = pack_sequences(mixed, capacity=512)
-    out = inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
 
 
 def _q_classifier_train(spark, sf_dir):
@@ -4452,11 +4424,8 @@ def _q_clean_full_best(spark, sf_dir):
 
     inner = clean_corpus_full(_t(spark, sf_dir, "documents"),
                               capacity=512, keep_best=True)
-    out = inner.select("doc_id", "guessed_lang", "token_cnt",
-                       "fingerprint", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    out._caches = inner._caches
-    return out
+    return inner.select("doc_id", "guessed_lang", "token_cnt",
+                        "fingerprint", "seq_id", "seq_offset")
 
 
 def _q_media_phash(spark, sf_dir):
@@ -4571,9 +4540,7 @@ def _q_pipeline_funnel(spark, sf_dir):
         .select(F.lit("3_deduped").alias("stage"),
                 "n_docs", "n_tokens")
     )
-    out = raw.unionByName(gated).unionByName(d)
-    out._caches = [g]
-    return out
+    return raw.unionByName(gated).unionByName(d)
 
 
 def _q_curriculum_pack(spark, sf_dir):
@@ -4586,11 +4553,9 @@ def _q_curriculum_pack(spark, sf_dir):
         _t(spark, sf_dir, "documents")
     ).select("doc_id", "token_cnt", "cls_score")
     inner = curriculum_pack(scored, capacity=512)
-    out = inner.select(
+    return inner.select(
         "doc_id", "token_cnt", "cls_score", "seq_id", "seq_offset"
     )
-    out._cumsum_cache = inner._cumsum_cache
-    return out
 
 
 def _q_subword_pack(spark, sf_dir):
@@ -4603,9 +4568,7 @@ def _q_subword_pack(spark, sf_dir):
     ).select("doc_id", F.col("subword_cnt").alias("token_cnt"))
     inner = pack_sequences(counted, capacity=512,
                            count_col="token_cnt")
-    out = inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
 
 
 def _q_subword_stats(spark, sf_dir):
@@ -4768,9 +4731,7 @@ def _q_split_pack(spark, sf_dir):
         salt=_SPLIT_SALT,
     ).where(F.col("split") == "train")
     inner = corpus_ops.pack_sequences(train, capacity=512)
-    out = inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
-    out._cumsum_cache = inner._cumsum_cache
-    return out
+    return inner.select("doc_id", "token_cnt", "seq_id", "seq_offset")
 
 
 def oracle_sql() -> dict[str, str]:

@@ -31,6 +31,15 @@ def _materialize(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+def _release_all(spark):
+    """Drop every cached frame and persisted RDD of the session (the
+    pipeline queries persist intermediate frames and local checkpoints),
+    so one query's blocks never share memory with the next's timing."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
 def run_crawl_bench(spark, sf_dir):
     """The headline pipeline; returns (urls_processed, seconds)."""
     import __spark_entry__ as entrymod
@@ -69,13 +78,14 @@ def p04_stage_breakdown(spark, sf_dir):
         clean_corpus,
         pack_sequences,
     )
+    from hepcrawl_spark.lifetimes import release
     from hepcrawl_spark.operators.dedup import (
         dedup_clusters,
         minhash_lsh_pairs,
     )
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    stages, counts = {}, {}
+    stages, counts, caches = {}, {}, []
 
     t0 = time.time()
     cleaned = clean_corpus(docs).persist()
@@ -86,12 +96,13 @@ def p04_stage_breakdown(spark, sf_dir):
         cleaned.select("doc_id"), on="doc_id", how="leftsemi"
     )
     t0 = time.time()
-    pairs = minhash_lsh_pairs(surv, n=3, threshold=0.8).persist()
+    pairs = minhash_lsh_pairs(surv, n=3, threshold=0.8,
+                              caches=caches).persist()
     counts["neardup_pairs"] = pairs.count()
     stages["lsh_pairs"] = round(time.time() - t0, 3)
 
     t0 = time.time()
-    clusters = dedup_clusters(surv, pairs)
+    clusters = dedup_clusters(surv, pairs, caches=caches)
     keep = clusters.filter(
         F.col("cluster_id") == F.col("doc_id")
     ).select("doc_id").persist()
@@ -100,12 +111,11 @@ def p04_stage_breakdown(spark, sf_dir):
 
     t0 = time.time()
     out = pack_sequences(cleaned.join(keep, on="doc_id", how="leftsemi"),
-                         capacity=512, count_col="token_cnt")
+                         capacity=512, count_col="token_cnt", caches=caches)
     _materialize(out)
     stages["pack_layout"] = round(time.time() - t0, 3)
 
-    for c in (cleaned, pairs, keep, pairs._lsh_cache, out._cumsum_cache):
-        c.unpersist()
+    release([cleaned, pairs, keep, *caches])
     return {"metric": "p04_stage_seconds", "stages": stages,
             "counts": counts, "sf_dir": sf_dir,
             "total_sec": round(sum(stages.values()), 3)}
@@ -158,15 +168,7 @@ def main():
         df = fn(spark, sf_dir)
         _materialize(df)
         per_query[name] = round(time.time() - t0, 3)
-        # the pipeline queries persist intermediate frames (two-phase
-        # cumsum buckets, the cleaned-corpus frame); release them so
-        # later queries' timings don't share their memory
-        for cache in (getattr(df, "_caches", None)
-                      or [getattr(df, "_cumsum_cache", None),
-                          getattr(df, "_lsh_cache", None),
-                          *(getattr(df, "_lsh_caches", None) or ())]):
-            if cache is not None:
-                cache.unpersist()
+        _release_all(spark)
     suite_sec = round(time.time() - suite_t0, 3)
 
     # headline = best-of-2 (the sandbox host's wall-clock varies 2-4×

@@ -43,11 +43,6 @@ def register(fmt: str):
     return _wrap
 
 
-def get_extractor(fmt: str):
-    entry = _REGISTRY.get(fmt)
-    return entry[0] if entry else None
-
-
 def get_extractor_entry(fmt: str):
     """(callable, url_aware) or None — the dispatch-side lookup."""
     return _REGISTRY.get(fmt)

@@ -20,14 +20,6 @@ from .xmlpath import parse_xml, strip_namespaces
 from ..functions.textutils import parse_domain
 
 
-def _texts_where(root, tag: str, pred) -> List[str]:
-    out = []
-    for el in root.iter(tag):
-        if pred(el):
-            out.extend(_own_texts(el))
-    return out
-
-
 def _own_texts(el) -> List[str]:
     out = []
     if el.text:

@@ -22,17 +22,20 @@ than the pages scan (hosts, not URLs), so the iteration loop touches
 only host-cardinality frames.  Each iteration is one shuffle join
 (edges x ranks on src_host) plus one aggregation (on dst_host); the
 edge side is hash-partitioned once on src_host and reused across all
-iterations so only the small rank side moves, and lineage is
-truncated with ``localCheckpoint`` every ``checkpoint_every``
-iterations (same growth-control pattern as ``frontier.rounds``).
-The dangling mass is carried as a broadcast 1-row aggregate — no
-driver-side collect inside the loop.
+iterations so only the small rank side moves.  The dangling mass is
+carried as a broadcast 1-row aggregate — no driver-side collect inside
+the loop.  Every iterative operator here loops through
+``lifetimes.fixpoint`` (eager per-iteration checkpoints, each
+superseded one released), frees its loop-wide frames before returning,
+and puts the final checkpoint into the caller's ``caches`` list.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..lifetimes import fixpoint, persist, release
 
 # href="..." with either quote style; group 1/2 = the target.  The
 # reference extracts link targets with scrapy Selector xpaths
@@ -91,11 +94,57 @@ def host_graph(links: DataFrame) -> DataFrame:
     )
 
 
+def _host_frames(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(hosts, contrib_edges) for the mass-flow ranks below.
+
+    ``hosts`` is the node set flagged ONCE with ``has_out``, so the
+    per-iteration dangling mass is a filter + 1-row agg over the score
+    frame — never a membership join inside the loop.
+    ``contrib_edges`` is the (edge ⋈ out-weight) side partitioned once
+    on src_host; kept resident, every iteration joins the small score
+    frame against this layout, so only scores shuffle per iteration.
+    """
+    out_w = edges.groupBy("src_host").agg(
+        F.sum("weight").cast("double").alias("wout")
+    )
+    hosts = (
+        edges.select(F.col("src_host").alias("host"))
+        .unionByName(edges.select(F.col("dst_host").alias("host")))
+        .distinct()
+        .join(out_w.select(F.col("src_host").alias("host"),
+                           F.lit(True).alias("has_out")),
+              on="host", how="left")
+        .withColumn("has_out", F.coalesce("has_out", F.lit(False)))
+    )
+    return hosts, edges.join(out_w, "src_host").repartition("src_host")
+
+
+def _flow(contrib_edges: DataFrame, state: DataFrame,
+          score: str) -> tuple[DataFrame, DataFrame]:
+    """One iteration's flow of ``score`` along the weighted out-edges:
+    (per-dst_host ``contrib``, 1-row ``dangling`` mass of the hosts
+    without outlinks)."""
+    dangling = (
+        state.filter(~F.col("has_out"))
+        .agg(F.coalesce(F.sum(score), F.lit(0.0)).alias("dangling"))
+    )
+    contrib = (
+        contrib_edges
+        .join(state.select(F.col("host").alias("src_host"), F.col(score)),
+              "src_host")
+        .groupBy("dst_host")
+        .agg(F.sum(F.col(score) * F.col("weight") / F.col("wout"))
+             .alias("contrib"))
+    )
+    return contrib, dangling
+
+
 def pagerank_hosts(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 1,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Damped PageRank over a weighted host graph -> (host, rank).
 
@@ -106,52 +155,20 @@ def pagerank_hosts(
     on hosts with no outlinks, redistributed uniformly.  N is the size
     of the node set (union of sources and targets).  Deterministic
     given the edge table: integer weights, fixed iteration count, and
-    the same fold expression the DuckDB mirror unrolls.
+    the same fold expression the DuckDB mirror unrolls.  The result
+    reads the final checkpoint, which goes into ``caches``.
     """
-    out_w = edges.groupBy("src_host").agg(
-        F.sum("weight").cast("double").alias("wout")
-    )
-    # node set, flagged ONCE with has_out so the per-iteration
-    # dangling mass is a filter + 1-row agg over the rank frame —
-    # never a membership join inside the loop
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .join(out_w.select(F.col("src_host").alias("host"),
-                           F.lit(True).alias("has_out")),
-              on="host", how="left")
-        .withColumn("has_out", F.coalesce("has_out", F.lit(False)))
-        .persist()
-    )
+    hosts, contrib_edges = _host_frames(edges)
+    hosts = hosts.persist()
     n = hosts.count()  # one scalar agg over a host-cardinality frame
     if n == 0:
+        release([hosts])
         return hosts.select("host", F.lit(0.0).alias("rank"))
+    contrib_edges = contrib_edges.persist()
 
-    # partition the (edge ⋈ out-weight) side once on src_host and keep
-    # it resident: every iteration joins the small rank frame against
-    # this layout, so only ranks shuffle per iteration.
-    contrib_edges = (
-        edges.join(out_w, "src_host")
-        .repartition("src_host")
-        .persist()
-    )
-
-    ranks = hosts.select("host", "has_out", F.lit(1.0 / n).alias("rank"))
-    for i in range(iterations):
-        dangling = (
-            ranks.filter(~F.col("has_out"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
-        )
-        contrib = (
-            contrib_edges
-            .join(ranks.select(F.col("host").alias("src_host"), "rank"),
-                  "src_host")
-            .groupBy("dst_host")
-            .agg(F.sum(F.col("rank") * F.col("weight") / F.col("wout"))
-                 .alias("contrib"))
-        )
-        ranks = (
+    def step(ranks: DataFrame, _scratch) -> DataFrame:
+        contrib, dangling = _flow(contrib_edges, ranks, "rank")
+        return (
             hosts
             .join(contrib, hosts["host"] == contrib["dst_host"], "left")
             .crossJoin(F.broadcast(dangling))
@@ -166,8 +183,12 @@ def pagerank_hosts(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = fixpoint(
+        hosts.select("host", "has_out", F.lit(1.0 / n).alias("rank")),
+        step, iterations, caches=caches,
+    )
+    release([hosts, contrib_edges])
     return ranks.select("host", "rank")
 
 
@@ -176,7 +197,8 @@ def trustrank_hosts(
     seeds: list[str],
     damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 1,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004) over a
     weighted host graph -> (host, trust): personalized PageRank whose
@@ -202,52 +224,23 @@ def trustrank_hosts(
     partitioned once on src_host and stays resident so only the small
     trust frame shuffles per iteration, the seed flag is a plan
     literal (no membership join), and dangling mass rides a broadcast
-    1-row aggregate.
+    1-row aggregate.  The final checkpoint goes into ``caches``.
     """
-    out_w = edges.groupBy("src_host").agg(
-        F.sum("weight").cast("double").alias("wout")
-    )
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .join(out_w.select(F.col("src_host").alias("host"),
-                           F.lit(True).alias("has_out")),
-              on="host", how="left")
-        .withColumn("has_out", F.coalesce("has_out", F.lit(False)))
-        .withColumn("is_seed", F.col("host").isin(*seeds))
-        .persist()
-    )
+    hosts, contrib_edges = _host_frames(edges)
+    hosts = hosts.withColumn("is_seed", F.col("host").isin(*seeds)).persist()
     n_seeds = hosts.filter("is_seed").count()
     if n_seeds == 0:
+        release([hosts])
         raise ValueError(
             f"none of the {len(seeds)} seed hosts appear in the link "
             "graph — TrustRank would be identically zero"
         )
     t = F.when(F.col("is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+    contrib_edges = contrib_edges.persist()
 
-    contrib_edges = (
-        edges.join(out_w, "src_host")
-        .repartition("src_host")
-        .persist()
-    )
-
-    ranks = hosts.select("host", "has_out", "is_seed", t.alias("trust"))
-    for i in range(iterations):
-        dangling = (
-            ranks.filter(~F.col("has_out"))
-            .agg(F.coalesce(F.sum("trust"), F.lit(0.0)).alias("dangling"))
-        )
-        contrib = (
-            contrib_edges
-            .join(ranks.select(F.col("host").alias("src_host"),
-                               F.col("trust")),
-                  "src_host")
-            .groupBy("dst_host")
-            .agg(F.sum(F.col("trust") * F.col("weight") / F.col("wout"))
-                 .alias("contrib"))
-        )
-        ranks = (
+    def step(ranks: DataFrame, _scratch) -> DataFrame:
+        contrib, dangling = _flow(contrib_edges, ranks, "trust")
+        return (
             hosts
             .join(contrib, hosts["host"] == contrib["dst_host"], "left")
             .crossJoin(F.broadcast(dangling))
@@ -263,15 +256,20 @@ def trustrank_hosts(
                 ).alias("trust"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = fixpoint(
+        hosts.select("host", "has_out", "is_seed", t.alias("trust")),
+        step, iterations, caches=caches,
+    )
+    release([hosts, contrib_edges])
     return ranks.select("host", "trust")
 
 
 def opic_hosts(
     edges: DataFrame,
     rounds: int = 5,
-    checkpoint_every: int = 1,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """OPIC (Abiteboul, Preda & Cobéna, WWW 2003) over a weighted host
     graph -> (host, cash, hist, importance) — the On-line Page
@@ -301,53 +299,24 @@ def opic_hosts(
     only host-cardinality frames; the (edge ⋈ out-weight) side is
     hash-partitioned once on src_host and kept resident so only the
     small (cash, hist) frame shuffles per round; dangling cash rides a
-    broadcast 1-row aggregate; lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` rounds.
+    broadcast 1-row aggregate; each round's state is checkpointed by
+    ``lifetimes.fixpoint`` and the final checkpoint goes into
+    ``caches``.
     """
-    out_w = edges.groupBy("src_host").agg(
-        F.sum("weight").cast("double").alias("wout")
-    )
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .join(out_w.select(F.col("src_host").alias("host"),
-                           F.lit(True).alias("has_out")),
-              on="host", how="left")
-        .withColumn("has_out", F.coalesce("has_out", F.lit(False)))
-        .persist()
-    )
+    hosts, contrib_edges = _host_frames(edges)
+    hosts = hosts.persist()
     n = hosts.count()
     if n == 0:
+        release([hosts])
         return hosts.select(
             "host", F.lit(0.0).alias("cash"), F.lit(0.0).alias("hist"),
             F.lit(0.0).alias("importance"),
         )
+    contrib_edges = contrib_edges.persist()
 
-    contrib_edges = (
-        edges.join(out_w, "src_host")
-        .repartition("src_host")
-        .persist()
-    )
-
-    state = hosts.select(
-        "host", "has_out",
-        F.lit(1.0 / n).alias("cash"), F.lit(0.0).alias("hist"),
-    )
-    for i in range(rounds):
-        dangling = (
-            state.filter(~F.col("has_out"))
-            .agg(F.coalesce(F.sum("cash"), F.lit(0.0)).alias("dangling"))
-        )
-        contrib = (
-            contrib_edges
-            .join(state.select(F.col("host").alias("src_host"), "cash"),
-                  "src_host")
-            .groupBy("dst_host")
-            .agg(F.sum(F.col("cash") * F.col("weight") / F.col("wout"))
-                 .alias("contrib"))
-        )
-        state = (
+    def step(state: DataFrame, _scratch) -> DataFrame:
+        contrib, dangling = _flow(contrib_edges, state, "cash")
+        return (
             state
             .join(contrib, state["host"] == contrib["dst_host"], "left")
             .crossJoin(F.broadcast(dangling))
@@ -361,8 +330,15 @@ def opic_hosts(
                 (F.col("hist") + F.col("cash")).alias("hist"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=True)
+
+    state = fixpoint(
+        hosts.select(
+            "host", "has_out",
+            F.lit(1.0 / n).alias("cash"), F.lit(0.0).alias("hist"),
+        ),
+        step, rounds, caches=caches,
+    )
+    release([hosts, contrib_edges])
     return state.select(
         "host", "cash", "hist",
         ((F.col("hist") + F.col("cash")) / F.lit(float(rounds + 1)))
@@ -395,7 +371,8 @@ def hop_distance(
     edges: DataFrame,
     seeds: list[str],
     max_hops: int = 8,
-    checkpoint_every: int = 1,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Minimum link distance from any seed host -> (host, hops).
 
@@ -413,8 +390,8 @@ def hop_distance(
     once on ``src_host`` and reused every round, so only the small
     distance frame shuffles per round; each round is one join + one
     min-aggregation (both partial-agg-able, skew-safe: min combines
-    map-side), with lineage truncated every ``checkpoint_every``
-    rounds like the PageRank loop above.
+    map-side), checkpointed every round by ``lifetimes.fixpoint`` like
+    the PageRank loop above; the final checkpoint goes into ``caches``.
     """
     hosts = (
         edges.select(F.col("src_host").alias("host"))
@@ -429,20 +406,22 @@ def hop_distance(
         .repartition("src_host")
         .persist()
     )
-    for i in range(max_hops):
+
+    def step(dist: DataFrame, _scratch) -> DataFrame:
         nxt = dist.join(
             fwd, dist["host"] == fwd["src_host"]
         ).select(
             F.col("dst_host").alias("host"),
             (F.col("hops") + 1).cast("int").alias("hops"),
         )
-        dist = (
+        return (
             dist.unionByName(nxt)
             .groupBy("host")
             .agg(F.min("hops").alias("hops"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
+
+    dist = fixpoint(dist, step, max_hops, caches=caches)
+    release([fwd])
     return dist
 
 
@@ -597,7 +576,8 @@ def linkfarm_hosts(edges: DataFrame, min_out: int = 2,
 def hits_hosts(
     edges: DataFrame,
     iterations: int = 5,
-    checkpoint_every: int = 1,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg) over a weighted host graph ->
     ``(host, hub, authority)``.
@@ -616,11 +596,11 @@ def hits_hosts(
     Scale shape mirrors ``pagerank_hosts``: the edge table is
     repartitioned on its join side ONCE and kept resident, so each
     iteration shuffles only the host-cardinality score frame; the L1
-    norms ride broadcast 1-row aggregates.  ``checkpoint_every``
-    truthy (default) = per-round eager checkpoints + per-round sum
-    caches: lineage depth and recompute stay CONSTANT per iteration
-    (falsy keeps the pure-lazy lineage — only sensible for tiny
-    iteration counts).  Deterministic given the
+    norms ride broadcast 1-row aggregates.  ``lifetimes.fixpoint``
+    checkpoints both score frames every round and the round's sum
+    caches release once the next round has materialized, so lineage
+    depth and recompute stay CONSTANT per iteration; the final hub and
+    authority checkpoints go into ``caches``.  Deterministic given the
     edge table (integer weights, fixed iteration count, same fold the
     DuckDB mirror unrolls; cross-engine float noise is ~1e-14, far
     below the 9-decimal publication rounding).
@@ -636,23 +616,22 @@ def hits_hosts(
     by_src = edges.repartition("src_host").persist()
     by_dst = edges.repartition("dst_host").persist()
 
-    scores = hosts.select("host", F.lit(1.0).alias("hub"))
-    auth = None
-    spent: list[DataFrame] = []
-    for i in range(iterations):
+    def step(state, scratch: list[DataFrame]):
+        scores = state[0]
         # persist the per-iteration sums: each is consumed TWICE (its
         # L1-norm broadcast and the completion join) — uncached that
         # doubles every iteration's work, and across iterations the
         # doubling compounds into the dominant cost of the whole op
         # (measured 32 s → 9 s at sf0.1 with the caches + per-round
-        # eager checkpoints; arithmetic unchanged)
-        araw = (
+        # eager checkpoints; arithmetic unchanged).  ``fixpoint``
+        # releases them once the round's checkpoints are materialized.
+        araw = persist(
             by_src.join(
                 scores.select(F.col("host").alias("src_host"), "hub"),
                 "src_host")
             .groupBy("dst_host")
-            .agg(F.sum(F.col("hub") * F.col("weight")).alias("_a"))
-            .persist()
+            .agg(F.sum(F.col("hub") * F.col("weight")).alias("_a")),
+            scratch,
         )
         asum = araw.agg(F.sum("_a").alias("_as"))
         auth = (
@@ -664,13 +643,13 @@ def hits_hosts(
                 .alias("authority"),
             )
         )
-        hraw = (
+        hraw = persist(
             by_dst.join(
                 auth.select(F.col("host").alias("dst_host"), "authority"),
                 "dst_host")
             .groupBy("src_host")
-            .agg(F.sum(F.col("authority") * F.col("weight")).alias("_h"))
-            .persist()
+            .agg(F.sum(F.col("authority") * F.col("weight")).alias("_h")),
+            scratch,
         )
         hsum = hraw.agg(F.sum("_h").alias("_hs"))
         scores = (
@@ -682,23 +661,14 @@ def hits_hosts(
                 .alias("hub"),
             )
         )
-        # eager per-round checkpoints keep the lineage depth constant
-        # (host-cardinality blocks, tiny); superseded caches release
-        # once the round that consumed them has materialized
-        if checkpoint_every:
-            scores = scores.localCheckpoint(eager=True)
-            auth = auth.localCheckpoint(eager=True)
-            for c in spent:
-                c.unpersist()
-            spent = [araw, hraw]
-        else:
-            spent.extend([araw, hraw])
-    out = scores.join(auth, "host").select("host", "hub", "authority")
-    if checkpoint_every:
-        out = out.localCheckpoint(eager=True)
-        for c in spent:
-            c.unpersist()
-    return out
+        return scores, auth
+
+    scores, auth = fixpoint(
+        (hosts.select("host", F.lit(1.0).alias("hub")), None),
+        step, iterations, caches=caches,
+    )
+    release([hosts, by_src, by_dst])
+    return scores.join(auth, "host").select("host", "hub", "authority")
 
 
 def focused_priority(anchor_profiles: DataFrame,

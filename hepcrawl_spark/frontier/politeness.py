@@ -282,19 +282,6 @@ def host_skew_report(queue: DataFrame, top_k: int = 20) -> DataFrame:
     )
 
 
-def with_global_order(scheduled: DataFrame) -> DataFrame:
-    """Materialize the global fetch ordinal (parity tests / small rounds;
-    a total order is inherently single-reducer, so production rounds sort
-    within partitions by the same keys instead).  Keys on the effective
-    (authority-boosted) priority when the schedule carries one."""
-    prio = ("eff_priority" if "eff_priority" in scheduled.columns
-            else "priority")
-    w = Window.orderBy(
-        F.col("fetch_ts").asc(), F.col(prio).desc(), F.col("seq").desc()
-    )
-    return scheduled.withColumn("fetch_order", F.row_number().over(w))
-
-
 def autothrottle_delays(fetches: DataFrame,
                         target_concurrency: int = 2,
                         start_delay_ms: int = 5000,

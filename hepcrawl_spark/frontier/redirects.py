@@ -23,9 +23,10 @@ projection of itself plus a codegen select — no window, no Python,
 no driver-side iteration over rows.  The mapping never grows (one
 row per redirecting URL); real redirect chains are short (browsers
 cap around 20, crawlers at 5-10), so ``max_hops=8`` costs 4 joins
-total regardless of frontier size.  Lineage is truncated with
-``localCheckpoint`` per round, the same growth-control pattern as
-``linkgraph.pagerank_hosts`` and ``frontier.rounds``.
+total regardless of frontier size.  The rounds run through
+``lifetimes.fixpoint``, which checkpoints each round's mapping eagerly
+and releases the one it supersedes, like ``linkgraph.pagerank_hosts``;
+the final checkpoint goes into the caller's ``caches``.
 """
 
 from __future__ import annotations
@@ -35,13 +36,41 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lifetimes import fixpoint
+
+
+def _double(m: DataFrame, _scratch) -> DataFrame:
+    """One pointer-doubling round over ``(url, final_url, hops,
+    resolved)``: ``m[u] <- m[m[u]]``."""
+    nxt = m.select(
+        F.col("url").alias("_src"),
+        F.col("final_url").alias("_dst"),
+        F.col("hops").alias("_h"),
+    )
+    return (
+        m.join(nxt, m["final_url"] == nxt["_src"], "left")
+        .select(
+            "url",
+            F.coalesce(F.col("_dst"), F.col("final_url"))
+            .alias("final_url"),
+            (F.col("hops") + F.coalesce(F.col("_h"), F.lit(0)))
+            .alias("hops"),
+            # resolved rows never rejoin: their final_url has no
+            # outgoing edge by construction, so the left join misses
+            # and the flag is idempotent
+            (F.col("resolved") | F.col("_src").isNull())
+            .alias("resolved"),
+        )
+    )
+
 
 def resolve_redirects(
     edges: DataFrame,
     max_hops: int = 8,
     url_col: str = "url",
     target_col: str = "redirect_to",
-    checkpoint: bool = True,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Resolve every redirect chain to its final location.
 
@@ -54,7 +83,8 @@ def resolve_redirects(
     chains get ``resolved=false`` with NULL ``final_url``/``hops``
     (the doubling budget reaches at least ``2*max_hops``, and the
     final gate re-checks ``hops <= max_hops``, so the outcome never
-    depends on where the round budget happened to stop).
+    depends on where the round budget happened to stop).  The result
+    reads the final round's checkpoint, which goes into ``caches``.
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
@@ -68,29 +98,7 @@ def resolve_redirects(
     # target first appears (the round whose join comes up empty), so
     # the flag needs one settling round past the doubling budget.
     rounds = max(1, math.ceil(math.log2(max_hops))) + 1
-    for _ in range(rounds):
-        nxt = m.select(
-            F.col("url").alias("_src"),
-            F.col("final_url").alias("_dst"),
-            F.col("hops").alias("_h"),
-        )
-        m = (
-            m.join(nxt, m["final_url"] == nxt["_src"], "left")
-            .select(
-                "url",
-                F.coalesce(F.col("_dst"), F.col("final_url"))
-                .alias("final_url"),
-                (F.col("hops") + F.coalesce(F.col("_h"), F.lit(0)))
-                .alias("hops"),
-                # resolved rows never rejoin: their final_url has no
-                # outgoing edge by construction, so the left join
-                # misses and the flag is idempotent
-                (F.col("resolved") | F.col("_src").isNull())
-                .alias("resolved"),
-            )
-        )
-        if checkpoint:
-            m = m.localCheckpoint(eager=False)
+    m = fixpoint(m, _double, rounds, caches=caches)
     ok = F.col("resolved") & (F.col("hops") <= F.lit(int(max_hops)))
     return m.select(
         "url",

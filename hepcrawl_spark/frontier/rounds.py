@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..extract import extract_records
+from ..lifetimes import persist, release
+from ..operators.cumsum import two_phase_cumsum
 from ..schema import HOST_OFFSETS_SCHEMA
 from .checkpoint import BaseRoundStore, RoundStore
 from .fingerprint import content_seen_flag, with_url_identity
@@ -149,18 +151,6 @@ def make_seeds(spark: SparkSession, seeds: List[Tuple[str, str, int]]) -> DataFr
     return with_url_identity(df.drop("canon_url", "url_host", "fingerprint"))
 
 
-def _persist(df: DataFrame, caches: List[DataFrame]) -> DataFrame:
-    """``df.persist()``, registered in the round's ``caches``."""
-    caches.append(df.persist())
-    return caches[-1]
-
-
-def _release(caches: List[DataFrame]) -> None:
-    """Unpersist everything the round registered in ``caches``."""
-    for df in caches:
-        df.unpersist()
-
-
 def _merge_offsets(old: Optional[DataFrame], new: DataFrame) -> DataFrame:
     if old is None:
         return new
@@ -238,60 +228,17 @@ def _expand_children(records: DataFrame, scheduled: DataFrame,
         F.col("_pseq").desc(), F.col("_pos").asc(),
     ]
     counts = kids.groupBy(*_gkeys).agg(F.count(F.lit(1)).alias("_cnt"))
-    # Two-phase skew-safe cumulation of the count table (the
-    # per_host_rank recipe; at a 10^7-parent round this table is
-    # O(parents × records-per-page) — it must never funnel through one
-    # task).  The leading sort key is the DOUBLE fetch_ts, so no
-    # closed-form seq-range bucket exists; the contiguous-range buckets
-    # come from a range exchange over the full sort key instead:
-    # range-partition → cumulate within each range bucket → re-base
-    # with the prefix of per-bucket totals.  The prefix over the
-    # ≤ n_buckets totals is a triangular join, not a window — NO
-    # unpartitioned window remains anywhere in the expansion plan.
-    n_buckets = records.sparkSession.sparkContext.defaultParallelism
-    # PERSIST the bucketed count table: the bucket id is the range
-    # partition index, and the frame is consumed by three branches
-    # (cumsum, totals, totals again for the prefix join).  Without the
-    # cache, per-branch column pruning makes the three range-exchange
-    # subtrees non-identical, exchange reuse does NOT fire, and each
-    # branch samples its own boundaries + evaluates its own
-    # spark_partition_id — silently inconsistent bucket ids (observed:
-    # permuted child seq).  With the cache there is exactly one
-    # physical plan, one boundary sample, one partition-id evaluation;
-    # every branch reads the same InMemoryRelation (and AQE does not
-    # re-plan inside cached plans).  _round_body registers the cache
-    # with the round, which releases it after commit; direct callers
-    # can unpersist via the ``_expand_cache`` attribute on the result.
-    counts = (
-        counts.repartitionByRange(n_buckets, *_order)
-        .withColumn("_bkt", F.spark_partition_id())
-        .persist()
-    )
-    _cached_counts = counts
-    w_in_bucket = (
-        Window.partitionBy("_bkt").orderBy(*_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    counts = counts.withColumn(
-        "_lcum", F.coalesce(F.sum("_cnt").over(w_in_bucket), F.lit(0))
-    )
-    # bucket ids are range-ordered (every sort key in bucket k precedes
-    # every key in bucket k+1), so base(bucket k) = Σ totals of buckets
-    # < k — computed with a triangular join over the ≤ n_buckets
-    # totals, never an unpartitioned window.
-    totals = counts.groupBy("_bkt").agg(F.sum("_cnt").alias("_btot"))
-    bucket_bases = (
-        totals.alias("ta")
-        .join(totals.alias("tb"), F.col("tb._bkt") < F.col("ta._bkt"),
-              "left")
-        .groupBy(F.col("ta._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("tb._btot"), F.lit(0)).alias("_bbase"))
-    )
-    bases = (
-        counts.join(F.broadcast(bucket_bases), on="_bkt")
-        .withColumn("_base", F.col("_bbase") + F.col("_lcum"))
-        .select(*_gkeys, "_base")
-    )
+    # the running group count is two_phase_cumsum's range exchange over
+    # the full sort key (the leading key is the DOUBLE fetch_ts, so no
+    # closed-form seq-range bucket exists): NO unpartitioned window
+    # remains anywhere in the expansion plan.  _round_body registers its
+    # persisted bucketed count table with the round, which releases it
+    # after commit; direct callers can unpersist it via the result's
+    # ``_expand_cache`` attribute.
+    cumsum_caches: List[DataFrame] = []
+    bases = two_phase_cumsum(
+        counts, "_cnt", _order, out_col="_base", caches=cumsum_caches,
+    ).select(*_gkeys, "_base")
     w_local = Window.partitionBy(*_gkeys).orderBy(F.col("child_url").asc())
     # merge hint, NOT broadcast: bases is unbounded at a 10^7-page
     # round (forcing a broadcast would OOM the executors), and letting
@@ -324,8 +271,8 @@ def _expand_children(records: DataFrame, scheduled: DataFrame,
     out = with_url_identity(out.drop("canon_url", "url_host", "fingerprint"))
     # expose the bucketed count cache so the caller can release it once
     # the children are durably materialized (unpersisting EARLIER would
-    # re-trigger the inconsistent per-branch recompute described above)
-    out._expand_cache = _cached_counts
+    # let the three branches recompute inconsistent bucket ids)
+    out._expand_cache = cumsum_caches[0]
     return out
 
 
@@ -407,7 +354,7 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
                 F.col("content_dup")
                 | F.coalesce("_seen_before", F.lit(False)),
             ).drop("_seen_before")
-    fetched = _persist(fetched, caches)
+    fetched = persist(fetched, caches)
     # the fetch-miss branch of the errors table reads every fetched row
     # (one per scheduled URL), and no query but that write holds the
     # observed node, so no other plan can complete it
@@ -425,7 +372,7 @@ def _round_body(fetched: DataFrame, scheduled: DataFrame,
         # the expensive half Mercator's test exists to skip:
         # content-dup pages are neither extracted nor expanded
         extract_src = extract_src.filter(~F.col("content_dup"))
-    extracted = _persist(extract_records(
+    extracted = persist(extract_records(
         extract_src.select("url", "html", "format")
     ), caches)
 
@@ -608,7 +555,7 @@ def run_crawl(
         caches: List[DataFrame] = []
         ftable: Optional[str] = None
         try:
-            gated = _persist(_entry_gates(queue, robots, config), caches)
+            gated = persist(_entry_gates(queue, robots, config), caches)
             if qstats is None:
                 qstats = gated.agg(*_queue_stats()).first().asDict()
             if qstats["n"] == 0:
@@ -715,7 +662,7 @@ def run_crawl(
             queue, seen_state, offsets, content_state = _committed_state(
                 store, round_no, config.seen_mode)
         finally:
-            _release(caches)
+            release(caches)
             if ftable is not None:  # the round's scratch table
                 spark.sql(f"DROP TABLE IF EXISTS {ftable}")
         round_no += 1

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..lifetimes import persist
 from .bloom import BloomShard
 from .cuckoo import CuckooShard
 
@@ -162,11 +163,9 @@ def _sharded_probe(candidates: DataFrame, state: Optional[DataFrame],
         return pd.concat([admitted, state_row(shard_id, shard.to_bytes())],
                          ignore_index=True)[fields]
 
-    unioned = with_shard.groupBy("shard").cogroup(
+    unioned = persist(with_shard.groupBy("shard").cogroup(
         state.groupBy("shard")
-    ).applyInPandas(probe, _UNION_SCHEMA).persist()
-    if caches is not None:
-        caches.append(unioned)
+    ).applyInPandas(probe, _UNION_SCHEMA), caches)
     admitted = unioned.filter(F.col("row_kind") == "url").select(*names)
     new_state = unioned.filter(F.col("row_kind") == "state").select(
         "shard", "blob"

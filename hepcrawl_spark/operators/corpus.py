@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..lifetimes import persist
+from .cumsum import two_phase_cumsum
 from .textops import (
     bind_once,
     classifier_score_col,
@@ -30,62 +32,11 @@ from .textops import (
 )
 
 
-def two_phase_cumsum(df: DataFrame, value_col: str,
-                     order_cols: list[Column],
-                     out_col: str = "prev",
-                     n_buckets: int | None = None) -> DataFrame:
-    """Exact EXCLUSIVE global running sum of ``value_col`` in
-    ``order_cols`` order, without an unpartitioned window — the
-    skew-safe recipe shared with the frontier
-    (``frontier/rounds.py _expand_children``,
-    ``politeness.per_host_rank``): range-partition on the sort key,
-    cumulate within each range bucket, re-base with the prefix of
-    per-bucket totals via a triangular join over the ≤ n_buckets
-    totals.  The bucketed frame is persisted because three branches
-    consume it (cumsum, totals, totals for the prefix) — without one
-    physical plan each branch would sample its own range boundaries
-    and the bucket ids would silently diverge.  Caller unpersists via
-    the ``_cumsum_cache`` attribute on the result after
-    materializing.
-    """
-    if n_buckets is None:
-        n_buckets = df.sparkSession.sparkContext.defaultParallelism
-    bucketed = (
-        df.repartitionByRange(n_buckets, *order_cols)
-        .withColumn("_bkt", F.spark_partition_id())
-        .persist()
-    )
-    w_local = (
-        Window.partitionBy("_bkt").orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = bucketed.withColumn(
-        "_lcum", F.coalesce(F.sum(value_col).over(w_local),
-                            F.lit(0).cast("long"))
-    )
-    totals = bucketed.groupBy("_bkt").agg(
-        F.sum(value_col).alias("_btot")
-    )
-    bases = (
-        totals.alias("ta")
-        .join(totals.alias("tb"), F.col("tb._bkt") < F.col("ta._bkt"),
-              "left")
-        .groupBy(F.col("ta._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("tb._btot"), F.lit(0)).alias("_bbase"))
-    )
-    out = (
-        local.join(F.broadcast(bases), on="_bkt")
-        .withColumn(out_col, F.col("_bbase") + F.col("_lcum"))
-        .drop("_bkt", "_lcum", "_bbase")
-    )
-    out._cumsum_cache = bucketed
-    return out
-
-
 def pack_sequences(docs: DataFrame, capacity: int = 512,
                    text_col: str = "text",
                    id_col: str = "doc_id",
-                   count_col: str | None = None) -> DataFrame:
+                   count_col: str | None = None, *,
+                   caches: list[DataFrame] | None = None) -> DataFrame:
     """Context-window packing: lay the corpus out as one deterministic
     token stream (doc order = ``id_col`` ascending) cut into
     fixed-``capacity`` training sequences; each document gets the
@@ -102,6 +53,7 @@ def pack_sequences(docs: DataFrame, capacity: int = 512,
     alternatively pass ``count_col`` to pack by an
     already-materialized count (e.g. ``clean_corpus`` output), in
     which case every input column is preserved alongside the layout.
+    The cumsum's bucketed frame goes into ``caches``.
     """
     if count_col is None:
         counts = docs.select(
@@ -115,22 +67,22 @@ def pack_sequences(docs: DataFrame, capacity: int = 512,
         counts = docs
         carried = docs.columns
     c = two_phase_cumsum(
-        counts, count_col, [F.col(id_col).asc()], out_col="_prev"
+        counts, count_col, [F.col(id_col).asc()], out_col="_prev",
+        caches=caches,
     )
-    out = c.select(
+    return c.select(
         *carried,
         F.expr(f"_prev div {capacity}").alias("seq_id"),
         F.pmod(F.col("_prev"), F.lit(capacity)).cast("long")
         .alias("seq_offset"),
     )
-    out._cumsum_cache = c._cumsum_cache
-    return out
 
 
 def curriculum_pack(scored: DataFrame, capacity: int = 512,
                     id_col: str = "doc_id",
                     count_col: str = "token_cnt",
-                    score_col: str = "cls_score") -> DataFrame:
+                    score_col: str = "cls_score", *,
+                    caches: list[DataFrame] | None = None) -> DataFrame:
     """Curriculum-ordered packing (Bengio et al. 2009 ordering, the
     data-ordering half of quality-curriculum pretraining recipes):
     identical exact layout arithmetic to :func:`pack_sequences`, but
@@ -148,21 +100,19 @@ def curriculum_pack(scored: DataFrame, capacity: int = 512,
     on the NEW sort key + prefix re-base; never a single-task
     window).  Ordering by score instead of id costs nothing: the
     range partitioner ranges over (score, id) exactly as it ranged
-    over id.
+    over id.  The cumsum's bucketed frame goes into ``caches``.
     """
     c = two_phase_cumsum(
         scored, count_col,
         [F.col(score_col).desc(), F.col(id_col).asc()],
-        out_col="_prev",
+        out_col="_prev", caches=caches,
     )
-    out = c.select(
+    return c.select(
         *scored.columns,
         F.expr(f"_prev div {capacity}").alias("seq_id"),
         F.pmod(F.col("_prev"), F.lit(capacity)).cast("long")
         .alias("seq_offset"),
     )
-    out._cumsum_cache = c._cumsum_cache
-    return out
 
 
 def _shard_match(group_cols: tuple[str, ...], key) -> Column:
@@ -239,7 +189,8 @@ def mix_quota(docs: DataFrame,
               quotas: dict,
               group_cols: tuple[str, ...] = ("source", "lang"),
               id_col: str = "doc_id",
-              salt: str = "mix1") -> DataFrame:
+              salt: str = "mix1", *,
+              caches: list[DataFrame] | None = None) -> DataFrame:
     """Exact integer-quota mixing: shard ``s`` keeps exactly
     ``min(quotas[s], |s|)`` documents — the budgeted variant of
     :func:`mix_sample` for when the mixture table is specified in
@@ -254,7 +205,7 @@ def mix_quota(docs: DataFrame,
     spread a hot shard across tasks), re-based per shard by a
     broadcast of per-shard minima — never a window partitioned by
     shard, which would funnel a 100 TB shard through one task.
-    Caller unpersists via ``_cumsum_cache`` after materializing.
+    The cumsum's bucketed frame goes into ``caches``.
     """
     d = docs.withColumn(
         "_mk",
@@ -263,20 +214,18 @@ def mix_quota(docs: DataFrame,
     ).withColumn("_one", F.lit(1).cast("long"))
     order = ([F.col(c).asc() for c in group_cols]
              + [F.col("_mk").asc(), F.col(id_col).asc()])
-    c = two_phase_cumsum(d, "_one", order, out_col="_prev")
+    c = two_phase_cumsum(d, "_one", order, out_col="_prev", caches=caches)
     bases = c.groupBy(*group_cols).agg(F.min("_prev").alias("_base"))
     quota = F.lit(0).cast("long")
     for key, n in sorted(quotas.items()):
         quota = F.when(
             _shard_match(group_cols, key), F.lit(int(n)).cast("long")
         ).otherwise(quota)
-    out = (
+    return (
         c.join(F.broadcast(bases), on=list(group_cols))
         .filter((F.col("_prev") - F.col("_base")) < quota)
         .drop("_mk", "_one", "_prev", "_base")
     )
-    out._cumsum_cache = c._cumsum_cache
-    return out
 
 
 def gated_docs(docs: DataFrame, text_col: str = "text",
@@ -497,7 +446,8 @@ def clean_corpus_full(docs: DataFrame, capacity: int = 512,
                       span_rewrite_w: int | None = None,
                       span_min_count: int = 2,
                       span_max_df: int | None = None,
-                      keep_best: bool = False,
+                      keep_best: bool = False, *,
+                      caches: list[DataFrame] | None = None,
                       **gopher_thresholds) -> DataFrame:
     """The full production cleaning pipeline over a raw crawled
     corpus — every stage the public web-scale recipes chain, in one
@@ -535,6 +485,10 @@ def clean_corpus_full(docs: DataFrame, capacity: int = 512,
     stays the pre-rewrite content hash (lineage back to the stored
     document).  ``span_min_count`` / ``span_max_df`` pass through to
     the rewrite (the d08-style stop-span cap).
+
+    Every frame the result reads from a cache (the cleaned frame, the
+    MinHash base, the cluster labels' checkpoint, the layout's cumsum
+    buckets) goes into ``caches``; release them after materializing.
     """
     from .dedup import (
         contaminated_ids,
@@ -546,11 +500,10 @@ def clean_corpus_full(docs: DataFrame, capacity: int = 512,
     # persist: the cleaned frame (tiny next to the corpus — ids +
     # scalars) feeds THREE consumers (near-dup semi join, cluster
     # singletons, final kept join); without the cache each reference
-    # re-runs the whole gate scan.  Released via ``_caches``.
-    cleaned = clean_corpus(docs, text_col=text_col, id_col=id_col,
-                           lang_threshold=lang_threshold,
-                           **gopher_thresholds).persist()
-    caches = [cleaned]
+    # re-runs the whole gate scan
+    cleaned = persist(clean_corpus(docs, text_col=text_col, id_col=id_col,
+                                   lang_threshold=lang_threshold,
+                                   **gopher_thresholds), caches)
     if benchmark is not None:
         surv_text = docs.select(id_col, text_col).join(
             cleaned.select(id_col), on=id_col, how="leftsemi"
@@ -566,9 +519,10 @@ def clean_corpus_full(docs: DataFrame, capacity: int = 512,
     )
     pairs = minhash_lsh_pairs(surv_docs, n=3,
                               threshold=jaccard_threshold,
-                              text_col=text_col, id_col=id_col)
-    caches.append(pairs._lsh_cache)
-    clusters = dedup_clusters(surv_docs, pairs, id_col=id_col)
+                              text_col=text_col, id_col=id_col,
+                              caches=caches)
+    clusters = dedup_clusters(surv_docs, pairs, id_col=id_col,
+                              caches=caches)
     if keep_best:
         # the d12 rule composed into the flagship: keep each
         # component's highest-token-count member (min id on ties)
@@ -609,10 +563,8 @@ def clean_corpus_full(docs: DataFrame, capacity: int = 512,
             ),
             on=id_col,
         )
-    out = pack_sequences(kept, capacity=capacity, id_col=id_col,
-                         count_col="token_cnt")
-    out._caches = caches + [out._cumsum_cache]
-    return out
+    return pack_sequences(kept, capacity=capacity, id_col=id_col,
+                          count_col="token_cnt", caches=caches)
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..lifetimes import fixpoint, persist, release
 from .textops import WS_CLASS, WS_EDGE, bind_once, tokens_col
 
 # The explicit cross-engine whitespace contract (see textops.WS_CLASS
@@ -730,14 +731,15 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
                       perms: int = MINHASH_PERMS,
                       band_rows: int = MINHASH_BAND_ROWS,
                       text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      id_col: str = "doc_id", *,
+                      caches: list[DataFrame] | None = None) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verify.
 
     Output (doc_a, doc_b, jaccard) — identical to exact
     ``ngram_jaccard_pairs`` up to LSH recall (1-(1-s^r)^b; ~5e-8 miss
     at s=0.8, r=4, b=32).  The persisted (id, shingles, bands) frame
-    is exposed as ``result._lsh_cache`` — unpersist it after
-    materializing (``clean_corpus_full`` and the bench harness do).
+    goes into ``caches`` — release it after materializing
+    (``lifetimes.release``; ``clean_corpus_full`` does).
     """
     n_bands = perms // band_rows  # noqa: F841 (documented parameterization)
     # one Arrow pass computes shingles + band keys; everything after
@@ -748,7 +750,8 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     # the two verify sides); without the cache each reference re-runs
     # the corpus-wide Arrow pass.  The cached frame is (id, shingles,
     # bands) — tiny next to the corpus it derives from.
-    base = minhash_base(docs, n, perms, band_rows, text_col, id_col).persist()
+    base = persist(minhash_base(docs, n, perms, band_rows, text_col, id_col),
+                   caches)
     cands = _band_candidates(base)
     # candidates are explicitly re-spread — AQE coalesces the tiny
     # post-distinct shuffle to ~1 partition, which would serialize the
@@ -766,14 +769,13 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    out = verified.select("doc_a", "doc_b", "jaccard")
-    out._lsh_cache = base
-    return out
+    return verified.select("doc_a", "doc_b", "jaccard")
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,
                    id_col: str = "doc_id",
-                   max_iters: int = 20) -> DataFrame:
+                   max_iters: int = 20, *,
+                   caches: list[DataFrame] | None = None) -> DataFrame:
     """Connected components over a near-dup pair graph → one canonical
     representative per document: ``(doc_id, cluster_id)`` where
     ``cluster_id`` is the smallest doc id in the component (documents
@@ -787,19 +789,19 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     Rounds needed = graph diameter; near-dup components are
     near-cliques (members share most shingles, so most pairs exist),
     giving 2-3 rounds in practice — at 100 TB each round is two
-    shuffles on the (small) pair set, not on the corpus.  The loop
-    ``localCheckpoint``s each iteration to truncate lineage, and the
-    convergence probe is an aggregate (no collect of data rows).
+    shuffles on the (small) pair set, not on the corpus.  The loop is
+    ``lifetimes.fixpoint``: each round's labels are checkpointed
+    eagerly, the convergence probe is an aggregate (no collect of data
+    rows), and the final labels' checkpoint goes into ``caches``.
     ``max_iters`` bounds pathological chain graphs (a chain is what
-    LSH near-dup graphs do not look like; hitting the bound raises).
+    LSH near-dup graphs do not look like; hitting the bound raises
+    ``RuntimeError``).
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .distinct()
-        # eager: a lazily-checkpointed edge RDD can lose blocks to a
-        # task retry mid-loop; the graph is small relative to the corpus
-        .localCheckpoint()
+        .persist()
     )
     # labels only for nodes that appear in an edge; singletons join back
     # at the end (keeps every iteration proportional to the graph, not
@@ -809,13 +811,14 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame, _scratch) -> DataFrame:
         neighbor_min = (
             edges.join(labels, on=edges.v == labels.node)
             .groupBy("u")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
+        return (
             labels.join(neighbor_min, on=labels.node == neighbor_min.u, how="left")
             .select(
                 "node",
@@ -823,23 +826,22 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
                     F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="node")
+
+    def changed(new: DataFrame, old: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), on="node")
             .filter(F.col("n.label") != F.col("o.label"))
             .limit(1)
             .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds — "
-            "pair graph has a long chain; raise max_iters"
-        )
+        ) > 0
+
+    try:
+        labels = fixpoint(labels, step, max_iters, caches=caches,
+                          changed=changed)
+    finally:
+        release([edges])
     return (
         docs.select(F.col(id_col).alias("doc_id"))
         .join(labels, on=F.col("doc_id") == labels.node, how="left")
@@ -1050,7 +1052,8 @@ def cross_corpus_lsh(new_docs: DataFrame, ref_docs: DataFrame,
                      perms: int = MINHASH_PERMS,
                      band_rows: int = MINHASH_BAND_ROWS,
                      text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+                     id_col: str = "doc_id", *,
+                     caches: list[DataFrame] | None = None) -> DataFrame:
     """The banded-MinHash scale path of ``cross_corpus_dedup``: same
     output contract — one row per NEW document, (id, exact_dup,
     near_cnt, max_jaccard, keep) — but candidates come from a
@@ -1066,14 +1069,14 @@ def cross_corpus_lsh(new_docs: DataFrame, ref_docs: DataFrame,
     one-Arrow-pass base (linear in the dump) and probes the index
     with an equi-join.  Exact verification touches only colliding
     pairs; the md5 exact half is a broadcast semi-join like d11.
-    Both persisted bases are exposed as ``result._lsh_caches`` —
-    unpersist after materializing.
+    Both persisted bases go into ``caches`` — release them after
+    materializing (``lifetimes.release``).
     """
     par = new_docs.sparkSession.sparkContext.defaultParallelism
-    new_base = minhash_base(
-        new_docs, n, perms, band_rows, text_col, id_col).persist()
-    ref_base = minhash_base(
-        ref_docs, n, perms, band_rows, text_col, id_col).persist()
+    new_base = persist(minhash_base(
+        new_docs, n, perms, band_rows, text_col, id_col), caches)
+    ref_base = persist(minhash_base(
+        ref_docs, n, perms, band_rows, text_col, id_col), caches)
     nb = new_base.select(
         F.col("doc_id").alias("dn"), F.explode("bands").alias("band_key"))
     rb = ref_base.select(
@@ -1108,7 +1111,7 @@ def cross_corpus_lsh(new_docs: DataFrame, ref_docs: DataFrame,
     ref_h = ref_docs.select(
         F.md5(F.col(text_col)).alias("_h")
     ).distinct().withColumn("_e", F.lit(1))
-    out = (
+    return (
         new_docs.select(F.col(id_col).alias("doc_id"),
                         F.md5(F.col(text_col)).alias("_nh"))
         .join(F.broadcast(ref_h), F.col("_nh") == F.col("_h"), "left")
@@ -1124,8 +1127,6 @@ def cross_corpus_lsh(new_docs: DataFrame, ref_docs: DataFrame,
              & F.col("near_cnt").isNull()).cast("int").alias("keep"),
         )
     )
-    out._lsh_caches = (new_base, ref_base)
-    return out
 
 
 def cluster_representatives(docs: DataFrame, pairs: DataFrame,
@@ -1173,81 +1174,25 @@ def cluster_representatives(docs: DataFrame, pairs: DataFrame,
     )
 
 
-def cdc_bounds_col(text: Column, window: int = 16, divisor: int = 64,
-                   max_chunk: int = 256) -> Column:
-    """Content-defined chunk boundaries for one document: the LBFS
-    sliding-window scheme (Muthitacharoen, Chen & Mazières, SOSP
-    2001) web archives use for storage-level dedup — a position cuts
-    when the hash of the ``window`` chars ending there is ≡ 0 mod
-    ``divisor``, so boundaries follow CONTENT: insert a byte and only
-    the surrounding chunk's hashes change, where fixed-size blocks
-    reshift the whole tail (rsync's weakness the paper fixes).
-
-    The cut rule is deliberately LOCAL (no min-size guard): every
-    position decides independently, so the whole computation is one
-    in-row HOF projection — parallel, shuffle-free, and exactly
-    mirrorable cross-engine.  The max-size guard IS kept (a chunk
-    must fit a fixed dedup buffer) and stays local per inter-cut run:
-    runs longer than ``max_chunk`` re-split at fixed strides.  The
-    per-position window hash is the repo's portable md5-prefix fold;
-    a gear-table rolling hash is the constant-factor refinement a
-    native store would swap in.
-
-    Returns the ascending bounds array [0, …, length]: chunk k spans
-    chars bounds[k]+1 … bounds[k+1] (1-based substring convention).
-    Empty or NULL text yields [0] (no chunks).
-    """
-    ln = F.length(text)
-    wnd = F.lit(window)
-    cuts = F.filter(
-        F.transform(
-            F.sequence(wnd, F.greatest(ln, wnd)),
-            lambda i: F.when(
-                (i < ln)  # a cut AT the end is just the end bound
-                & (F.conv(F.substring(F.md5(text.substr(i - wnd + 1, wnd)),
-                                      1, 15), 16, 10).cast("long")
-                   % divisor == 0),
-                i,
-            ).otherwise(F.lit(-1)),
-        ),
-        lambda x: x != -1,
-    )
-    base = F.concat(F.array(F.lit(0)), cuts, F.array(ln))
-    # max-cap re-split: between consecutive bounds, stride max_chunk.
-    # NB sequence(lo, hi) DESCENDS when lo > hi, so every sequence
-    # here is guarded ascending: base always has >= 2 elements in the
-    # ln > 0 branch, and each inter-bound stride has hi >= lo.
-    full = F.concat(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.size(base) - 1),
-                lambda j: F.sequence(
-                    F.element_at(base, j),
-                    F.element_at(base, j + 1) - 1,
-                    F.lit(max_chunk),
-                ),
-            )
-        ),
-        F.array(ln),
-    )
-    return F.when(ln > 0, full).otherwise(F.array(F.lit(0)))
-
-
 def cdc_bounds_udf(window: int = 16, divisor: int = 64,
                    max_chunk: int = 256):
-    """Arrow-vectorized CDC bounds: the EXACT same cut rule as
-    :func:`cdc_bounds_col` (hashlib md5 over the UTF-8 encoding of
-    the character window is bit-identical to Spark's
-    ``md5(substr)``), one batched pass per document instead of one
-    interpreted HOF lambda per position.
+    """Content-defined chunk boundaries, one batched Arrow pass per
+    document: the LBFS sliding-window scheme (Muthitacharoen, Chen &
+    Mazières, SOSP 2001) — a position cuts when the md5-prefix hash of
+    the ``window`` chars ending there is ≡ 0 mod ``divisor``, so
+    boundaries follow CONTENT and an inserted byte re-cuts only its
+    chunk.  The rule is LOCAL (no min-size guard), so it mirrors
+    exactly cross-engine; runs longer than ``max_chunk`` re-split at
+    fixed strides.  Returns the ascending bounds [0, …, length] (chunk
+    k spans chars bounds[k]+1 … bounds[k+1]); empty or NULL text
+    yields [0].
 
-    Why this exists: the codegen variant evaluates
-    substring→md5→conv as a boxed expression tree at EVERY character
-    position — measured 82 s for the d16 ledger at sf0.1 (~1.5 M
-    positions) vs ~3 s through this path, the same interpreted-HOF
-    tax the SRP banding UDF documents.  The codegen variant stays as
-    the cross-engine reference; equality of the two paths is pinned
-    in tests/test_cdc.py.
+    hashlib md5 over the UTF-8 window is bit-identical to Spark's
+    ``md5(substr)``.  A pure-codegen HOF form pays an interpreted
+    substring→md5→conv tree at EVERY character position — measured
+    82 s for the d16 ledger at sf0.1 (~1.5 M positions) vs ~3 s here;
+    the tests keep that form as the cross-engine reference and pin
+    equality in tests/test_cdc.py.
     """
     @pandas_udf("array<int>")
     def _bounds(texts: pd.Series) -> pd.Series:
@@ -1276,16 +1221,15 @@ def cdc_bounds_udf(window: int = 16, divisor: int = 64,
 
 def cdc_chunk_table(docs: DataFrame, window: int = 16, divisor: int = 64,
                     max_chunk: int = 256, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    bounds_mode: str = "arrow") -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Corpus-wide CDC dedup ledger: (chunk_hash, freq, chunk_len) for
     every chunk content seen more than once — the shareable storage.
 
     100 TB shape: bounds are one Arrow pass per row
-    (``bounds_mode="arrow"``, the default — identical arithmetic to
-    the pure-codegen ``"codegen"`` mode, ~27× faster because the
-    per-position window hash leaves the interpreted HOF lambda;
-    equality pinned in tests), chunk slicing is a codegen projection,
+    (``cdc_bounds_udf`` — ~27× faster than a pure-codegen HOF form
+    because the per-position window hash leaves the interpreted
+    lambda; equality with that form pinned in tests), chunk slicing
+    is a codegen projection,
     and the only exchange is the partial→final count on chunk_hash —
     the md5 key distributes uniformly so the agg never skews.  Chunk
     size is bounded by ``max_chunk``, so explode fan-out per doc is
@@ -1293,12 +1237,8 @@ def cdc_chunk_table(docs: DataFrame, window: int = 16, divisor: int = 64,
     never the text.
     """
     t = F.col(text_col)
-    if bounds_mode == "arrow":
-        bounds = cdc_bounds_udf(window=window, divisor=divisor,
-                                max_chunk=max_chunk)(t)
-    else:
-        bounds = cdc_bounds_col(t, window=window, divisor=divisor,
-                                max_chunk=max_chunk)
+    bounds = cdc_bounds_udf(window=window, divisor=divisor,
+                            max_chunk=max_chunk)(t)
     chunks = bind_once(
         bounds,
         lambda b: F.when(

@@ -125,10 +125,6 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def ann_topk(embeddings: DataFrame, k: int = 10,
              query_filter: Column | None = None,
              id_col: str = "vec_id",

@@ -2187,8 +2187,8 @@ WINNOW_POS_CAP = 1 << 20
 
 def winnow_keys_udf(k: int = 3, w: int = 4):
     """Arrow-vectorized winnowing selection over a TOKEN-ARRAY column:
-    identical arithmetic to the codegen HOFs in
-    :func:`winnow_fingerprints` (hashlib md5 of the joined k-gram is
+    identical arithmetic to the pure-codegen HOF selection the tests
+    keep as reference (hashlib md5 of the joined k-gram is
     bit-identical to the JVM ``token_hash``; numpy sliding-window min
     replaces the per-window ``array_min(slice)`` lambda).  Tokens are
     computed JVM-side by ``tokens_col`` and shipped through Arrow, so
@@ -2227,8 +2227,7 @@ def winnow_keys_udf(k: int = 3, w: int = 4):
 
 def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4,
                         text_col: str = "text",
-                        id_col: str = "doc_id",
-                        mode: str = "arrow") -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     the MOSS algorithm) -> ``(doc_id, pos, fp)``.
 
@@ -2242,13 +2241,13 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4,
 
     Scale shape: the whole selection runs INSIDE the row — one scan,
     zero shuffle, no window functions, no per-doc repartition.  The
-    default ``mode="arrow"`` computes the selection in one Arrow pass
-    over the JVM-tokenized array (the per-position HOF lambdas of
-    ``mode="codegen"`` are the d16-documented interpreted tax;
-    identical arithmetic, parity pinned in tests).
+    selection is one Arrow pass over the JVM-tokenized array
+    (``winnow_keys_udf``; per-position HOF lambdas would pay the
+    d16-documented interpreted tax — the tests keep that codegen form
+    as the parity reference).
     Only the selected fingerprints (a ~2/(w+1) fraction of k-grams)
     are exploded.  The tie rule is encoded arithmetically: key =
-    hash * 2^21 + (2^20 - pos), so ``array_min`` picks the smallest
+    hash * 2^21 + (2^20 - pos), so the window minimum is the smallest
     hash and, among equals, the LARGEST position — exactly the
     paper's rightmost rule — with no struct comparisons (portable to
     the DuckDB mirror verbatim).
@@ -2261,40 +2260,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4,
     if not (1 <= k and 1 <= w):
         raise ValueError("k and w must be >= 1")
 
-    def _selected(t: Column) -> Column:
-        m = F.size(t) - F.lit(k - 1)
-
-        def _keys(mm: Column) -> Column:
-            return F.transform(
-                F.sequence(F.lit(1), mm),
-                lambda i: (
-                    token_hash(F.concat_ws(" ", F.slice(t, i, k)))
-                    % F.lit(WINNOW_HASH_MOD)
-                ) * F.lit(WINNOW_POS_FIELD)
-                + (F.lit(WINNOW_POS_CAP) - i),
-            )
-
-        def _mins(keys: Column, mm: Column) -> Column:
-            nwin = F.greatest(mm - F.lit(w - 1), F.lit(1))
-            wlen = F.least(F.lit(w), mm)
-            return F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), nwin),
-                    lambda j: F.array_min(F.slice(keys, j, wlen)),
-                )
-            )
-
-        return F.when(
-            m >= 1, bind_once(_keys(m), lambda ks: _mins(ks, m))
-        ).otherwise(F.array().cast("array<bigint>"))
-
-    if mode == "arrow":
-        # default: one Arrow pass per row (identical arithmetic —
-        # see winnow_keys_udf); "codegen" keeps the pure-HOF
-        # reference, parity pinned in tests
-        selected = winnow_keys_udf(k, w)(tokens_col(F.col(text_col)))
-    else:
-        selected = _selected(tokens_col(F.col(text_col)))
+    selected = winnow_keys_udf(k, w)(tokens_col(F.col(text_col)))
     key = F.explode(selected).alias("_key")
     out = docs.select(F.col(id_col), key)
     # no orderBy: the fingerprint set is unordered by contract (the

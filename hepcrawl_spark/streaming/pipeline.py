@@ -41,13 +41,14 @@ from ..frontier.politeness import schedule
 from ..frontier.robots import effective_politeness
 from ..frontier.rounds import (
     _CAND_COLS, CrawlConfig, _committed_state, _entry_gates,
-    _merge_offsets, _release, _round_body, _round_tables,
+    _merge_offsets, _round_body, _round_tables,
 )
 from ..frontier.cuckoo import CuckooShard
 from ..frontier.seen import (
     CANDIDATE_SCHEMA, _cuckoo_insert, _insert_many, _probe_shard,
     shard_of_host,
 )
+from ..lifetimes import release
 from ..schema import PAGES_WITH_FORMAT_SCHEMA
 
 
@@ -322,7 +323,7 @@ def stream_crawl_round(spark: SparkSession, frontier_path: str,
                 out, _merge_offsets(offsets, new_offsets), config)
             store.commit_round(epoch, tables, meta=meta)
         finally:
-            _release(caches)
+            release(caches)
 
     writer = (
         admitted.writeStream

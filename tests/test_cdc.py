@@ -5,7 +5,9 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from hepcrawl_spark.operators.dedup import cdc_bounds_col, cdc_chunk_table
+from parity_refs import cdc_bounds_col
+
+from hepcrawl_spark.operators.dedup import cdc_bounds_udf, cdc_chunk_table
 
 
 def _diverse_text(n_words=400, seed=7):
@@ -75,20 +77,21 @@ def test_cdc_degenerate_inputs(spark):
 
 
 def test_cdc_plan_single_scan_one_exchange_no_python(spark):
-    # the codegen reference mode: zero Python of any kind
+    # the codegen reference bounds: zero Python of any kind, in-row
+    # (no exchange); the chunk table around them is shared code whose
+    # one-exchange envelope the arrow test below pins
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    plan = cdc_chunk_table(docs, bounds_mode="codegen") \
+    plan = docs.select(cdc_bounds_col(F.col("text"))) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
     assert plan.count("FileScan") == 1
-    # partial->final count around exactly one hash exchange
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Exchange" not in plan
 
 
 def test_cdc_arrow_plan_and_parity_with_codegen(spark):
-    # the default (arrow) mode keeps the same scan/exchange envelope,
-    # swaps the per-position interpreted HOF for ONE ArrowEvalPython,
-    # and must reproduce the codegen chunk table exactly
+    # the chunk table keeps a one-scan, one-exchange envelope with ONE
+    # ArrowEvalPython for the bounds, which must equal the codegen
+    # reference bounds exactly (the chunk slicing is shared code)
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     plan = cdc_chunk_table(docs)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -102,12 +105,6 @@ def test_cdc_arrow_plan_and_parity_with_codegen(spark):
     rows = [(1, ""), (2, None), (3, "tiny"), (4, "z" * 700),
             (5, "héllo wörld " * 60), (6, _diverse_text(300, seed=3))]
     adv = spark.createDataFrame(rows, "doc_id long, text string")
-    cg = {(r.chunk_hash, r.freq, r.chunk_len)
-          for r in cdc_chunk_table(adv, bounds_mode="codegen").collect()}
-    ar = {(r.chunk_hash, r.freq, r.chunk_len)
-          for r in cdc_chunk_table(adv).collect()}
-    assert cg == ar
-    from hepcrawl_spark.operators.dedup import cdc_bounds_udf
     b = {r.doc_id: r.b for r in adv.select(
         "doc_id", cdc_bounds_udf()(F.col("text")).alias("b")).collect()}
     cgb = {r.doc_id: r.b for r in adv.select(

@@ -77,6 +77,14 @@ def _rowset(cols, rows):
     )
 
 
+def _release_all(spark):
+    # the pipeline queries persist intermediate frames and local
+    # checkpoints; drop them all once a query's rows are collected
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
 # VERDICT r4 #8: adversarial LINE structures — repeated blank lines,
 # newline-only documents, and 13-gram boundary collisions — aimed at
 # t11's gram containment, the rewrites (t14/d09), and the composed
@@ -148,11 +156,7 @@ def test_line_structure_queries_match_duckdb(spark, tmp_path):
             cur = con.execute(oracles[name])
             want = _rowset([d[0] for d in cur.description],
                            cur.fetchall())
-            for cache in getattr(df, "_caches", []):
-                cache.unpersist()
-            cache = getattr(df, "_cumsum_cache", None)
-            if cache is not None:
-                cache.unpersist()
+            _release_all(spark)
             assert got == want, (name, texts)
         con.close()
 
@@ -190,9 +194,7 @@ def test_signal_queries_match_duckdb_on_fuzzed_corpora(spark, tmp_path):
             cur = con.execute(oracles[name])
             want = _rowset([d[0] for d in cur.description],
                            cur.fetchall())
-            cache = getattr(df, "_cumsum_cache", None)
-            if cache is not None:
-                cache.unpersist()
+            _release_all(spark)
             assert got == want, (name, texts)
         con.close()
 

@@ -7,10 +7,11 @@ rounds or depths.
 """
 
 import pytest
+from parity_refs import with_global_order
 from pyspark.sql import functions as F
 
 from hepcrawl_spark.frontier import linkgraph
-from hepcrawl_spark.frontier.politeness import schedule, with_global_order
+from hepcrawl_spark.frontier.politeness import schedule
 from hepcrawl_spark.frontier.rounds import (
     CrawlConfig, _expand_children, make_seeds, run_crawl,
 )

@@ -4,6 +4,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from hepcrawl_spark.lifetimes import release
 from hepcrawl_spark.operators import dedup, multimodal, similarity, textops
 
 
@@ -699,9 +700,10 @@ def test_pack_sequences_exact_layout(spark):
         (50, "a b c d e f"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pack_sequences(df, capacity=8)
+    caches = []
+    out = pack_sequences(df, capacity=8, caches=caches)
     got = {r.doc_id: r for r in out.collect()}
-    out._cumsum_cache.unpersist()
+    release(caches)
     assert (got[10].seq_id, got[10].seq_offset) == (0, 0)
     assert (got[20].seq_id, got[20].seq_offset) == (0, 3)
     assert (got[30].seq_id, got[30].seq_offset) == (0, 7)  # straddles
@@ -719,9 +721,10 @@ def test_pack_sequences_matches_single_window(spark):
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
-    out = pack_sequences(docs, capacity=512)
+    caches = []
+    out = pack_sequences(docs, capacity=512, caches=caches)
     got = {r.doc_id: (r.seq_id, r.seq_offset) for r in out.collect()}
-    out._cumsum_cache.unpersist()
+    release(caches)
     ref = (
         docs.select(
             "doc_id",
@@ -769,9 +772,11 @@ def test_pack_sequences_count_col_preserves_columns(spark):
     rows = [(0, good), (1, good), (2, good + " extra")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     cleaned = clean_corpus(df)  # 0 survives (1 is a dup), 2 survives
-    out = pack_sequences(cleaned, capacity=64, count_col="token_cnt")
+    caches = []
+    out = pack_sequences(cleaned, capacity=64, count_col="token_cnt",
+                         caches=caches)
     got = {r.doc_id: r for r in out.collect()}
-    out._cumsum_cache.unpersist()
+    release(caches)
     assert sorted(got) == [0, 2]
     # carried columns intact + layout over the CLEANED counts
     assert got[0].guessed_lang == "en"
@@ -797,10 +802,10 @@ def test_clean_corpus_full_pipeline(spark):
         (4, "the tiny"),    # fails gate
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = clean_corpus_full(df, capacity=64)
+    caches = []
+    out = clean_corpus_full(df, capacity=64, caches=caches)
     got = {r.doc_id: r for r in out.collect()}
-    for c in out._caches:
-        c.unpersist()
+    release(caches)
     assert sorted(got) == [0, 3]
     # packed layout over the kept set only: 0 at (0,0), 3 at (0,50)
     assert (got[0].seq_id, got[0].seq_offset) == (0, 0)
@@ -855,19 +860,19 @@ def test_clean_corpus_full_decontaminates(spark):
     bench = spark.createDataFrame(
         [(" ".join(good.split()[10:25]),)], "text string"
     )  # a 15-token span of doc 0 sits in the eval set
-    out = clean_corpus_full(df, capacity=64, benchmark=bench)
+    caches = []
+    out = clean_corpus_full(df, capacity=64, benchmark=bench,
+                            caches=caches)
     got = {r.doc_id: r for r in out.collect()}
-    for c in out._caches:
-        c.unpersist()
+    release(caches)
     # doc 0 is gate-clean but contaminated -> dropped; layout
     # re-packs over the survivor only
     assert sorted(got) == [1]
     assert (got[1].seq_id, got[1].seq_offset) == (0, 0)
     # without the benchmark both survive
-    out2 = clean_corpus_full(df, capacity=64)
+    out2 = clean_corpus_full(df, capacity=64, caches=caches)
     got2 = sorted(r.doc_id for r in out2.collect())
-    for c in out2._caches:
-        c.unpersist()
+    release(caches)
     assert got2 == [0, 1]
 
 
@@ -1095,10 +1100,11 @@ def test_clean_corpus_full_span_rewrite(spark):
     )
     rows = [(0, good), (1, other), (2, "the tiny")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = clean_corpus_full(df, capacity=64, span_rewrite_w=3)
+    caches = []
+    out = clean_corpus_full(df, capacity=64, span_rewrite_w=3,
+                            caches=caches)
     got = {r.doc_id: r for r in out.collect()}
-    for c in out._caches:
-        c.unpersist()
+    release(caches)
     assert sorted(got) == [0, 1]
     # the shared 10-token prefix is corpus-duplicated -> cut from both
     assert got[0].removed_cnt == 10 and got[1].removed_cnt == 10
@@ -1107,10 +1113,9 @@ def test_clean_corpus_full_span_rewrite(spark):
     assert (got[0].seq_id, got[0].seq_offset) == (0, 0)
     assert (got[1].seq_id, got[1].seq_offset) == (0, 40)
     # fingerprint stays the PRE-rewrite lineage hash (matches p04's)
-    base = clean_corpus_full(df, capacity=64)
+    base = clean_corpus_full(df, capacity=64, caches=caches)
     fps = {r.doc_id: r.fingerprint for r in base.collect()}
-    for c in base._caches:
-        c.unpersist()
+    release(caches)
     assert {d: r.fingerprint for d, r in got.items()} == fps
 
 
@@ -1162,9 +1167,10 @@ def test_mix_quota_exact_counts(spark):
     rows = [(i, f"s{i % 3}", "xx") for i in range(90)]
     df = spark.createDataFrame(rows, "doc_id long, source string, lang string")
     quotas = {("s0", "xx"): 7, ("s1", "xx"): 40}  # s1 quota > |s1|=30
-    out = mix_quota(df, quotas)
+    caches = []
+    out = mix_quota(df, quotas, caches=caches)
     got = out.collect()
-    out._cumsum_cache.unpersist()
+    release(caches)
     by_shard = {}
     for r in got:
         by_shard.setdefault(r.source, set()).add(r.doc_id)
@@ -1175,9 +1181,9 @@ def test_mix_quota_exact_counts(spark):
     # the draw is the md5 order, not "lowest ids win"
     assert by_shard["s0"] != {0, 3, 6, 9, 12, 15, 18}
     # deterministic across runs
-    out2 = mix_quota(df, quotas)
+    out2 = mix_quota(df, quotas, caches=caches)
     got2 = {(r.source, r.doc_id) for r in out2.collect()}
-    out2._cumsum_cache.unpersist()
+    release(caches)
     assert got2 == {(r.source, r.doc_id) for r in got}
 
 
@@ -1943,14 +1949,14 @@ def test_clean_corpus_full_keep_best_rule(spark):
             "storms they had not seen and roads they had not taken"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    p04 = clean_corpus_full(docs, capacity=512)
+    caches = []
+    p04 = clean_corpus_full(docs, capacity=512, caches=caches)
     kept_min = {r.doc_id for r in p04.collect()}
-    for c in p04._caches:
-        c.unpersist()
-    p16 = clean_corpus_full(docs, capacity=512, keep_best=True)
+    release(caches)
+    p16 = clean_corpus_full(docs, capacity=512, keep_best=True,
+                            caches=caches)
     kept_best = {r.doc_id for r in p16.collect()}
-    for c in p16._caches:
-        c.unpersist()
+    release(caches)
     assert kept_min == {0, 3}        # min-id rule keeps doc 0
     assert kept_best == {1, 3}       # best rule keeps the longest
 
@@ -2190,17 +2196,25 @@ def test_winnow_matches_python_reference(spark):
 
 
 def test_winnow_arrow_codegen_parity(spark):
-    # the two modes must produce the same fingerprint SET on
-    # adversarial inputs (empty, sub-k, sub-w, repeated-min ties)
+    # the Arrow selection and the codegen reference must select the
+    # same key SET on adversarial inputs (empty, sub-k, sub-w,
+    # repeated-min ties); fingerprints are decoded from the keys by
+    # shared code
+    from parity_refs import winnow_keys_col
+
     rows = [(0, ""), (1, "a a a a a a a a a a"), (2, "x y"),
             (3, "one two three four"), (4, None),
             (5, "the quick brown fox jumps over the lazy dog again")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    def fps(mode):
-        return {(r.doc_id, r.pos, r.fp)
-                for r in textops.winnow_fingerprints(
-                    docs, k=3, w=4, mode=mode).collect()}
-    assert fps("arrow") == fps("codegen")
+    toks = textops.tokens_col(F.col("text"))
+    got = docs.select(
+        "doc_id",
+        textops.winnow_keys_udf(3, 4)(toks).alias("arrow"),
+        winnow_keys_col(toks, k=3, w=4).alias("codegen"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert sorted(r.arrow) == sorted(r.codegen), r.doc_id
 
 
 def test_winnow_shared_substring_shares_fingerprint(spark):
@@ -2617,10 +2631,10 @@ def test_cross_corpus_lsh_matches_exact_path(spark):
     )
     exact = {r.doc_id: r for r in
              dedup.cross_corpus_dedup(nd, rd, threshold=0.8).collect()}
-    got = dedup.cross_corpus_lsh(nd, rd, threshold=0.8)
+    caches = []
+    got = dedup.cross_corpus_lsh(nd, rd, threshold=0.8, caches=caches)
     rows = {r.doc_id: r for r in got.collect()}
-    for c in got._lsh_caches:
-        c.unpersist()
+    release(caches)
     assert rows.keys() == exact.keys()
     for k, e in exact.items():
         r = rows[k]
@@ -2703,9 +2717,10 @@ def test_curriculum_pack_orders_by_score(spark):
         [(0, 10, 0.2), (1, 20, 0.9), (2, 30, 0.5), (3, 40, 0.9)],
         "doc_id long, token_cnt long, cls_score double",
     )
-    out = curriculum_pack(scored, capacity=32)
+    caches = []
+    out = curriculum_pack(scored, capacity=32, caches=caches)
     rows = {r.doc_id: r for r in out.collect()}
-    out._cumsum_cache.unpersist()
+    release(caches)
     # stream order: 1 (0.9), 3 (0.9, higher id), 2 (0.5), 0 (0.2)
     assert (rows[1].seq_id, rows[1].seq_offset) == (0, 0)
     assert (rows[3].seq_id, rows[3].seq_offset) == (0, 20)

@@ -329,7 +329,7 @@ def test_t17_mix_quota_no_per_shard_window(spark):
 
     q = em.queries()["t17_mix_quota"](spark, SF)
     plan = _plan(q)
-    q._cumsum_cache.unpersist()
+    spark.catalog.clearCache()
     for m in re.finditer(r"windowspecdefinition\(([^,]*?),", plan):
         assert " ASC" not in m.group(1) and " DESC" not in m.group(1)
     assert "BroadcastExchange" in plan
@@ -778,9 +778,7 @@ def test_p14_split_pack_no_unpartitioned_window(spark):
     # a scan-side filter (no extra exchange before the rank)
     df = em.queries()["p14_split_pack"](spark, SF)
     plan = _plan(df)
-    cache = getattr(df, "_cumsum_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    spark.catalog.clearCache()
     assert "EvalPython" not in plan
     import re
     for m in re.finditer(r"windowspecdefinition\(([^,]*?),", plan):
@@ -904,10 +902,13 @@ def test_t35_winnow_single_scan_zero_shuffle(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
     assert plan.count("FileScan") == 1
-    # the codegen reference mode keeps the zero-Python pin
-    from hepcrawl_spark.operators import textops
-    cg = _plan(textops.winnow_fingerprints(
-        em._t(spark, SF, "documents"), k=3, w=4, mode="codegen"))
+    # the codegen reference selection keeps the zero-Python pin
+    from parity_refs import winnow_keys_col
+    from pyspark.sql import functions as F
+
+    from hepcrawl_spark.operators.textops import tokens_col
+    cg = _plan(em._t(spark, SF, "documents").select(
+        winnow_keys_col(tokens_col(F.col("text")), k=3, w=4)))
     assert "EvalPython" not in cg and "Exchange" not in cg
 
 
@@ -944,7 +945,7 @@ def test_p21_balanced_pack_broadcast_keep_join(spark):
         assert " ASC" not in first_arg and " DESC" not in first_arg, (
             "unpartitioned window in p21: " + m.group(0)
         )
-    df._cumsum_cache.unpersist()
+    spark.catalog.clearCache()
 
 
 def test_q11_range_join_is_bucketized_equi_join(spark):

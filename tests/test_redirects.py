@@ -2,7 +2,7 @@
 edge table — chain landing, inclusive max-hops boundary, cycles,
 self-loops, over-long chains, fan-in."""
 
-from hepcrawl_spark.frontier.redirects import resolve_redirects
+from hepcrawl_spark.frontier.redirects import _double, resolve_redirects
 
 
 def _edges(spark, pairs):
@@ -73,10 +73,12 @@ def test_max_hops_one(spark):
 
 
 def test_plan_is_python_and_window_free(spark):
-    pairs = _chain("a", 3)
-    df = resolve_redirects(_edges(spark, pairs), max_hops=8,
-                           checkpoint=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # one pointer-doubling round (each round of resolve_redirects is
+    # this plan over the previous round's checkpoint)
+    m = spark.createDataFrame(
+        [(s, t, 1, False) for s, t in _chain("a", 3)],
+        "url string, final_url string, hops long, resolved boolean")
+    plan = _double(m, [])._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
     assert "Window" not in plan
     assert "CartesianProduct" not in plan

@@ -214,9 +214,9 @@ def test_lineage_error_samples_are_bounded(spark):
     # counts every error
     from hepcrawl_spark.frontier.rounds import (
         LINEAGE_ERROR_SAMPLES,
-        _release,
         _round_body,
     )
+    from hepcrawl_spark.lifetimes import release
 
     n_bad, n_good = LINEAGE_ERROR_SAMPLES + 15, 5
     rows = [(f"http://e.test/bad{i:03d}", "no-such-format")
@@ -238,7 +238,7 @@ def test_lineage_error_samples_are_bounded(spark):
         lineage = out.lineage.collect()
         errors = {r.url: r.error for r in out.errors.collect()}
     finally:
-        _release(caches)
+        release(caches)
     assert len(lineage) == 1
     row = lineage[0]
     assert row.input_rows == n_bad + n_good

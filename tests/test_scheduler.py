@@ -5,13 +5,10 @@ import random
 
 from pyspark.sql import functions as F
 
-from hepcrawl_spark.frontier.politeness import (
-    per_host_rank,
-    schedule,
-    with_global_order,
-)
+from parity_refs import HostBudget, simulate_schedule, with_global_order
+
+from hepcrawl_spark.frontier.politeness import per_host_rank, schedule
 from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
-from hepcrawl_spark.frontier.simulator import HostBudget, simulate_schedule
 from hepcrawl_spark.schema import POLITENESS_SCHEMA
 
 
