@@ -5,6 +5,12 @@ response files (/root/reference/tests/responses/**) — the same bytes the
 reference harness feeds its spiders (tests/responses/__init__.py:36-43)
 — so extraction parity is asserted byte-for-byte end-to-end through
 Spark.
+
+A requested format whose directory is missing raises
+``FileNotFoundError``: an empty corpus would let every count-based
+test fail far from its cause.  The engine tests crawl the generated
+arXiv corpus of ``tests/arxiv_corpus.py`` instead, built with the
+same ``fixture_row`` scheme, so they need no reference checkout.
 """
 
 from __future__ import annotations
@@ -71,8 +77,25 @@ def fixture_url(fmt: str, filename: str) -> str:
     return f"http://{host}/{filename}"
 
 
+def fixture_row(fmt: str, i: int, filename: str, payload: bytes) -> Tuple:
+    """One pages row for the ``i``-th file of a format's directory:
+    its synthetic URL, fetched ``i`` minutes after the fixture epoch."""
+    return (
+        fixture_url(fmt, filename),
+        _EPOCH + dt.timedelta(minutes=i),
+        payload,
+        None,
+        "en",
+        fmt,
+    )
+
+
 def fixture_rows(formats=None) -> List[Tuple]:
-    """(url, warc_ts, html, text, lang, format) tuples from fixture files."""
+    """(url, warc_ts, html, text, lang, format) tuples from fixture files.
+
+    Raises ``FileNotFoundError`` naming the directory of a requested
+    format (every format when ``formats`` is None) that is missing.
+    """
     rows = []
     wanted = set(formats) if formats else None
     for fmt, (subdir, pred) in sorted(_FORMAT_DIRS.items()):
@@ -80,20 +103,13 @@ def fixture_rows(formats=None) -> List[Tuple]:
             continue
         folder = os.path.join(REFERENCE_RESPONSES, subdir)
         if not os.path.isdir(folder):
-            continue
+            raise FileNotFoundError(
+                f"fixture directory of format {fmt!r} is missing: {folder}")
         for i, fname in enumerate(sorted(os.listdir(folder))):
             if not pred(fname):
                 continue
             with open(os.path.join(folder, fname), "rb") as fh:
-                payload = fh.read()
-            rows.append((
-                fixture_url(fmt, fname),
-                _EPOCH + dt.timedelta(minutes=i),
-                payload,
-                None,
-                "en",
-                fmt,
-            ))
+                rows.append(fixture_row(fmt, i, fname, fh.read()))
     return rows
 
 

@@ -9,7 +9,7 @@ import pytest
 
 from hepcrawl_spark.extractors.json_aps import extract_json_aps
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 FIXTURE = "/root/reference/tests/responses/aps/aps_single_response.json"
 MOD = "test_aps"
@@ -23,47 +23,57 @@ def record():
     return records[0]
 
 
+@requires_reference
 def test_abstract(record):
     assert record["abstract"] == golden(MOD, "test_abstract", "abstract")
 
 
+@requires_reference
 def test_title(record):
     assert record["title"] == golden(MOD, "test_title", "title")
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == golden(
         MOD, "test_date_published", "date_published"
     )
 
 
+@requires_reference
 def test_page_nr(record):
     assert record["page_nr"] == golden(MOD, "test_page_nr", "page_nr")
 
 
+@requires_reference
 def test_license(record):
     assert record["license"] == golden(MOD, "test_license", "expected_license")
 
 
+@requires_reference
 def test_dois(record):
     assert record["dois"][0]["value"] == golden(MOD, "test_dois", "dois")
 
 
+@requires_reference
 def test_collections(record):
     for coll in golden(MOD, "test_collections", "collections"):
         assert {"primary": coll} in record["collections"]
 
 
+@requires_reference
 def test_collaborations(record):
     assert record["collaborations"] == golden(
         MOD, "test_collaborations", "collaborations"
     )
 
 
+@requires_reference
 def test_subjects(record):
     assert record["field_categories"] == golden(MOD, "test_subjects", "subjects")
 
 
+@requires_reference
 def test_publication_info(record):
     g = lambda v: golden(MOD, "test_publication_info", v)
     assert record["journal_title"] == g("journal_title")
@@ -73,6 +83,7 @@ def test_publication_info(record):
     assert record["journal_issue"] == g("journal_issue")
 
 
+@requires_reference
 def test_authors(record):
     full_names = golden(MOD, "test_authors", "author_full_names")
     affiliation = golden(MOD, "test_authors", "affiliation")
@@ -82,6 +93,7 @@ def test_authors(record):
         assert author["affiliations"][0]["value"] == affiliation
 
 
+@requires_reference
 def test_copyrights(record):
     g = lambda v: golden(MOD, "test_copyrights", v)
     assert record["copyright_holder"] == g("copyright_holder")
@@ -102,6 +114,7 @@ def test_link_next_parses_rfc5988():
     assert link_next("") is None
 
 
+@requires_reference
 def test_pagination_new_urls():
     import json
     with open(FIXTURE, "rb") as fh:
@@ -121,6 +134,7 @@ def test_pagination_empty_page_still_walks():
     assert records == [{"new_urls": ["https://api/page3"]}]
 
 
+@requires_reference
 def test_pagination_flow_three_pages_to_exhaustion(spark, tmp_path):
     """Crawl a 3-page APS Link-header sequence to exhaustion: one
     seed, records harvested from every page (frontier walk through

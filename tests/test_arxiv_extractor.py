@@ -10,7 +10,7 @@ import pytest
 
 from hepcrawl_spark.extractors.arxiv_oai import extract
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 FIXDIR = "/root/reference/tests/responses/arxiv"
 SINGLE = "test_arxiv_single"
@@ -36,10 +36,12 @@ def many():
     return records
 
 
+@requires_reference
 def test_abstract(record):
     assert record["abstract"] == golden(SINGLE, "test_abstract", "abstract")
 
 
+@requires_reference
 def test_scalar_fields(record):
     assert record["title"] == golden(SINGLE, "test_title", "title")
     assert record["preprint_date"] == golden(
@@ -52,6 +54,7 @@ def test_scalar_fields(record):
     assert record["source"] == "arXiv"
 
 
+@requires_reference
 def test_structured_fields(record):
     assert record["dois"][0]["value"] == golden(SINGLE, "test_dois", "dois")
     assert record["report_numbers"] == golden(
@@ -78,6 +81,7 @@ def test_structured_fields(record):
     )
 
 
+@requires_reference
 def test_many_collaborations(many):
     expected = golden(ALL, "test_collaborations", "collaborations")
     for rec, exp in zip(many, expected):
@@ -85,6 +89,7 @@ def test_many_collaborations(many):
         assert got == exp
 
 
+@requires_reference
 def test_many_page_nr_and_doctype(many):
     page_nrs = golden(ALL, "test_page_nr", "page_nrs")
     doctypes = golden(ALL, "test_collections", "doctypes")
@@ -97,6 +102,7 @@ def test_many_page_nr_and_doctype(many):
         assert set(c["primary"] for c in rec["collections"]) == expected
 
 
+@requires_reference
 def test_many_report_numbers(many):
     expected = golden(ALL, "test_repno", "expected_repnos")
     for rec, exp in zip(many, expected):
@@ -108,6 +114,7 @@ def test_many_report_numbers(many):
                 assert repno in got
 
 
+@requires_reference
 def test_many_authors_and_affiliations(many):
     # the reference's FULL per-record golden (test_arxiv_all.py:134-180)
     full_names = golden(ALL, "test_authors", "full_names")

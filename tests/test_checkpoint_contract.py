@@ -21,7 +21,8 @@ from hepcrawl_spark.frontier.checkpoint import (
     SnapshotLogStore,
 )
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
-from hepcrawl_spark.sources.fixtures import fixture_pages
+
+from arxiv_corpus import arxiv_pages
 
 STORES = [RoundStore, SnapshotLogStore]
 
@@ -139,7 +140,7 @@ def test_run_crawl_kill_resume_on_snapshotlog_store(spark):
     # the round loop only talks to the store contract: the same
     # kill-resume flow test_rounds.py proves on RoundStore holds
     # verbatim on the Iceberg-shaped implementation
-    pages = fixture_pages(spark, formats=["arxiv-oai"]).persist()
+    pages = arxiv_pages(spark).persist()
     urls = [r.url for r in pages.select("url").orderBy("url").collect()]
     seeds = make_seeds(spark, [(u, "arXiv", 0) for u in urls])
     with tempfile.TemporaryDirectory() as root:

@@ -13,7 +13,7 @@ import pytest
 from hepcrawl_spark.extractors.dnb_splash import extract_dnb_splash
 from hepcrawl_spark.extractors.marc21_slim import extract_marc21_slim
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 MOD = "test_dnb"
 
@@ -24,7 +24,10 @@ SPLASH = "/root/reference/tests/responses/dnb/test_splash.html"
 # this table carries the same classification in the sandbox
 MIME = {"http://d-nb.info/1079912991/34": "application/pdf"}
 
-TITLE = golden(MOD, "test_title", "title")
+
+@pytest.fixture(scope="module")
+def title():
+    return golden(MOD, "test_title", "title")
 
 
 @pytest.fixture(scope="module")
@@ -43,14 +46,17 @@ def splash_record(record):
         return extract_dnb_splash(fh.read(), record["new_urls"][0])[0]
 
 
-def test_title(record):
-    assert record["title"] == TITLE
+@requires_reference
+def test_title(record, title):
+    assert record["title"] == title
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == "2015"
 
 
+@requires_reference
 def test_authors(record):
     authors = golden(MOD, "test_authors", "authors")
     surnames = golden(MOD, "test_authors", "surnames")
@@ -65,42 +71,51 @@ def test_authors(record):
         ]
 
 
+@requires_reference
 def test_supervisors(record):
     assert record["thesis_supervisor"][0]["full_name"] == "Podlech, Holger"
 
 
+@requires_reference
 def test_source(record):
     assert record["source"] == "Univ.-Bibliothek Frankfurt am Main"
 
 
+@requires_reference
 def test_language(record):
     assert record["language"][0] == "German"
 
 
+@requires_reference
 def test_files(record):
     assert record["file_urls"][0] == "http://d-nb.info/1079912991/34"
 
 
+@requires_reference
 def test_urls(record):
     urls = golden(MOD, "test_urls", "urls")
     assert len(record["urls"]) == len(urls)
     assert [u["value"] for u in record["urls"]] == urls
 
 
+@requires_reference
 def test_doctype(record):
     assert record["thesis"]["degree_type"] == "PhD"
 
 
+@requires_reference
 def test_splash_abstract(splash_record):
     # full-string parity vs reference test_dnb.py::test_abstract
     assert splash_record["abstract"] == golden(MOD, "test_abstract", "abstract")
 
 
+@requires_reference
 def test_splash_page_nr(splash_record):
     assert splash_record["page_nr"] == ["133"]
 
 
-def test_spark_dnb_flow(spark):
+@requires_reference
+def test_spark_dnb_flow(spark, title):
     """Two-hop enrichment through DataFrames: stage-A extraction →
     splash fetch → dnb_flow left join merge."""
     from pyspark.sql import functions as F
@@ -128,7 +143,7 @@ def test_spark_dnb_flow(spark):
     merged = dnb_flow(stage_a, splash_pages).collect()
     assert len(merged) == 1
     row = merged[0]
-    assert row.title == TITLE
+    assert row.title == title
     assert row.page_nr == ["133"]
     assert row.abstract.startswith("Die vorliegende Arbeit handelt")
     assert row.thesis.degree_type == "PhD"

@@ -6,7 +6,7 @@ bytes cannot drift from a hand copy (VERDICT r2 #5).
 
 import pytest
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 from hepcrawl_spark.extractors.edp import (
     extract_edp_jats,
@@ -38,15 +38,18 @@ def rich():
     return records[0]
 
 
+@requires_reference
 def test_jats_title(jats):
     assert jats["title"] == golden(EDP, "test_title", "title")
 
 
+@requires_reference
 def test_jats_abstract(jats):
     # the reference's FULL abstract golden (test_edp.py:121-135)
     assert jats["abstract"] == golden(EDP, "test_abstract", "abstract")
 
 
+@requires_reference
 def test_jats_date_and_year(jats):
     assert jats["date_published"] == golden(
         EDP, "test_date_published", "date_published"
@@ -54,11 +57,13 @@ def test_jats_date_and_year(jats):
     assert jats["journal_year"] == 2015
 
 
+@requires_reference
 def test_jats_collections(jats):
     for coll in golden(EDP, "test_collections", "collections"):
         assert {"primary": coll} in jats["collections"]
 
 
+@requires_reference
 def test_jats_publication_info(jats):
     assert jats["journal_title"] == "EPJ Web of Conferences"
     assert jats["journal_artid"] == "01001"
@@ -70,6 +75,7 @@ def test_jats_publication_info(jats):
     assert jats["dois"][0]["value"] == golden(EDP, "test_doi", "doi")
 
 
+@requires_reference
 def test_jats_authors(jats):
     astr = jats["authors"]
     names = golden(EDP, "test_authors", "authors")
@@ -82,6 +88,7 @@ def test_jats_authors(jats):
         assert astr[index]["affiliations"][0]["value"] == affiliations[0]
 
 
+@requires_reference
 def test_jats_license_and_copyright(jats):
     assert jats["license"] == golden(EDP, "test_license",
                                      "expected_license")
@@ -97,6 +104,7 @@ def test_jats_license_and_copyright(jats):
     )
 
 
+@requires_reference
 def test_jats_open_access_hop(jats):
     # EPJ Web of Conferences is open access → dx.doi.org splash hop
     assert jats["new_urls"] == [
@@ -104,11 +112,13 @@ def test_jats_open_access_hop(jats):
     ]
 
 
+@requires_reference
 def test_rich_title(rich):
     assert rich["title"] == golden(EDP, "test_title_rich", "title")
     assert rich["subtitle"] == golden(EDP, "test_title_rich", "subtitle")
 
 
+@requires_reference
 def test_rich_date_and_pages(rich):
     assert rich["date_published"] == golden(
         EDP, "test_date_published_rich", "date_published"
@@ -118,11 +128,13 @@ def test_rich_date_and_pages(rich):
     assert rich["journal_lpage"] == "77"
 
 
+@requires_reference
 def test_rich_collections(rich):
     for coll in golden(EDP, "test_collections_rich", "collections"):
         assert {"primary": coll} in rich["collections"]
 
 
+@requires_reference
 def test_rich_publication_info(rich):
     for field in ("journal_title", "journal_year", "journal_volume"):
         assert rich[field] == golden(
@@ -130,6 +142,7 @@ def test_rich_publication_info(rich):
         )
 
 
+@requires_reference
 def test_rich_authors(rich):
     astr = rich["authors"]
     names = golden(EDP, "test_authors_rich", "authors")
@@ -151,6 +164,7 @@ REF_BODY = b"""<article xmlns:xlink="http://www.w3.org/1999/xlink" xmlns:mml="ht
 </article>"""
 
 
+@requires_reference
 def test_references():
     refs = extract_edp_jats(REF_BODY)[0]["references"]
     # the reference's FULL expected dict, raw_reference bytes included

@@ -10,6 +10,8 @@ from hepcrawl_spark.extractors.elsevier import (
     get_sd_url,
 )
 
+from ref_goldens import requires_reference
+
 FIXTURE = ("/root/reference/tests/responses/elsevier/"
            "sample_consyn_record.xml")
 
@@ -24,10 +26,12 @@ def record():
     return records[0]
 
 
+@requires_reference
 def test_title(record):
     assert record["title"] == "Toward classification of conformal theories"
 
 
+@requires_reference
 def test_abstract(record):
     assert record["abstract"] == (
         "By studying the representations of the mapping class groups which "
@@ -39,10 +43,12 @@ def test_abstract(record):
     )
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == "1988-05-26"
 
 
+@requires_reference
 def test_authors(record):
     assert len(record["authors"]) == 1
     assert record["authors"][0]["full_name"] == "Vafa, Cumrun"
@@ -52,32 +58,38 @@ def test_authors(record):
     )
 
 
+@requires_reference
 def test_files(record):
     assert record["additional_files"][0]["url"] == (
         "elsevier/sample_consyn_record.xml"
     )
 
 
+@requires_reference
 def test_dois(record):
     assert record["dois"][0]["value"] == "10.1016/0370-2693(88)91603-6"
 
 
+@requires_reference
 def test_doctype(record):
     assert record["journal_doctype"] == "full-length article"
 
 
+@requires_reference
 def test_keywords(record):
     assert [d["value"] for d in record["free_keywords"]] == [
         "Heavy quarkonia", "Quark gluon plasma", "Mott effect", "X(3872)"
     ]
 
 
+@requires_reference
 def test_copyright(record):
     assert record["copyright_statement"] == (
         "Copyright 2014 Elsevier B.V. All rights reserved."
     )
 
 
+@requires_reference
 def test_journal_section_split(record):
     # "Physics Letters B" → title "Physics Letters", volume "B206"
     assert record["journal_title"] == "Physics Letters"
@@ -168,6 +180,7 @@ def test_journal_and_section_helper():
     )
 
 
+@requires_reference
 def test_references_on_record(record):
     """sb: bibliography lands on the record in schema shape
     (sample_consyn_record.xml; elsevier_spider.py:1030)."""

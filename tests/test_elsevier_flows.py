@@ -21,6 +21,8 @@ from hepcrawl_spark.flows.enrichment import elsevier_sd_flow
 from hepcrawl_spark.frontier.checkpoint import RoundStore
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 
+from ref_goldens import requires_reference
+
 RESPONSES = "/root/reference/tests/responses/elsevier"
 
 ATOM_FEED = """<feed xmlns="http://www.w3.org/2005/Atom">
@@ -60,6 +62,7 @@ def test_atom_feed_yields_zip_links():
                                   "http://feeds.test/fake_nima.zip"]}]
 
 
+@requires_reference
 def test_zip_expands_members_in_batch():
     with open(f"{RESPONSES}/fake_astropart.zip", "rb") as fh:
         recs = extract_elsevier_zip(fh.read(), url="http://feeds.test/fake_astropart.zip")
@@ -89,6 +92,7 @@ def test_sd_splash_proof_marker():
     assert extract_sd_splash(PROOF_BODY) == [{"journal_volume": "proof"}]
 
 
+@requires_reference
 def test_atom_to_zip_to_sciencedirect_crawl(spark, tmp_path):
     """Three frontier hops from one atom-feed seed: feed → zip
     packages (expanded in-batch) → member records → sciencedirect

@@ -9,33 +9,41 @@ hepcrawl_spark/extractors/elsevier.py ≙ elsevier_spider.py:382-686).
 """
 
 import re
+from functools import lru_cache
 
 import pytest
 
 from hepcrawl_spark.extractors.elsevier import get_references
 from hepcrawl_spark.extractors.xmlpath import parse_xml
 
+from ref_goldens import requires_reference
+
 _REF_TESTS = "/root/reference/tests/test_elsevier.py"
 
-with open(_REF_TESTS, encoding="utf-8") as fh:
-    _SRC = fh.read()
+
+@lru_cache(maxsize=None)
+def _src():
+    with open(_REF_TESTS, encoding="utf-8") as fh:
+        return fh.read()
 
 
 def refs_for(fixture_name):
     m = re.search(
         r"def {}\(\):.*?body = \"\"\"(.*?)\"\"\"".format(fixture_name),
-        _SRC, re.S,
+        _src(), re.S,
     )
     assert m, "fixture %s not found in reference tests" % fixture_name
     return get_references(parse_xml(m.group(1)))
 
 
+@requires_reference
 def test_ref_textref():
     assert refs_for("ref_textref") == [{
         "raw_reference": ["D. Friedan and S. Shenker, unpublished."]
     }]
 
 
+@requires_reference
 def test_ref_textref_sublabels():
     assert refs_for("ref_textref_sublabels") == [
         {"raw_reference": ["D. Kastor, E. Martinec and Z. Qiu, "
@@ -44,6 +52,7 @@ def test_ref_textref_sublabels():
     ]
 
 
+@requires_reference
 def test_ref_simple_journal():
     assert refs_for("ref_simple_journal") == [{
         "volume": "37",
@@ -60,6 +69,7 @@ def test_ref_simple_journal():
     }]
 
 
+@requires_reference
 def test_ref_simple_journal_suppl():
     assert refs_for("ref_simple_journal_suppl") == [{
         "title": "A pilot study of the effect of ...",
@@ -75,6 +85,7 @@ def test_ref_simple_journal_suppl():
     }]
 
 
+@requires_reference
 def test_ref_journal_issue():
     assert refs_for("ref_journal_issue") == [{
         "journal": "Testing: concepts and research; American Psychologist",
@@ -90,6 +101,7 @@ def test_ref_journal_issue():
     }]
 
 
+@requires_reference
 def test_ref_translated_article():
     assert refs_for("ref_translated_article") == [{
         "volume": "54",
@@ -105,6 +117,7 @@ def test_ref_translated_article():
     }]
 
 
+@requires_reference
 def test_ref_monograph():
     assert refs_for("ref_monograph") == [{
         "publisher": "New York: MacMillan",
@@ -119,6 +132,7 @@ def test_ref_monograph():
     }]
 
 
+@requires_reference
 def test_ref_book_no_authors():
     assert refs_for("ref_book_no_authors") == [{
         "publisher": "Princeton, NJ: College Board Publications",
@@ -128,6 +142,7 @@ def test_ref_book_no_authors():
     }]
 
 
+@requires_reference
 def test_ref_book_translated():
     assert refs_for("ref_book_translated") == [{
         "authors": ["Luria, A.R."],
@@ -139,6 +154,7 @@ def test_ref_book_translated():
     }]
 
 
+@requires_reference
 def test_ref_edited_book_article():
     assert refs_for("ref_edited_book_article") == [{
         "authors": ["Gurman, A.S. & Kniskern, D.P."],
@@ -152,6 +168,7 @@ def test_ref_edited_book_article():
     }]
 
 
+@requires_reference
 def test_ref_edited_book_article_repr():
     assert refs_for("ref_edited_book_article_repr") == [{
         "authors": ["Sluzki, C.E. & Beavin, J."],
@@ -172,6 +189,7 @@ def test_ref_edited_book_article_repr():
     }]
 
 
+@requires_reference
 def test_ref_book_proceedings_article():
     assert refs_for("ref_book_proceedings_article") == [{
         "authors": ["Chaddock, T.E."],
@@ -187,6 +205,7 @@ def test_ref_book_proceedings_article():
     }]
 
 
+@requires_reference
 def test_ref_edited_book():
     assert refs_for("ref_edited_book") == [{
         "publisher": "New York: Praeger",
@@ -197,6 +216,7 @@ def test_ref_edited_book():
     }]
 
 
+@requires_reference
 def test_ref_multi_volume_edited():
     assert refs_for("ref_multi_volume_edited") == [{
         "book_title": "Basic teratology",
@@ -211,6 +231,7 @@ def test_ref_multi_volume_edited():
     }]
 
 
+@requires_reference
 def test_ref_multi_volume():
     assert refs_for("ref_multi_volume") == [{
         "authors": ["Wilson, J.G."],
@@ -224,6 +245,7 @@ def test_ref_multi_volume():
     }]
 
 
+@requires_reference
 def test_ref_ehost():
     assert refs_for("ref_ehost") == [{
         "arxiv_id": "hep-th/9112009",
@@ -237,6 +259,7 @@ def test_ref_ehost():
     }]
 
 
+@requires_reference
 def test_ref_eproceedings_article():
     assert refs_for("ref_eproceedings_article") == [{
         "book_title": "Proc. 1996 USENIX Technical Conference",
@@ -249,6 +272,7 @@ def test_ref_eproceedings_article():
     }]
 
 
+@requires_reference
 def test_ref_comment_and_note():
     refs = refs_for("ref_comment_and_note")
     assert refs
@@ -260,6 +284,7 @@ def test_ref_comment_and_note():
     ]
 
 
+@requires_reference
 def test_ref_multi_years():
     refs = refs_for("ref_multi_years")
     assert refs

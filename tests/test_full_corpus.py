@@ -4,7 +4,10 @@ extraction errors, records from every record-bearing format."""
 
 from pyspark.sql import functions as F
 
+from ref_goldens import requires_reference
 
+
+@requires_reference
 def test_full_corpus_extraction(spark):
     from hepcrawl_spark.extract import extract_records
     from hepcrawl_spark.sources.fixtures import fixture_pages

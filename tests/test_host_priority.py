@@ -107,9 +107,9 @@ def test_run_crawl_boost_invariant_on_single_host(spark, tmp_path):
     # one-host corpus: a uniform boost must change NOTHING (within-host
     # order is boost-free by construction)
     from hepcrawl_spark.frontier.checkpoint import RoundStore
-    from hepcrawl_spark.sources.fixtures import fixture_pages
+    from arxiv_corpus import arxiv_pages
 
-    pages = fixture_pages(spark, formats=["arxiv-oai"])
+    pages = arxiv_pages(spark)
     urls = [r.url for r in pages.select("url").orderBy("url").collect()]
     seeds = make_seeds(spark, [(u, "arXiv", 0) for u in urls])
     plain = run_crawl(spark, seeds, pages,

@@ -20,7 +20,7 @@ from hepcrawl_spark.extractors.html_theses import (
     extract_t2k_splash,
 )
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 RESP = "/root/reference/tests/responses"
 
@@ -39,6 +39,7 @@ def alpha():
     return records[0]
 
 
+@requires_reference
 def test_alpha_fields(alpha):
     assert alpha["title"] == golden("test_alpha", "test_title", "title")
     assert alpha["date_published"] == golden(
@@ -61,6 +62,7 @@ def test_alpha_fields(alpha):
 
 # --- T2K -------------------------------------------------------------------
 
+@requires_reference
 def test_t2k_listing_and_splash():
     listing_url = "file:///tests/responses/t2k/test_1.html"
     recs = extract_t2k(_read(f"{RESP}/t2k/test_1.html"), listing_url)
@@ -86,6 +88,7 @@ def test_t2k_listing_and_splash():
 
 # --- MAGIC -----------------------------------------------------------------
 
+@requires_reference
 def test_magic_listing_and_splash():
     listing_url = "file:///tests/responses/magic/test_1.html"
     recs = extract_magic(_read(f"{RESP}/magic/test_1.html"), listing_url)
@@ -114,6 +117,7 @@ def test_magic_listing_and_splash():
 
 # --- PHENIX ----------------------------------------------------------------
 
+@requires_reference
 def test_phenix_record():
     recs = extract_phenix(_read(f"{RESP}/phenix/test_1.html"))
     r = recs[0]
@@ -143,11 +147,13 @@ def test_phenix_non_thesis_skipped():
 
 # --- MIT -------------------------------------------------------------------
 
+@requires_reference
 def test_mit_listing():
     recs = extract_mit(_read(f"{RESP}/mit/test_list.html"))
     assert recs[0]["new_urls"] == [golden("test_mit", "test_url", "url")]
 
 
+@requires_reference
 def test_mit_splash():
     r = extract_mit_splash(_read(f"{RESP}/mit/test_splash.html"))[0]
     assert r["title"] == (
@@ -177,6 +183,7 @@ def test_mit_splash():
 
 # --- INFN ------------------------------------------------------------------
 
+@requires_reference
 def test_infn_listing():
     recs = extract_infn(_read(f"{RESP}/infn/test_1.html"))
     assert recs[0]["new_urls"] == [
@@ -184,6 +191,7 @@ def test_infn_listing():
     ]
 
 
+@requires_reference
 def test_infn_splash():
     r = extract_infn_splash(
         _read(f"{RESP}/infn/test_splash.html"),

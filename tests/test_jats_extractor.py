@@ -11,16 +11,11 @@ import pytest
 
 from hepcrawl_spark.extractors.jats import extract_jats
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 WSP = "test_world_scientific"
 FIXTURE = ("/root/reference/tests/responses/world_scientific/"
            "sample_ws_record.xml")
-
-ABSTRACT = None  # resolved from the reference goldens below
-
-
-ABSTRACT = golden(WSP, "test_abstract", "abstract")
 
 
 @pytest.fixture(scope="module")
@@ -31,24 +26,29 @@ def record():
     return records[0]
 
 
+@requires_reference
 def test_abstract(record):
-    assert record["abstract"] == ABSTRACT
+    assert record["abstract"] == golden(WSP, "test_abstract", "abstract")
 
 
+@requires_reference
 def test_title(record):
     assert record["title"] == golden(WSP, "test_title", "title")
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == golden(
         WSP, "test_date_published", "date_published"
     )
 
 
+@requires_reference
 def test_page_nr(record):
     assert record["page_nr"] == golden(WSP, "test_page_nr", "page_nr")
 
 
+@requires_reference
 def test_free_keywords(record):
     expected = list(golden(WSP, "test_free_keywords", "free_keywords"))
     for kw in record["free_keywords"]:
@@ -58,32 +58,38 @@ def test_free_keywords(record):
     assert not expected
 
 
+@requires_reference
 def test_license(record):
     assert record["license"] == golden(WSP, "test_license",
                                        "expected_license")
 
 
+@requires_reference
 def test_dois(record):
     assert record["dois"][0]["value"] == golden(WSP, "test_dois", "dois")
 
 
+@requires_reference
 def test_collections(record):
     for coll in golden(WSP, "test_collections", "collections"):
         assert {"primary": coll} in record["collections"]
 
 
+@requires_reference
 def test_collaborations(record):
     assert record["collaborations"] == golden(
         WSP, "test_collaborations", "collaborations"
     )
 
 
+@requires_reference
 def test_publication_info(record):
     for field in ("journal_title", "journal_year", "journal_artid",
                   "journal_volume", "journal_issue"):
         assert record[field] == golden(WSP, "test_publication_info", field)
 
 
+@requires_reference
 def test_authors(record):
     names = golden(WSP, "test_authors", "authors")
     affiliation = golden(WSP, "test_authors", "affiliation")
@@ -100,6 +106,7 @@ def test_authors(record):
     ]
 
 
+@requires_reference
 def test_copyrights(record):
     assert record["copyright_holder"] == golden(
         WSP, "test_copyrights", "copyright_holder"
@@ -115,6 +122,7 @@ def test_copyrights(record):
     )
 
 
+@requires_reference
 def test_spark_pipeline_jats(spark):
     """End-to-end through the Arrow extraction UDF."""
     from pyspark.sql import functions as F
@@ -125,7 +133,7 @@ def test_spark_pipeline_jats(spark):
     recs = extract_records(fixture_pages(spark, formats=["jats"]))
     rows = recs.filter(F.col("error").isNull()).collect()
     assert len(rows) == 1
-    assert rows[0].abstract == ABSTRACT
+    assert rows[0].abstract == golden(WSP, "test_abstract", "abstract")
     assert [c.asDict() for c in rows[0].collections] == [
         {"primary": "HEP"}, {"primary": "Published"}
     ]

@@ -18,7 +18,7 @@ from hepcrawl_spark.extractors.json_phil import (
     extract_phil_splash,
 )
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 RESP = "/root/reference/tests/responses"
 
@@ -44,16 +44,19 @@ def brown_splash():
     )[0]
 
 
+@requires_reference
 def test_brown_title(brown):
     assert brown["title"] == (
         "The Electrostatic Field-Effect in Electrically Actuated Nanopores"
     )
 
 
+@requires_reference
 def test_brown_abstract(brown):
     assert brown["abstract"] == golden("test_brown", "test_abstract", "abstract")
 
 
+@requires_reference
 def test_brown_keywords(brown):
     keywords_gt = golden("test_brown", "test_keywords", "keywords_gt")
     assert brown["free_keywords"]
@@ -61,11 +64,13 @@ def test_brown_keywords(brown):
         assert key_gt == key["value"]
 
 
+@requires_reference
 def test_brown_urls_and_hop(brown):
     assert brown["urls"] == [{"value": "brown/test_splash.html"}]
     assert brown["new_urls"] == ["brown/test_splash.html"]
 
 
+@requires_reference
 def test_brown_splash_fields(brown_splash):
     assert brown_splash["authors"][0]["full_name"] == "Jiang, Zhijun"
     assert brown_splash["date_published"] == "2011-01-01"
@@ -95,6 +100,7 @@ def phil_journal():
     return extract_phil(_read(f"{RESP}/phil/test_journal.json"))[0]
 
 
+@requires_reference
 def test_phil_title_and_date(phil_thesis):
     assert phil_thesis["title"] == golden("test_phil", "test_title", "title")
     assert phil_thesis["date_published"] == golden(
@@ -102,12 +108,14 @@ def test_phil_title_and_date(phil_thesis):
     )
 
 
+@requires_reference
 def test_phil_abstract(phil_thesis):
     assert phil_thesis["abstract"] == golden(
         "test_phil", "test_abstract", "abstract"
     )
 
 
+@requires_reference
 def test_phil_thesis_authors(phil_thesis):
     assert [a["raw_name"] for a in phil_thesis["authors"]] == golden(
         "test_phil", "test__thesis_authors", "authors"
@@ -115,6 +123,7 @@ def test_phil_thesis_authors(phil_thesis):
     assert phil_thesis["collections"] == [{"primary": "THESIS"}]
 
 
+@requires_reference
 def test_phil_journal(phil_journal):
     assert phil_journal["journal_title"] == golden(
         "test_phil", "test_journal", "title"
@@ -130,6 +139,7 @@ def test_phil_journal(phil_journal):
     )
 
 
+@requires_reference
 def test_phil_splash_pdf(phil_thesis):
     splash = extract_phil_splash(
         _read(f"{RESP}/phil/fake_splash.html"),

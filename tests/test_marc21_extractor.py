@@ -10,7 +10,7 @@ import pytest
 
 from hepcrawl_spark.extractors.marc21 import extract_marc21
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 FIXTURE = "/root/reference/tests/responses/hindawi/test_1.xml"
 MOD = "test_hindawi"
@@ -24,16 +24,19 @@ def record():
     return records[0]
 
 
+@requires_reference
 def test_title(record):
     # reference tests/test_hindawi.py:37 (inline literal)
     assert record["title"] == "“Pi of the Sky” Detector"
 
 
+@requires_reference
 def test_date_published(record):
     # reference tests/test_hindawi.py:43 (inline literal)
     assert record["date_published"] == "2010-01-26"
 
 
+@requires_reference
 def test_authors(record):
     authors = golden(MOD, "test_authors", "authors")
     surnames = golden(MOD, "test_authors", "surnames")
@@ -48,31 +51,37 @@ def test_authors(record):
         ]
 
 
+@requires_reference
 def test_source(record):
     # reference tests/test_hindawi.py:71 (inline literal)
     assert record["source"] == "Hindawi Publishing Corporation"
 
 
+@requires_reference
 def test_files(record):
     assert record["file_urls"] == golden(MOD, "test_files", "file_urls")
 
 
+@requires_reference
 def test_urls(record):
     urls = golden(MOD, "test_urls", "urls")
     assert [u["value"] for u in record["urls"]] == urls
 
 
+@requires_reference
 def test_additional_files(record):
     af = record["additional_files"][0]
     assert af["url"] == golden(MOD, "test_additional_files", "url")
     assert af["access"] == "INSPIRE-HIDDEN"
 
 
+@requires_reference
 def test_collections(record):
     expected = golden(MOD, "test_collections", "collections")
     assert [c["primary"] for c in record["collections"]] == expected
 
 
+@requires_reference
 def test_copyright(record):
     assert record["copyright_statement"] == golden(
         MOD, "test_copyright", "cr_statement"
@@ -80,11 +89,13 @@ def test_copyright(record):
     assert record["copyright_year"] == "2010"
 
 
+@requires_reference
 def test_dois(record):
     # reference tests/test_hindawi.py:121 (inline literal)
     assert record["dois"][0]["value"] == "10.1155/2010/194946"
 
 
+@requires_reference
 def test_publication_info(record):
     assert record["journal_title"] == golden(
         MOD, "test_publication_info", "journal_title"
@@ -97,5 +108,6 @@ def test_publication_info(record):
     )
 
 
+@requires_reference
 def test_license(record):
     assert record["license"] == golden(MOD, "test_license", "expected_license")

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from hepcrawl_spark.flows.enrichment import classify_links
 
+from ref_goldens import requires_reference
+
 _URL_RE = re.compile(r'"(https?://[^"\s<>]+)"')
 
 
@@ -53,6 +55,7 @@ def _head_truth(url):
     return "text/html"
 
 
+@requires_reference
 def test_mime_table_and_heuristic_agree_on_reference_fixtures(spark):
     urls = (
         _fixture_urls("/root/reference/tests/test_base.py")

@@ -11,12 +11,15 @@ from hepcrawl_spark.frontier.checkpoint import RoundStore
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 from hepcrawl_spark.sources.fixtures import fixture_pages
 
+from ref_goldens import requires_reference
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
     return fixture_pages(spark).persist()
 
 
+@requires_reference
 def test_multiformat_crawl(spark, corpus, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt") / "crawl")
     # one seed per page, each carrying its format route (the format is

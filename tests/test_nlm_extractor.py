@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 IOP = "test_iop"
 
@@ -29,23 +29,28 @@ def record():
     return records[0]
 
 
+@requires_reference
 def test_abstract(record):
     assert record["abstract"].startswith("Somatic BRAF mutation")
 
 
+@requires_reference
 def test_title(record):
     assert record["title"] == golden(IOP, "test_title", "title")
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == "2015-03"
 
 
+@requires_reference
 def test_page_nr(record):
     assert record["journal_fpage"] == "336"
     assert record["journal_lpage"] == "343"
 
 
+@requires_reference
 def test_free_keywords(record):
     keywords = golden(IOP, "test_free_keywords", "keywords")
     for kw in record["free_keywords"]:
@@ -53,16 +58,19 @@ def test_free_keywords(record):
         assert kw["value"] in keywords
 
 
+@requires_reference
 def test_dois(record):
     assert record["dois"][0]["value"] == "110.1309/AJCP4D7RXOBHLKGJ"
 
 
+@requires_reference
 def test_collections(record):
     expected = golden(IOP, "test_collections", "collections")
     for coll in record["collections"]:
         assert coll["primary"] in expected
 
 
+@requires_reference
 def test_publication_info(record):
     for field in ("journal_title", "journal_year", "journal_volume",
                   "journal_issue"):
@@ -72,6 +80,7 @@ def test_publication_info(record):
     )
 
 
+@requires_reference
 def test_authors(record):
     # the reference's FULL per-author golden (test_iop.py:113-133)
     names = golden(IOP, "test_authors", "authors")
@@ -82,6 +91,7 @@ def test_authors(record):
         assert record["authors"][index]["affiliations"] == aff
 
 
+@requires_reference
 def test_copyrights(record):
     assert record["copyright_holder"] == golden(
         IOP, "test_copyrights", "copyright_holder"
@@ -91,6 +101,7 @@ def test_copyrights(record):
     )
 
 
+@requires_reference
 def test_files(record):
     assert record["additional_files"][1]["access"] == "INSPIRE-HIDDEN"
     assert record["additional_files"][1]["type"] == "Fulltext"
@@ -115,6 +126,7 @@ ERRATUM_BODY = b"""
 """
 
 
+@requires_reference
 def test_erratum_open_access():
     manifest = [os.path.join(PDF_DIR, f) for f in os.listdir(PDF_DIR)]
     rec = extract_nlm(ERRATUM_BODY, pdf_manifest=manifest)[0]
@@ -122,6 +134,7 @@ def test_erratum_open_access():
     assert rec["additional_files"][1]["type"] == "Erratum"
 
 
+@requires_reference
 def test_not_published_record():
     # the aheadofprint fixture body comes from the reference test
     # itself (test_iop.py test_not_published_record)

@@ -12,7 +12,7 @@ from hepcrawl_spark.extractors.pex_dc import (
     extract_pos_splash,
 )
 
-from ref_goldens import golden
+from ref_goldens import golden, requires_reference
 
 MOD = "test_pos"
 
@@ -34,35 +34,42 @@ def splash(record):
         return extract_pos_splash(fh.read(), record["new_urls"][0])[0]
 
 
+@requires_reference
 def test_title(record):
     assert record["title"] == golden(MOD, "test_title", "title")
 
 
+@requires_reference
 def test_date_published(record):
     assert record["date_published"] == golden(
         MOD, "test_date_published", "date_published"
     )
 
 
+@requires_reference
 def test_subject(record):
     assert record["field_categories"] == golden(
         MOD, "test_subject", "field_categories"
     )
 
 
+@requires_reference
 def test_license(record):
     assert record["license"] == golden(MOD, "test_license", "expected_license")
 
 
+@requires_reference
 def test_collections(record):
     for coll in golden(MOD, "test_collections", "collections"):
         assert {"primary": coll} in record["collections"]
 
 
+@requires_reference
 def test_language(record):
     assert "language" not in record  # English is dropped
 
 
+@requires_reference
 def test_publication_info(record):
     g = lambda v: golden(MOD, "test_publication_info", v)
     assert record["journal_title"] == g("journal_title")
@@ -71,6 +78,7 @@ def test_publication_info(record):
     assert record["journal_volume"] == g("journal_volume")
 
 
+@requires_reference
 def test_authors(record):
     authors = golden(MOD, "test_authors", "authors")
     surnames = golden(MOD, "test_authors", "surnames")
@@ -85,6 +93,7 @@ def test_authors(record):
         ]
 
 
+@requires_reference
 def test_external_system_numbers(record):
     assert record["external_system_numbers"] == [
         {"institute": "PoS", "value": "PoS(LATTICE 2013)001"},
@@ -92,10 +101,12 @@ def test_external_system_numbers(record):
     ]
 
 
+@requires_reference
 def test_extra_data(record):
     assert record["extra_data"] == [{"section": "Plenary sessions"}]
 
 
+@requires_reference
 def test_splash_pdf_link(splash):
     assert splash["additional_files"] == [{
         "type": "Fulltext",
@@ -104,6 +115,7 @@ def test_splash_pdf_link(splash):
     }]
 
 
+@requires_reference
 def test_spark_pos_flow(spark):
     """Stage A + stage B merged through the enrichment join."""
     from pyspark.sql import functions as F

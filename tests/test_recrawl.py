@@ -84,9 +84,9 @@ def test_as_frontier_seeds_feeds_run_crawl(spark, tmp_path):
     from hepcrawl_spark.frontier.checkpoint import RoundStore
     from hepcrawl_spark.frontier.rounds import CrawlConfig, run_crawl
     from hepcrawl_spark.frontier.seen import CANDIDATE_SCHEMA
-    from hepcrawl_spark.sources.fixtures import fixture_pages
+    from arxiv_corpus import arxiv_pages
 
-    pages = fixture_pages(spark, formats=["arxiv-oai"])
+    pages = arxiv_pages(spark)
     day_us = 86400 * 1_000_000
     hist = spark.createDataFrame(
         [(r.url, 3, 2, 0, day_us) for r in pages.select("url").collect()],

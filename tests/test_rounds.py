@@ -1,5 +1,8 @@
 """End-to-end crawl rounds: seeds → schedule → fetch-join → extract →
-expand → checkpoint, plus kill-resume equivalence (F6/F7/F8)."""
+expand → checkpoint, plus kill-resume equivalence (F6/F7/F8).
+
+The arXiv crawls run on the generated corpus of
+``tests/arxiv_corpus.py`` (22 records over 12 pages) on every host."""
 
 import tempfile
 
@@ -9,12 +12,13 @@ from pyspark.sql import functions as F
 from hepcrawl_spark.frontier.checkpoint import RoundStore, SnapshotLogStore
 from hepcrawl_spark.frontier.rounds import CrawlConfig, make_seeds, run_crawl
 from hepcrawl_spark.schema import ROBOTS_SCHEMA
-from hepcrawl_spark.sources.fixtures import fixture_pages
+
+import arxiv_corpus
 
 
 @pytest.fixture(scope="module")
 def arxiv_pages(spark):
-    return fixture_pages(spark, formats=["arxiv-oai"]).persist()
+    return arxiv_corpus.arxiv_pages(spark).persist()
 
 
 def _arxiv_seeds(spark, pages):

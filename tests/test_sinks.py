@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 @pytest.fixture(scope="module")
 def records(spark):
     from hepcrawl_spark.extract import extract_records
-    from hepcrawl_spark.sources.fixtures import fixture_pages
+    from arxiv_corpus import arxiv_pages
 
     return extract_records(
-        fixture_pages(spark, formats=["arxiv-oai"])
+        arxiv_pages(spark)
     ).filter(F.col("error").isNull())
 
 

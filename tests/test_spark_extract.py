@@ -1,13 +1,24 @@
 """End-to-end Spark extraction over the fixture-backed pages table:
 Arrow UDF batches must reproduce the reference goldens byte-identically
-through the full DataFrame path (schema conformance included)."""
+through the full DataFrame path (schema conformance included).
 
+The golden test needs the reference checkout; the count and
+robustness tests run on the generated corpus of
+``tests/arxiv_corpus.py`` on every host."""
+
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from hepcrawl_spark.extract import extract_records, split_records_errors
 from hepcrawl_spark.sources.fixtures import fixture_pages
 
+from arxiv_corpus import arxiv_pages, one_record_document
+from ref_goldens import requires_reference
 
+
+@requires_reference
 def test_extract_arxiv_through_spark(spark):
     pages = fixture_pages(spark, formats=["arxiv-oai"])
     extracted = extract_records(pages)
@@ -32,8 +43,20 @@ def test_extract_arxiv_through_spark(spark):
     assert rec.collaborations[0].value == "Planck"
 
 
+def test_fixture_rows_raises_on_missing_format_directory(tmp_path,
+                                                        monkeypatch):
+    # no silent loss: a requested format without its directory fails
+    # loudly instead of yielding an empty corpus
+    from hepcrawl_spark.sources import fixtures
+
+    monkeypatch.setattr(fixtures, "REFERENCE_RESPONSES", str(tmp_path))
+    missing = re.escape(str(tmp_path / "arxiv"))
+    with pytest.raises(FileNotFoundError, match=missing):
+        fixtures.fixture_rows(formats=["arxiv-oai"])
+
+
 def test_extract_batch_counts(spark):
-    pages = fixture_pages(spark, formats=["arxiv-oai"])
+    pages = arxiv_pages(spark)
     extracted = extract_records(pages)
     records, errors = split_records_errors(extracted)
     # 11 single-record files + 1 file with 11 records = 22 records
@@ -116,7 +139,7 @@ def test_every_format_survives_malformed_bytes(spark):
     )
     out = extract_records(pages)
     # one good row mixed in proves siblings survive a bad batch
-    good = open("/root/reference/tests/responses/arxiv/sample_arxiv_record0.xml", "rb").read()
+    good = one_record_document()
     mixed = spark.createDataFrame(
         rows[:5] + [("http://ok.test/x", good, "arxiv-oai")] + rows[5:],
         "url string, html binary, format string",

@@ -65,12 +65,12 @@ def test_warc_members_extract_byte_identically(spark):
     # extraction surface out — fixture pages serialized into one WARC
     # member per host, re-parsed, and extracted must produce records
     # byte-identical to extracting the pages directly
-    from hepcrawl_spark.sources.fixtures import fixture_pages
+    from arxiv_corpus import arxiv_pages
     from hepcrawl_spark.extract import (
         extract_records, split_records_errors,
     )
 
-    pages = fixture_pages(spark, formats=["arxiv-oai"])
+    pages = arxiv_pages(spark)
     direct, errs = split_records_errors(extract_records(pages))
     assert errs.count() == 0
     want = sorted(tuple(r) for r in direct.collect())
